@@ -19,6 +19,7 @@ object ExpCounts {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(GraftSession.CodegenCacheKey, GraftSession.CodegenCacheMaxEntries)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

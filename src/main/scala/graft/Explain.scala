@@ -62,6 +62,7 @@ object Explain {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(GraftSession.CodegenCacheKey, GraftSession.CodegenCacheMaxEntries)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

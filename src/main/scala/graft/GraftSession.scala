@@ -24,6 +24,18 @@ object GraftSession {
   def ckptChecksumDefault: String =
     sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false")
 
+  /** Size of Spark's cache of generated classes (default 100). The cache
+    * evicts oldest-first, so a query mix that generates more classes than
+    * it holds and repeats in the same order recompiles every class with
+    * Janino on every pass: the curation mix generates about 130 per pass,
+    * the taxi mix 58, one pass of the whole graded suite about 3200. An
+    * entry holds about 30-50 KB of heap, so 1024 costs at most about
+    * 45 MB. Spark reads this static conf once per JVM, when its code
+    * generator first loads, so every session builder in this library
+    * sets the same value: whichever runs first fixes it for the JVM. */
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+  val CodegenCacheMaxEntries = 1024
+
   def build(master: String = "local[*]",
             shufflePartitions: Int = Runtime.getRuntime.availableProcessors,
             appName: String = "graft"): SparkSession = {
@@ -43,6 +55,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config(CkptChecksumKey, ckptChecksumDefault)
+      .config(CodegenCacheKey, CodegenCacheMaxEntries)
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     // getOrCreate may return a pre-existing session whose extensions were

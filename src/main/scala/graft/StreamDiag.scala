@@ -25,6 +25,7 @@ object StreamDiag {
       // run with the Spark-default checksums ON would mis-attribute the
       // per-batch floor
       .config(GraftSession.CkptChecksumKey, GraftSession.ckptChecksumDefault)
+      .config(GraftSession.CodegenCacheKey, GraftSession.CodegenCacheMaxEntries)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -17,6 +17,7 @@ object Verify {
       // Bench must grade the same streaming configuration (r16; closes
       // the r15 Bench-only conf skew)
       .config(GraftSession.CkptChecksumKey, GraftSession.ckptChecksumDefault)
+      .config(GraftSession.CodegenCacheKey, GraftSession.CodegenCacheMaxEntries)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -27,6 +27,7 @@ object AdmissionScaleProbe {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(graft.GraftSession.CodegenCacheKey, graft.GraftSession.CodegenCacheMaxEntries)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -40,15 +40,15 @@ object StreamQueries {
   /** Streaming read of the events table with the same generation-adaptive
     * `ts` handling as the batch facade (Tables.normalizeTs): a raw nano
     * LONG is rebuilt as a microsecond timestamp, a native TIMESTAMP_NTZ
-    * is cast to the session-TZ timestamp. The one batch `spark.read` is a
-    * footer-only schema probe (streaming sources require an explicit
-    * schema). */
+    * is cast to the session-TZ timestamp. Streaming sources require an
+    * explicit schema: it comes from the batch facade's per-application
+    * schema cache (Tables.schemaOf). */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
           .forall(_ != "true"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.Tables.schemaOf(spark, path)
     // FileStreamSource requires a directory base path: when the table is a
     // single file (the testdata layout), stream the parent dir filtered to
     // that file; a directory-shaped table streams directly.
@@ -153,7 +153,7 @@ object StreamQueries {
     replayCache.getOrElseUpdate(
       s"${spark.sparkContext.applicationId}:$dir:" +
         sentinelTypes.mkString(","),
-      graft.Tables.fingerprint(s"$dir/events.parquet")) {
+      graft.Tables.fingerprint(spark, s"$dir/events.parquet")) {
       if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
             .forall(_ != "true"))
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -700,11 +700,10 @@ object StreamQueries {
   }
 
   /** Streaming read of the documents table (same single-file
-    * FileStreamSource arrangement as [[eventsStream]]; schema probe is
-    * footer-only). */
+    * FileStreamSource arrangement and schema lookup as [[eventsStream]]). */
   private def documentsStream(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.Tables.schemaOf(spark, path)
     val reader = spark.readStream.schema(schema)
     if (new java.io.File(path).isDirectory) reader.parquet(path)
     else reader.option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -765,7 +764,7 @@ object StreamQueries {
       dir: String): DataFrame = {
     val rd = replayCache.getOrElseUpdate(
       s"${spark.sparkContext.applicationId}:$dir:docs",
-      graft.Tables.fingerprint(s"$dir/documents.parquet")) {
+      graft.Tables.fingerprint(spark, s"$dir/documents.parquet")) {
       val raw = spark.read.parquet(s"$dir/documents.parquet")
       val cols = raw.columns.map(col)
       val out = graft.TempDirs.create("graft_replay_documents")
@@ -1015,7 +1014,7 @@ object StreamQueries {
   private[graft] def mergeReplayDir(spark: SparkSession, dir: String): String =
     replayCache.getOrElseUpdate(
       s"${spark.sparkContext.applicationId}:$dir:merge_changes",
-      graft.Tables.fingerprint(s"$dir/customer.parquet")) {
+      graft.Tables.fingerprint(spark, s"$dir/customer.parquet")) {
       val changes = graft.operators.Analytics
         .mergeChangeset(graft.Tables(spark, dir))
       val out = graft.TempDirs.create("graft_replay_changes")
@@ -1647,7 +1646,7 @@ object StreamQueries {
       nChunks: Int = 4): String =
     replayCache.getOrElseUpdate(
       s"${spark.sparkContext.applicationId}:$dir:incoming:$nChunks",
-      graft.Tables.fingerprint(s"$dir/documents.parquet")) {
+      graft.Tables.fingerprint(spark, s"$dir/documents.parquet")) {
       import graft.functions.exprs.canon_fp
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       val split = substring(md5(col("doc_id").cast("string")), 32, 1)

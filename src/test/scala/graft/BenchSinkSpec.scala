@@ -9,20 +9,34 @@ import org.scalatest.funsuite.AnyFunSuite
   * scar — the 156.2 s validation-F record was overwritten by the
   * driver's 15%-steal session). Only quiet_bench.sh, which arms the
   * vmstat trace and sets SPARK_GRAFT_BENCH_PROTOCOL=quiet, may refresh
-  * it; every run still refreshes BENCH_LAST.json so the latest reading
-  * is always readable. */
+  * it; every graded-SF run still refreshes BENCH_LAST.json so the latest
+  * reading is always readable, and a smoke on any other SF writes only
+  * BENCH_SMOKE.json. */
 class BenchSinkSpec extends AnyFunSuite {
 
+  private val Graded = "data/sf0.1"
+
+  test("a run on any SF other than the graded sf0.1 writes only BENCH_SMOKE.json") {
+    for (dir <- Seq("data/sf0.001", "data/sf0.01", "data/sf1", "data/xsf0.1");
+         targeted <- Seq(false, true);
+         protocol <- Seq(None, Some("quiet"), Some("ad-hoc")))
+      assert(Bench.summarySinks(dir, targeted, protocol) == Seq("BENCH_SMOKE.json"),
+        s"$dir targeted=$targeted protocol=$protocol")
+    // the graded SF is matched by basename, trailing slash or not
+    assert(Bench.summarySinks("data/sf0.1/", targeted = false, Some("quiet")) ==
+      Seq("BENCH_LAST.json", "BENCH_SUMMARY.json"))
+  }
+
   test("full-suite quiet-protocol run refreshes BOTH sidecars") {
-    assert(Bench.summarySinks(targeted = false, Some("quiet")) ==
+    assert(Bench.summarySinks(Graded, targeted = false, Some("quiet")) ==
       Seq("BENCH_LAST.json", "BENCH_SUMMARY.json"))
   }
 
   test("full-suite ad-hoc (driver/hot) run cannot touch BENCH_SUMMARY.json") {
-    assert(Bench.summarySinks(targeted = false, None) == Seq("BENCH_LAST.json"))
-    assert(Bench.summarySinks(targeted = false, Some("ad-hoc")) ==
+    assert(Bench.summarySinks(Graded, targeted = false, None) == Seq("BENCH_LAST.json"))
+    assert(Bench.summarySinks(Graded, targeted = false, Some("ad-hoc")) ==
       Seq("BENCH_LAST.json"))
-    assert(Bench.summarySinks(targeted = false, Some("")) ==
+    assert(Bench.summarySinks(Graded, targeted = false, Some("")) ==
       Seq("BENCH_LAST.json"))
   }
 
@@ -30,9 +44,9 @@ class BenchSinkSpec extends AnyFunSuite {
     // quiet_bench.sh supports SPARK_GRAFT_BENCH_ONLY probes (the t16/t17
     // drift protocol) — those are valid quiet runs but not full-suite
     // records, so they must stay out of the canonical file too.
-    assert(Bench.summarySinks(targeted = true, Some("quiet")) ==
+    assert(Bench.summarySinks(Graded, targeted = true, Some("quiet")) ==
       Seq("BENCH_LAST.json"))
-    assert(Bench.summarySinks(targeted = true, None) == Seq("BENCH_LAST.json"))
+    assert(Bench.summarySinks(Graded, targeted = true, None) == Seq("BENCH_LAST.json"))
   }
 
   test("durable dump routing (r12 task 2b): full-suite runs write a " +

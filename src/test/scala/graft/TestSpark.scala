@@ -11,6 +11,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(GraftSession.CodegenCacheKey, GraftSession.CodegenCacheMaxEntries)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         s"/tmp/graft-warehouse-${System.getProperty("user.name")}")

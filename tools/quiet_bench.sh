@@ -22,6 +22,9 @@
 # Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 #      SPARK_GRAFT_BENCH_ONLY for targeted probes (these never touch
 #      BENCH_SUMMARY.json — Bench routes them to BENCH_LAST.json).
+#      Bench alone decides which sidecars a run writes (a run on any SF
+#      other than sf0.1 writes only BENCH_SMOKE.json); this script merges
+#      the steal stats into whichever of them the run refreshed.
 #
 # The box must be otherwise idle (no concurrent sbt/spark/python jobs)
 # or the run is invalid for freezing — BASELINE.md protocol.
@@ -30,11 +33,13 @@ out=$1
 vm=$2
 runs=${3:-3}
 tl="${vm%.log}.timeline.tsv"
+# files newer than this stamp were written by this run
+stamp=$(mktemp)
 # stdbuf: vmstat block-buffers into a redirect; line-buffering keeps the
 # trace tail intact when we kill it (the last samples cover the last runs)
 stdbuf -oL vmstat -t 2 > "$vm" &
 vpid=$!
-trap 'kill "$vpid" 2>/dev/null || true' EXIT
+trap 'kill "$vpid" 2>/dev/null || true; rm -f "$stamp"' EXIT
 SPARK_GRAFT_BENCH_RUNS=$runs \
   SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
   SPARK_GRAFT_BENCH_OUT="$out" \
@@ -63,10 +68,11 @@ with open(path, "w") as f:
     f.write("\n")
 EOF
 }
+refreshed() { [ -f "$1" ] && [ "$1" -nt "$stamp" ]; }
 merge "$out"
-merge BENCH_LAST.json
-# Only when THIS run refreshed the canonical record (full-suite quiet):
-if [ -z "${SPARK_GRAFT_BENCH_ONLY:-}" ]; then merge BENCH_SUMMARY.json; fi
+for f in BENCH_LAST.json BENCH_SMOKE.json BENCH_SUMMARY.json; do
+  if refreshed "$f"; then merge "$f"; fi
+done
 
 # Post-hoc demotion (round 13): the quiet PROTOCOL cannot guarantee a
 # quiet SESSION — all seven round-13 launches started on measured-calm
@@ -77,7 +83,9 @@ if [ -z "${SPARK_GRAFT_BENCH_ONLY:-}" ]; then merge BENCH_SUMMARY.json; fi
 # BENCH_SUMMARY.json to its last committed (known-good) state; the
 # session's own record survives in OUT_JSON, BENCH_LAST.json, and the
 # timestamped plans/bench_<epoch>.json either way.
-if [ -z "${SPARK_GRAFT_BENCH_ONLY:-}" ]; then
+# Only when THIS run refreshed the canonical record (full-suite quiet,
+# graded SF):
+if refreshed BENCH_SUMMARY.json; then
   # null stats (zero runs joined) mean the session is UNATTRIBUTABLE —
   # fail closed and demote rather than crash on None > 0.5 (ADVICE r13).
   # canary_hot_runs (r14): >15 runs starting with memory bandwidth down
