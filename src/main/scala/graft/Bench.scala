@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SURVEY §2 query at SPARK_GRAFT_SF_DIR,
   * prints ONE JSON line. Session/JVM warm-up (codegen compiler, parquet
   * footer readers, shuffle machinery) runs before the clock starts so each
@@ -158,30 +156,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    // Scan-split granularity: at the larger local SFs (sf1/sf10) the
-    // default 128m yields fewer splits than cores, forcing the wide()
-    // repartition's full-payload shuffle; 16m gives the scan itself
-    // enough parallelism, like any real multi-file production table.
-    val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shared checkpoint-checksum default — ONE definition in
-      // GraftSession (r16; closes the r15 Bench-only conf skew: Verify
-      // and Bench now grade the same streaming configuration).
-      // SPARK_GRAFT_CKPT_CHECKSUM=true restores the Spark 4.1 default
-      // for corruption-audit runs (r15 measurement: OPTIMIZATION_r15.md).
-      .config(GraftSession.CkptChecksumKey, GraftSession.ckptChecksumDefault)
-      .config(GraftSession.CodegenCacheKey, GraftSession.CodegenCacheMaxEntries)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // ADVICE r10: refuse a stray GRAFT_NMEDIA (it rescales corpus AND
     // oracles together, so nothing else would flag it) and stamp the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Paired same-JVM A/B harness for a runtime SQL conf (r15 optimization
   * round): runs each named query alternating the conf between two values
   * WITHIN one session, pairing arms back-to-back so host drift (the
@@ -18,20 +16,7 @@ object ExpPairedConf {
     val Array(key, valA, valB, pairsStr, names) = args
     val pairs = pairsStr.toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(GraftSession.CodegenCacheKey, GraftSession.CodegenCacheMaxEntries)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     graft.multimodal.BinaryPipeline.assertGradedCorpusOrAudit("exp")
     // warm-up (Bench's): codegen + parquet reader + canary JIT
     spark.range(1000000).selectExpr("sum(id % 7)").collect()

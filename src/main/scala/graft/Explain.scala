@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit tool: prints the formatted physical plan for each named
   * query (all queries if none named). Usage:
   *   runMain graft.Explain <sfDir> [queryName ...]
@@ -19,12 +17,12 @@ import org.apache.spark.sql.SparkSession
   * gap — but the total task count measures them directly.
   *
   * SPARK_GRAFT_CPUS sizes the session (master local[n] + n shuffle
-  * partitions; default 4 — set 32 to mirror the graded bench session,
-  * where the scale-adaptive partition derivations actually diverge from
-  * the session width). SPARK_GRAFT_EXPLAIN_CONF="k=v;k=v" sets runtime
-  * confs after session build — the hook that dumps a BEFORE arm through
-  * the engine's own override knobs (graft.shufflePartitions=32,
-  * graft.st17LegacySink=true) without checking out old code.
+  * partitions; default the machine's processor count), which is built
+  * through [[GraftSession.build]] like every other main.
+  * SPARK_GRAFT_EXPLAIN_CONF="k=v;k=v" sets runtime confs after session
+  * build — the hook that dumps a BEFORE arm through the engine's own
+  * override knobs (graft.shufflePartitions=32, graft.statePartitions=8)
+  * without checking out old code.
   */
 object Explain {
   /** Sums shuffle write volume across all tasks between reset() calls.
@@ -55,17 +53,7 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
     val run = sys.env.get("SPARK_GRAFT_EXPLAIN_RUN").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(GraftSession.CodegenCacheKey, GraftSession.CodegenCacheMaxEntries)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     sys.env.get("SPARK_GRAFT_EXPLAIN_CONF").foreach {
       _.split(';').map(_.trim).filter(_.nonEmpty).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

@@ -1,0 +1,39 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** What every command-line main shares: one session configuration (the
+  * front door, [[GraftSession.build]], sized from SPARK_GRAFT_CPUS) and
+  * the `oracle_sql.json` writer of the Verify dump layout. */
+private[graft] object Harness {
+  /** Cores of the local master and the shuffle width: SPARK_GRAFT_CPUS,
+    * default the machine's processor count. */
+  private lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def session(): SparkSession = {
+    val spark = GraftSession.build(s"local[$cpus]", cpus)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** JSON string literal: backslash, quote, and ALL control chars (<0x20)
+    * escaped — a tab or CR in query SQL would otherwise make the oracle
+    * compare's json.load fail. */
+  private def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Writes `$outDir/oracle_sql.json`: one object, query name -> oracle SQL. */
+  def writeOracleSql(outDir: String, sql: Iterable[(String, String)]): Unit =
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(outDir, "oracle_sql.json"),
+      sql.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+        .mkString("{", ",", "}"))
+}

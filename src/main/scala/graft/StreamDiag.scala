@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Per-micro-batch cost profiler for the streaming surface (round-5
@@ -14,21 +13,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object StreamDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // mirror the bench/verify session (shared default): a diagnosis
-      // run with the Spark-default checksums ON would mis-attribute the
-      // per-batch floor
-      .config(GraftSession.CkptChecksumKey, GraftSession.ckptChecksumDefault)
-      .config(GraftSession.CodegenCacheKey, GraftSession.CodegenCacheMaxEntries)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(
           e: StreamingQueryListener.QueryStartedEvent): Unit = ()

@@ -29,8 +29,8 @@ final case class Tables(spark: SparkSession, dir: String) {
     * operators and oracles see identical values regardless of generation.
     */
   def events: DataFrame = {
-    // nanosAsLong is set at build time by every session builder in this
-    // library (GraftSession / Verify / Bench / Explain); this fallback
+    // nanosAsLong is set at build time by GraftSession.build, which every
+    // entry point in this library uses; this fallback
     // only fires for a caller-supplied session that lacks it, since the
     // conf is read at scan planning and the read fails without it.
     if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")

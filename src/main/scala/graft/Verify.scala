@@ -1,26 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Dumps each query's result to `$outDir/<name>`. The directory is
+    * deleted before the query runs: many queries run jobs while they are
+    * built, so a failure there would otherwise leave an earlier run's dump
+    * in place for the oracle compare to grade as current. A failed query
+    * is reported on stderr and leaves no directory. */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Iterable[(String, (SparkSession, String) => DataFrame)]): Unit =
+    queries.foreach { case (name, fn) =>
+      val path = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(path.toString)
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shared checkpoint-checksum default (GraftSession) — Verify and
-      // Bench must grade the same streaming configuration (r16; closes
-      // the r15 Bench-only conf skew)
-      .config(GraftSession.CkptChecksumKey, GraftSession.ckptChecksumDefault)
-      .config(GraftSession.CodegenCacheKey, GraftSession.CodegenCacheMaxEntries)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // ADVICE r10: refuse a stray GRAFT_NMEDIA (it rescales the graded
     // media corpus AND every generated oracle together, so the compare
     // itself cannot flag it); decade audits declare GRAFT_NMEDIA_AUDIT=1.
@@ -39,30 +40,9 @@ object Verify {
         sys.error(s"SPARK_GRAFT_VERIFY_ONLY names not in SparkEntry.queries: " +
           unknown.toSeq.sorted.mkString(", "))
     }
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    dump(spark, sfDir, outDir,
+      SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) })
+    Harness.writeOracleSql(outDir, SparkEntry.oracleSql)
     spark.stop()
   }
 }

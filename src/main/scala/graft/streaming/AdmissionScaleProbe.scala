@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** st17 long-horizon scale probe (round-13 verdict task 4): run the
@@ -20,17 +19,7 @@ object AdmissionScaleProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, nChunksS) = args
     val nChunks = nChunksS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(graft.GraftSession.CodegenCacheKey, graft.GraftSession.CodegenCacheMaxEntries)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val rd = StreamQueries.incomingReplayDir(spark, sfDir, nChunks)
     val bench = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -54,19 +43,8 @@ object AdmissionScaleProbe {
     rollup.coalesce(1).write.mode("overwrite")
       .parquet(s"$outDir/st17_stream_admission")
     // the Verify-layout oracle file, so check_oracle.py runs unchanged
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val sql = graft.pipeline.PipelineQueries.oracles("p06_incremental_curation")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"),
-      s"""{${q("st17_stream_admission")}: ${q(sql)}}""")
+    graft.Harness.writeOracleSql(outDir, Seq("st17_stream_admission" ->
+      graft.pipeline.PipelineQueries.oracles("p06_incremental_curation")))
     spark.stop()
   }
 }

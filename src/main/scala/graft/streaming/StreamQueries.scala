@@ -244,22 +244,6 @@ object StreamQueries {
     * The override is scoped: the conf is read at query START, and the
     * surrounding batch plans (sink post-aggregations, oracles) still
     * run at the session's 32. */
-  /** State-store BACKEND selection for the stateful queries (round-6
-    * verdict item 5 — the backend matrix): by default the queries run on
-    * whatever the session configures (Spark's HDFSBackedStateStoreProvider
-    * unless overridden; st06 always forces RocksDB as the
-    * transformWithState requirement), and setting
-    * `SPARK_GRAFT_STATE_BACKEND=rocksdb` reruns the WHOLE stateful
-    * surface (st02/st04/st07/st08/st12/st14/st15 — every
-    * withStatePartitions user) on RocksDBStateStoreProvider. The results
-    * must be IDENTICAL — the backend is a persistence/memory trade, never
-    * a semantics knob — which StreamingSpec's backend-matrix test pins
-    * (equal output + progress customMetrics proving which provider ran);
-    * the measured per-batch commit profiles live in SURVEY §8f. */
-  private val BackendKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   /** Scale-adaptive default for the state-store partition count (r16;
     * the r15 constant 4 was flagged as a latent scale inversion). Stores
     * are sized to the SOURCE volume feeding the stateful query — a
@@ -309,20 +293,10 @@ object StreamQueries {
     graft.Parts.lock.synchronized {
       val key = "spark.sql.shuffle.partitions"
       val prev = spark.conf.getOption(key)
-      val prevBackend = spark.conf.getOption(BackendKey)
       spark.conf.set(key, n.toString)
-      if (sys.env.get("SPARK_GRAFT_STATE_BACKEND")
-            .exists(_.equalsIgnoreCase("rocksdb")))
-        spark.conf.set(BackendKey, RocksDbProvider)
-      try f finally {
-        prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None    => spark.conf.unset(key)
-        }
-        prevBackend match {
-          case Some(v) => spark.conf.set(BackendKey, v)
-          case None    => spark.conf.unset(BackendKey)
-        }
+      try f finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
       }
     }
 
@@ -1793,7 +1767,8 @@ object StreamQueries {
     // the same anti-join build side. Checkpoint it once per session (r16;
     // the bGrams treatment) — each batch then pays only the broadcast
     // build over the materialized blocks. Same relation, so the admitted
-    // set is byte-identical (oracle unchanged).
+    // set is byte-identical (oracle unchanged). A/B receipt against the
+    // per-batch re-read: plans/r16/exp_st17_basefps.log, median B/A 0.950.
     val baseFps = spark.read.parquet(standingIdx).localCheckpoint()
     val schema = spark.read.parquet(incomingDir).schema
     val stream = spark.readStream.schema(schema)
@@ -1805,14 +1780,6 @@ object StreamQueries {
     val q = writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val sp = batch.sparkSession
-        // graft.st17LegacyBaseFps=true restores the per-batch parquet
-        // re-read of the session-static standing index — the isolated
-        // paired-A/B arm for the checkpoint-once treatment above
-        // (plans/r16/exp_st17_basefps.log); same relation either way
-        val fps =
-          if (sp.conf.getOption("graft.st17LegacyBaseFps").contains("true"))
-            sp.read.parquet(standingIdx)
-          else baseFps
         // qual/novel persisted like p06's stages (r15): each feeds its
         // own stage sink AND the next stage's lineage, so unpersisted
         // the quality kernel re-ran 3x per batch (novel sink, uniq
@@ -1820,7 +1787,7 @@ object StreamQueries {
         // dominant per-batch term. Released after the sinks below.
         val qual = qualityFilter(batch).persist(StorageLevel.MEMORY_AND_DISK)
         val novel = qual.withColumn("fp", canon_fp(col("text")))
-          .join(fps, Seq("fp"), "left_anti").drop("fp")
+          .join(baseFps, Seq("fp"), "left_anti").drop("fp")
           .persist(StorageLevel.MEMORY_AND_DISK)
         // cross-batch dedup: probe the fps accumulated by PRIOR batches
         // (across ALL session tags — day 2 probes day 1's index too).
@@ -1901,26 +1868,15 @@ object StreamQueries {
             (if (withText) col("text") else lit(null).cast("string"))
               .as("text"),
             lit(stage).as("stage"))
-        // graft.st17LegacySink=true restores the five per-stage write
-        // jobs — the r16 paired-A/B arm (plans/r16/exp_st17_sink.log);
-        // the combined sink is the default
-        if (sp.conf.getOption("graft.st17LegacySink").contains("true")) {
-          def sink(df: DataFrame, stage: String, cols: Seq[String]): Unit =
-            df.select(cols.map(col): _*).write.mode("overwrite")
-              .parquet(s"${stageDir(stage)}/batch_$tag$batchId")
-          sink(batch, "incoming", Seq("doc_id", "source"))
-          sink(qual, "quality", Seq("doc_id", "source"))
-          sink(novel, "novel", Seq("doc_id", "source"))
-          sink(uniq, "uniq", Seq("doc_id", "source"))
-          sink(admitted, "admitted", Seq("doc_id", "source", "text"))
-        } else
-          staged(batch, "incoming", withText = false)
-            .unionByName(staged(qual, "quality", withText = false))
-            .unionByName(staged(novel, "novel", withText = false))
-            .unionByName(staged(uniq, "uniq", withText = false))
-            .unionByName(staged(admitted, "admitted", withText = true))
-            .write.mode("overwrite")
-            .parquet(s"${stageDir("stages")}/batch_$tag$batchId")
+        // (A/B receipt against five per-stage writes:
+        // plans/r16/exp_st17_sink.log, median B/A 0.760)
+        staged(batch, "incoming", withText = false)
+          .unionByName(staged(qual, "quality", withText = false))
+          .unionByName(staged(novel, "novel", withText = false))
+          .unionByName(staged(uniq, "uniq", withText = false))
+          .unionByName(staged(admitted, "admitted", withText = true))
+          .write.mode("overwrite")
+          .parquet(s"${stageDir("stages")}/batch_$tag$batchId")
         uniq.select(canon_fp(col("text")).as("fp")).distinct()
           .write.mode("overwrite")
           .parquet(s"${stageDir("seen_fps")}/batch_$tag$batchId")
@@ -1953,17 +1909,10 @@ object StreamQueries {
   private[graft] def admissionStagesRollup(
       spark: SparkSession, out: String): DataFrame = {
     val dirs = admissionBatchDirs(out, "stages")
+    require(dirs.nonEmpty, "st17: the admission session produced no batches")
+    val staged = spark.read.parquet(dirs: _*)
     val Seq(incoming, qual, novel, uniq, admitted) =
-      if (dirs.nonEmpty) {
-        val staged = spark.read.parquet(dirs: _*)
-        AdmissionStages.map(s => staged.filter(col("stage") === s))
-      } else
-        // legacy per-stage dirs (the graft.st17LegacySink A/B arm)
-        AdmissionStages.map { s =>
-          val sd = admissionBatchDirs(out, s)
-          require(sd.nonEmpty, s"st17: stage $s produced no batches")
-          spark.read.parquet(sd: _*)
-        }
+      AdmissionStages.map(s => staged.filter(col("stage") === s))
     graft.pipeline.PipelineQueries
       .admissionRollup(incoming, qual, novel, uniq, admitted)
   }

@@ -8,34 +8,9 @@ class ExprSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** GraftSession.build()'s getOrCreate APPLIES its runtime confs to the
-    * pre-existing shared test session (Spark 3.4+ semantics) — e.g. its
-    * default shuffle-partition count is the box's core count, which
-    * silently flips the suite-wide session from TestSpark's 4 to 32 for
-    * every spec that runs after this one. Snapshot and restore the confs
-    * build() sets; this spec's subject is function registration, not
-    * session sizing. */
-  private def restoringBuildConfs[A](body: => A): A = {
-    val keys = Seq(
-      "spark.sql.shuffle.partitions",
-      "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.sources.partitionOverwriteMode",
-      "spark.sql.legacy.parquet.nanosAsLong",
-      "spark.sql.session.timeZone",
-      GraftSession.CkptChecksumKey)
-    val old = keys.map(k => k -> spark.conf.getOption(k))
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("GraftSession front door registers every SQL function") {
-    // getOrCreate reuses the test session; confs restored right away
-    val s = restoringBuildConfs(GraftSession.build())
-    val r = s.sql(
+    // the shared test session is built by GraftSession.build
+    val r = spark.sql(
       """SELECT simhash64(array('a','b')) AS sh,
         | size(minhash_ngrams(array('a','b','c','d'), 3, 16, 42)) AS mh,
         | rh_bucket(array(cast(0.5 as double)), 4, 7) AS rb,
@@ -44,12 +19,12 @@ class ExprSpec extends AnyFunSuite {
         | size(ngram_hashes(array('a','b','c'), 3)) AS nh""".stripMargin).head()
     assert(r.getDouble(3) == 6.0)
     assert(r.getInt(5) == 1)
-    val p = s.sql(
+    val p = spark.sql(
       """SELECT pii_scan('mail a@b.co from 1.2.3.4 ref 1234567').scrubbed AS sc,
         | scrub_pii('mail a@b.co') AS sp""".stripMargin).head()
     assert(p.getString(0) == "mail <EMAIL> from <IP> ref <ID>")
     assert(p.getString(1) == "mail <EMAIL>")
-    val bc = s.sql(
+    val bc = spark.sql(
       """SELECT bounded_collect(struct(id AS doc_id, id AS payload), 5) AS bc
         |FROM range(10)""".stripMargin).head().getStruct(0)
     assert(bc.getLong(0) == 10L && bc.getSeq[Any](1).size == 5)
@@ -149,7 +124,11 @@ class ExprSpec extends AnyFunSuite {
   }
 
   test("GraftSession front door registers SQL functions") {
-    val s = restoringBuildConfs(GraftSession.build(master = "local[4]"))
+    // a second build call with the shared session's own arguments:
+    // getOrCreate returns that session, re-applies the same confs and
+    // registers the functions again
+    val s = GraftSession.build("local[4]", 4, "graft-tests")
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
     assert(s.sql("SELECT simhash64(array('x')) AS v").head().getLong(0) != 0L)
   }
 

@@ -34,11 +34,13 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastNestedLoopJoin"),
       s"the 1-row aggregate side should broadcast back:\n$plan")
     // control: the identical frame WITHOUT the rule plans the
-    // single-partition Window — the hazard the rule exists to remove
-    val saved = spark.experimental.extraOptimizations
+    // single-partition Window — the hazard the rule exists to remove.
+    // excludedRules filters both the injected (spark.sql.extensions) and
+    // the experimental.extraOptimizations batch.
+    val key = "spark.sql.optimizer.excludedRules"
+    val saved = spark.conf.getOption(key)
     try {
-      spark.experimental.extraOptimizations =
-        saved.filterNot(_ == graft.plans.GlobalWindowToAgg)
+      spark.conf.set(key, graft.plans.GlobalWindowToAgg.ruleName)
       val naive = TestSpark.tables.lineitem
         .groupBy(org.apache.spark.sql.functions.col("l_returnflag"))
         .count()
@@ -48,7 +50,10 @@ class PlanAuditSpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString
       assert(naive.contains("Window") && naive.contains("SinglePartition"),
         s"control plan should single-task without the rule:\n$naive")
-    } finally spark.experimental.extraOptimizations = saved
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 
   test("q95 plans the custom AsOfJoinExec over two sorted hash " +

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The per-application caches that keep fixed per-query costs out of warm
   * queries: the `Tables` schema cache (schema inference is a Spark job)
-  * and the generated-class cache that every session builder sizes. */
+  * and the generated-class cache that GraftSession.build sizes. */
 class SessionCachesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 

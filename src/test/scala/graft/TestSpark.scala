@@ -2,20 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local session for all suites (sbt forks one test JVM). */
+/** Shared local session for all suites (sbt forks one test JVM), built
+  * through the front door like every main; the warehouse dir, UI and time
+  * zone come from the test JVM's system properties (build.sbt). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(GraftSession.CodegenCacheKey, GraftSession.CodegenCacheMaxEntries)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse-${System.getProperty("user.name")}")
-      .getOrCreate()
+    val s = GraftSession.build("local[4]", 4, "graft-tests")
     s.sparkContext.setLogLevel("WARN")
     s
   }
