@@ -15,7 +15,7 @@ object ExpPairedConf {
   def main(args: Array[String]): Unit = {
     val Array(key, valA, valB, pairsStr, names) = args
     val pairs = pairsStr.toInt
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Harness.sfDir
     val spark = Harness.session()
     graft.multimodal.BinaryPipeline.assertGradedCorpusOrAudit("exp")
     // warm-up (Bench's): codegen + parquet reader + canary JIT

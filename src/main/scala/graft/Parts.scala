@@ -35,13 +35,11 @@ import org.apache.spark.sql.SparkSession
 object Parts {
 
   /** One lock for every scoped mutation of the session's
-    * shuffle-partitions conf (batch loop scoping here, streaming state
-    * scoping in StreamQueries): scoped set/restore of a SESSION conf is
-    * only atomic if every writer serializes on the SAME monitor — two
-    * independent locks would let a batch scope and a streaming scope
-    * interleave their save/restore and leave the session conf wrong
-    * (the round-6 clobber scenario, now guarded engine-wide). */
-  private[graft] val lock = new Object
+    * shuffle-partitions conf (batch loop scoping and streaming state
+    * scoping both go through [[withShufflePartitions]]): scoped
+    * set/restore of a SESSION conf is only atomic if every writer
+    * serializes on the SAME monitor. */
+  private val lock = new Object
 
   private val OverrideKey = "graft.shufflePartitions"
 
@@ -75,14 +73,15 @@ object Parts {
       case _ => derive
     }
 
-  /** Recursive on-disk byte size of a table file/dir — the pre-job
-    * volume estimate `forBytes` consumes. */
-  def pathBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-      else f.length()
-    walk(new java.io.File(path))
+  /** Byte size of a table file or dir, summed below it — the pre-job
+    * volume estimate `forBytes` consumes. Sized through the Hadoop
+    * `FileSystem` of the path's scheme (local, HDFS, S3, ...) with the
+    * session's Hadoop conf; a missing path is 0 bytes. */
+  def pathBytes(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try p.getFileSystem(spark.sessionState.newHadoopConf())
+      .getContentSummary(p).getLength
+    catch { case _: java.io.FileNotFoundException => 0L }
   }
 
   /** Run `f` — which must EXECUTE its jobs inside (localCheckpoint /

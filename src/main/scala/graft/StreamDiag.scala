@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   */
 object StreamDiag {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Harness.sfDir
     val spark = Harness.session()
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(

@@ -67,10 +67,10 @@ final case class Tables(spark: SparkSession, dir: String) {
   def documentsWide: DataFrame  = wide(documents)
   def embeddingsWide: DataFrame = wide(embeddings)
 
-  /** Cache-key salt for process-wide derived artifacts (IVF codebook,
-    * dedup pair graph): the table file's name/size/mtime listing. A
-    * regenerated directory changes the fingerprint, so a cache keyed on
-    * it can never serve artifacts built from deleted data. */
+  /** The content fingerprint of table `name` ([[Tables.fingerprint]]):
+    * what a [[SnapshotCache]] artifact built from the table is keyed on,
+    * so a rewritten table can never be served an artifact of its old
+    * contents. */
   def tableFingerprint(name: String): String =
     Tables.fingerprint(spark, s"$dir/$name.parquet")
 }

@@ -29,17 +29,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated name filter for targeted local iteration
     // (unset in driver runs → full dump).
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // Fail fast on typo'd filter names: a filter matching nothing would
-    // silently leave stale parquet dumps from a prior full run in outDir,
-    // and a later unfiltered check_oracle would grade them as current.
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty)
-        sys.error(s"SPARK_GRAFT_VERIFY_ONLY names not in SparkEntry.queries: " +
-          unknown.toSeq.sorted.mkString(", "))
-    }
+    val only = Harness.queryFilter("SPARK_GRAFT_VERIFY_ONLY")
     dump(spark, sfDir, outDir,
       SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) })
     Harness.writeOracleSql(outDir, SparkEntry.oracleSql)

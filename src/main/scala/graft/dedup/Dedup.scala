@@ -487,10 +487,9 @@ object Dedup {
     * (bench/verify loops invoke repeatedly) re-paid the most expensive
     * part of the query for an identical tiny result. This is the same
     * index-artifact pattern as s03's codebook — a dedup graph is built
-    * once per corpus snapshot, not once per downstream query. The key
-    * carries the Spark application id (a checkpointed DataFrame dies
-    * with its context) and the table-file fingerprint (a regenerated
-    * directory can never be served stale pairs). Until round 5 the edge
+    * once per corpus snapshot, not once per downstream query
+    * ([[graft.SnapshotCache]] keys it and frees a superseded graph's
+    * checkpoint blocks). Until round 5 the edge
     * list was d02's ESTIMATED pairs (est ≥ 0.5, rows-only by
     * construction); clustering the d04-verified pairs instead both
     * matches the curation policy (decisions on exact Jaccard, never on
@@ -498,9 +497,7 @@ object Dedup {
   private val pairsCache = new graft.SnapshotCache[(DataFrame, Long)]
 
   private[graft] def candidatePairsWithCount(t: Tables): (DataFrame, Long) =
-    pairsCache.getOrElseUpdate(
-      s"${t.spark.sparkContext.applicationId}:${t.dir}",
-      t.tableFingerprint("documents")) {
+    pairsCache(t, "pairs", "documents") {
       // keep the verify counts in the snapshot artifact: the relation is
       // O(near-dup mass) either way (two extra ints per pair), and it
       // lets d12's threshold curve ride the same once-per-snapshot

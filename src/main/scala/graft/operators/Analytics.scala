@@ -424,7 +424,6 @@ object Analytics {
     val days = t.events
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .distinct()
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
     val islands = days
       .withColumn("anchor", expr("date_sub(day, row_number() over " +
         "(partition by user_id order by day))"))
@@ -595,7 +594,6 @@ object Analytics {
     * rule planning the single-task Window. The oracle computes the same
     * numbers relationally — the rewrite must be semantics-identity. */
   def q94(t: Tables): DataFrame = {
-    graft.plans.GraftRules.install(t.spark)
     t.lineitem
       .groupBy(col("l_returnflag").as("grp"))
       .agg(count(lit(1)).as("cnt"),

@@ -26,21 +26,17 @@ object CatalogOps {
 
   private val NBuckets = 8
 
-  /** Catalog table names per (app, dir, content) — the bucketed layout is
-    * written ONCE per corpus snapshot and reused by every query against
-    * it (the same index-artifact pattern as the IVF/PQ codebooks). The
-    * fingerprint key makes a regenerated data dir rebuild the tables
-    * rather than serve stale buckets; the app id scopes names to this
-    * session's (in-memory) catalog. */
-  private val tableCache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  /** Catalog table names: the bucketed layout is written ONCE per corpus
+    * snapshot and reused by every query against it (the same
+    * index-artifact pattern as the IVF/PQ codebooks). */
+  private val tableCache = new graft.SnapshotCache[(String, String)]
 
-  private[graft] def bucketedTables(t: Tables): (String, String) = {
-    val key = s"${t.spark.sparkContext.applicationId}:${t.dir}:" +
-      s"${t.tableFingerprint("orders")}:${t.tableFingerprint("lineitem")}"
-    tableCache.getOrElseUpdate(key, {
-      // name by content hash so two sf dirs in one session coexist
-      val suffix = (key.hashCode.toLong & 0xffffffffL).toHexString
+  private[graft] def bucketedTables(t: Tables): (String, String) =
+    tableCache(t, "q81", "orders", "lineitem") {
+      // fresh names per build: the warehouse dir outlives the session's
+      // in-memory catalog, so a name reused by a later application would
+      // collide with the earlier one's table files
+      val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
       val ordersTable = s"graft_cat_orders_$suffix"
       val lineitemTable = s"graft_cat_lineitem_$suffix"
       t.orders.write.mode(SaveMode.Overwrite)
@@ -60,8 +56,7 @@ object CatalogOps {
       t.spark.sql(s"ANALYZE TABLE $lineitemTable COMPUTE STATISTICS " +
         "FOR COLUMNS l_orderkey")
       (ordersTable, lineitemTable)
-    })
-  }
+    }
 
   /** q81 — order-status revenue through the catalog path: SQL over the
     * co-bucketed tables; the join inputs read bucket-locally (no
@@ -84,12 +79,10 @@ object CatalogOps {
          |ORDER BY status""".stripMargin)
   }
 
-  /** ETL output dirs per (app, dir, content) — same once-per-snapshot
-    * policy as [[bucketedTables]]: the partitioned layout is the
-    * artifact; every query against it reads partition-discovered
-    * parquet. */
-  private val etlCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** ETL output dirs — same once-per-snapshot policy as
+    * [[bucketedTables]]: the layout is the artifact; every query against
+    * it reads the written files. */
+  private[graft] val etlCache = new graft.SnapshotCache[String]
 
   /** w01 — the reference's partitioned ETL sink (INSERT OVERWRITE a
     * PARTITIONED BY table, ref lines 248–269) as a GRADED round-trip:
@@ -104,16 +97,13 @@ object CatalogOps {
     * q81 bucketed tables). */
   /** The dt-partitioned events layout w01 writes and w05 prunes —
     * built once per corpus snapshot under the shared etlCache policy. */
-  private[graft] def etlLayout(t: Tables): String = {
-    val key = s"${t.spark.sparkContext.applicationId}:${t.dir}:" +
-      s"${t.tableFingerprint("events")}"
-    etlCache.getOrElseUpdate(key, {
+  private[graft] def etlLayout(t: Tables): String =
+    etlCache(t, "w01", "events") {
       val dir = graft.TempDirs.create("graft_w01_etl")
       graft.sources.PartitionedWriter.writePartitioned(
         t.events.withColumn("dt", to_date(col("ts"))), dir, Seq("dt"))
       dir
-    })
-  }
+    }
 
   def w01(t: Tables): DataFrame = {
     t.spark.read.parquet(etlLayout(t))
@@ -136,9 +126,7 @@ object CatalogOps {
     * scan planning and NameNode pressure scale with file count, not
     * bytes. Artifacts cached once per corpus snapshot like q81/w01. */
   def w02(t: Tables): DataFrame = {
-    val key = s"${t.spark.sparkContext.applicationId}:${t.dir}:w02:" +
-      s"${t.tableFingerprint("events")}"
-    val out = etlCache.getOrElseUpdate(key, {
+    val out = etlCache(t, "w02", "events") {
       val shredded = graft.TempDirs.create("graft_w02_small")
       t.events.repartition(64).write.mode(SaveMode.Overwrite)
         .option("compression", "snappy").parquet(shredded)
@@ -148,7 +136,7 @@ object CatalogOps {
       require(after < before,
         s"w02: compaction must reduce file count ($before -> $after)")
       compacted
-    })
+    }
     t.spark.read.parquet(out)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -174,16 +162,14 @@ object CatalogOps {
     * identical band query on the RAW table — equality proves the
     * rewrite is content-lossless; values in exact integer cents. */
   def w03(t: Tables): DataFrame = {
-    val key = s"${t.spark.sparkContext.applicationId}:${t.dir}:w03:" +
-      s"${t.tableFingerprint("events")}"
-    val out = etlCache.getOrElseUpdate(key, {
+    val out = etlCache(t, "w03", "events") {
       val dir = graft.TempDirs.create("graft_w03_zorder")
       graft.sources.PartitionedWriter.zorderWrite(
         t.events.withColumn("day_idx",
           datediff(to_date(col("ts")), lit("1970-01-01"))),
         "user_id", "day_idx", dir, numFiles = 16)
       dir
-    })
+    }
     // the doubly-selective band query: middle 20% of users × middle 20%
     // of days — bounds derived from corpus min/max in pure integer
     // arithmetic so the oracle reproduces them exactly (day_idx rides
@@ -223,9 +209,7 @@ object CatalogOps {
     * path). Layout written once per corpus snapshot (q81/w01–w03
     * policy). */
   def w04(t: Tables): DataFrame = {
-    val key = s"${t.spark.sparkContext.applicationId}:${t.dir}:w04:" +
-      s"${t.tableFingerprint("events")}"
-    val out = etlCache.getOrElseUpdate(key, {
+    val out = etlCache(t, "w04", "events") {
       val dir = graft.TempDirs.create("graft_w04_evolved")
       val base = t.events.select(col("event_id"), col("ts"),
         col("user_id"), col("event_type"), col("value"))
@@ -237,7 +221,7 @@ object CatalogOps {
         .write.mode(SaveMode.Overwrite)
         .option("compression", "snappy").parquet(s"$dir/batch=2")
       dir
-    })
+    }
     t.spark.read.option("mergeSchema", "true").parquet(out)
       .groupBy(col("event_type"),
         coalesce(col("channel"), lit("pre_evolution")).as("channel"))
@@ -281,12 +265,10 @@ object CatalogOps {
     * bucketed tables it probes (at 100 TB the lookup key comes from the
     * application, not a scan; deriving it from data here keeps the query
     * deterministic at every SF). */
-  private val probeKeyCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+  private val probeKeyCache = new graft.SnapshotCache[Long]
 
   private def minOrderKey(t: Tables): Long =
-    probeKeyCache.getOrElseUpdate(
-      s"${t.dir}:${t.tableFingerprint("orders")}",
+    probeKeyCache(t, "w06", "orders")(
       t.orders.agg(min(col("o_orderkey"))).head().getLong(0))
 
   /** w06 — bucket-pruned point lookup through the catalog: the
@@ -317,13 +299,10 @@ object CatalogOps {
     * build-time evidence the spec pins. Cached per corpus snapshot like
     * every layout artifact. The tuple is (layout dir, target date,
     * non-target files untouched by the overwrite?). */
-  private val w07Cache =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String, Boolean)]
+  private val w07Cache = new graft.SnapshotCache[(String, String, Boolean)]
 
-  private[graft] def w07Layout(t: Tables): (String, String, Boolean) = {
-    val key = s"${t.spark.sparkContext.applicationId}:${t.dir}:" +
-      s"${t.tableFingerprint("events")}"
-    w07Cache.getOrElseUpdate(key, {
+  private[graft] def w07Layout(t: Tables): (String, String, Boolean) =
+    w07Cache(t, "w07", "events") {
       val dir = graft.TempDirs.create("graft_w07_layout")
       val ev = t.events.withColumn("dt", to_date(col("ts")))
       graft.sources.PartitionedWriter.writePartitioned(ev, dir, Seq("dt"))
@@ -350,8 +329,7 @@ object CatalogOps {
           col("event_type") =!= "error"),
         dir, Seq("dt"))
       (dir, target, listing() == before)
-    })
-  }
+    }
 
   /** w07 — the reference's INSERT OVERWRITE PARTITION workflow graded
     * end-to-end: rewrite EXACTLY ONE date partition of the layout
@@ -390,9 +368,7 @@ object CatalogOps {
     * Header+schema read, never inference — schema inference is an extra
     * full scan at 100 TB. Written once per corpus snapshot. */
   def w08(t: Tables): DataFrame = {
-    val key = s"${t.spark.sparkContext.applicationId}:${t.dir}:w08:" +
-      s"${t.tableFingerprint("documents")}"
-    val dir = etlCache.getOrElseUpdate(key, {
+    val dir = etlCache(t, "w08", "documents") {
       val out = graft.TempDirs.create("graft_w08_csv")
       t.documents
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
@@ -404,7 +380,7 @@ object CatalogOps {
         .option("ignoreTrailingWhiteSpace", "false")
         .csv(out)
       out
-    })
+    }
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, source STRING, lang STRING, n_chars BIGINT, " +
         "payload STRING")
@@ -429,9 +405,7 @@ object CatalogOps {
     * fail-fast read would lose whole 128 MB splits to one bad line.
     * Oracle recomputes both populations from the raw table. */
   def w09(t: Tables): DataFrame = {
-    val key = s"${t.spark.sparkContext.applicationId}:${t.dir}:w09:" +
-      s"${t.tableFingerprint("documents")}"
-    val dir = etlCache.getOrElseUpdate(key, {
+    val dir = etlCache(t, "w09", "documents") {
       val out = graft.TempDirs.create("graft_w09_jsonl")
       val good = t.documents.select(to_json(struct(
         col("doc_id"), col("source"), col("lang"), col("text"),
@@ -442,7 +416,7 @@ object CatalogOps {
           lit("\",\"text\":\"torn")).as("value"))
       good.unionByName(torn).write.mode(SaveMode.Overwrite).text(out)
       out
-    })
+    }
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, source STRING, lang STRING, text STRING, " +
         "n_chars BIGINT")
@@ -458,10 +432,8 @@ object CatalogOps {
     * (the raw props payload) sits INSIDE the struct next to the two
     * numeric subfields the query wants, so pruning is the difference
     * between reading ~16 bytes/row and re-reading the whole payload. */
-  private[graft] def nestedLayout(t: Tables): String = {
-    val key = s"${t.spark.sparkContext.applicationId}:${t.dir}:w10:" +
-      s"${t.tableFingerprint("events")}"
-    etlCache.getOrElseUpdate(key, {
+  private[graft] def nestedLayout(t: Tables): String =
+    etlCache(t, "w10", "events") {
       val out = graft.TempDirs.create("graft_w10_nested")
       t.events.select(col("event_id"),
         struct(
@@ -473,8 +445,7 @@ object CatalogOps {
         .write.mode(SaveMode.Overwrite)
         .option("compression", "snappy").parquet(out)
       out
-    })
-  }
+    }
 
   /** w10 — nested-schema pruning graded end-to-end: event logs at crawl
     * scale ship as one struct column (typed metadata + a fat raw
@@ -515,10 +486,8 @@ object CatalogOps {
     * read-once-rewrite is the only affordable migration shape (never
     * per-query re-sorts), and the old layout stays live until the new
     * one is verified — which is precisely what this query does. */
-  private[graft] def migratedLayout(t: Tables): String = {
-    val key = s"${t.spark.sparkContext.applicationId}:${t.dir}:w11:" +
-      s"${t.tableFingerprint("events")}"
-    etlCache.getOrElseUpdate(key, {
+  private[graft] def migratedLayout(t: Tables): String =
+    etlCache(t, "w11", "events") {
       val out = graft.TempDirs.create("graft_w11_migrated")
       // read the OLD (dt-partitioned) layout — the migration consumes
       // the layout it replaces, not the raw table
@@ -527,8 +496,7 @@ object CatalogOps {
         .option("compression", "snappy")
         .partitionBy("event_type").parquet(out)
       out
-    })
-  }
+    }
 
   def w11(t: Tables): DataFrame =
     t.spark.read.parquet(migratedLayout(t))

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Tables
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Extended relational surface (SURVEY §2 q44–q53): array/explode ops,

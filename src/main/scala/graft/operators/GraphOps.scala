@@ -61,9 +61,7 @@ object GraphOps {
   private val edgeCache = new graft.SnapshotCache[(DataFrame, Long)]
 
   private def undirectedTradeEdgesWithCount(t: Tables): (DataFrame, Long) = {
-    edgeCache.getOrElseUpdate(
-      s"${t.spark.sparkContext.applicationId}:${t.dir}",
-      t.tableFingerprint("lineitem") + ":" + t.tableFingerprint("orders")) {
+    edgeCache(t, "edges", "lineitem", "orders") {
       val pairs = t.lineitem.select(col("l_orderkey"), col("l_suppkey"))
         .join(t.orders.select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))

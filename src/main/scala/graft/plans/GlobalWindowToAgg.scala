@@ -28,10 +28,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * order-dependent and never match). Output attribute ids are preserved
   * via re-aliasing, so downstream references are untouched.
   *
-  * Registered two ways (both live in [[GraftRules]]):
-  * `SparkSessionExtensions.injectOptimizerRule` (the
-  * `spark.sql.extensions` contract) and
-  * `spark.experimental.extraOptimizations` for an already-built session.
+  * Registered once, by [[graft.functions.GraftExtensions]]
+  * (`SparkSessionExtensions.injectOptimizerRule`), which every session
+  * built by [[graft.GraftSession.build]] loads.
   */
 object GlobalWindowToAgg extends Rule[LogicalPlan] {
 
@@ -72,17 +71,5 @@ object GlobalWindowToAgg extends Rule[LogicalPlan] {
           Alias(fresh.toAttribute, orig.name)(exprId = orig.exprId)
       }
       Project(projections, joined)
-  }
-}
-
-/** Session wiring for the graft optimizer rules. */
-object GraftRules {
-  /** Idempotently install the rules on a live session (the
-    * `experimental.extraOptimizations` path — runs as its own batch after
-    * the standard optimizer). */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(GlobalWindowToAgg))
-      spark.experimental.extraOptimizations = cur :+ GlobalWindowToAgg
   }
 }

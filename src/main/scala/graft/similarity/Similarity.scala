@@ -108,18 +108,13 @@ object Similarity {
   private val codebookCache =
     new graft.SnapshotCache[Array[(Int, Array[Double], Double)]]
 
-  /** Fingerprint side of every similarity-artifact cache entry: a
-    * regenerated embeddings file EVICTS the scope's stale artifact
-    * (SnapshotCache) instead of leaving it pinned beside the new one. */
-  private def embFp(t: Tables): String = t.tableFingerprint("embeddings")
-
   /** Cached prepped-corpus row count (same fingerprint keying as the
     * codebook): cluster/sub-band knob sizing must see the CLUSTERED
     * population — zero-norm vectors are filtered out of the corpus — and
     * callers must not pay a fresh count job per plan construction. */
   private val countCache = new graft.SnapshotCache[Long]
   private[graft] def preppedCount(t: Tables): Long =
-    countCache.getOrElseUpdate(s"${t.dir}:count", embFp(t))(prepped(t).count())
+    countCache(t, "count", "embeddings")(prepped(t).count())
 
   /** Argmax-centroid assignment: a MAP-ONLY pass per row against the
     * codebook — no shuffle of the corpus, no groupBy (a crossJoin+max_by
@@ -181,8 +176,7 @@ object Similarity {
     * cluster counts never collide). */
   private[graft] def assignedClusters(t: Tables, c: Int): DataFrame = {
     val corpus = prepped(t)
-    val cents = codebookCache.getOrElseUpdate(
-      s"${t.dir}:c$c:l$LloydIters", embFp(t))(
+    val cents = codebookCache(t, s"c$c:l$LloydIters", "embeddings")(
       buildCodebook(t, corpus, c, LloydIters))
     corpus.withColumn("cent_id",
       bestCentroid(cents, "vec", "norm"))
@@ -201,9 +195,9 @@ object Similarity {
     // to the driver and inlined as literals (how every IVF index holds
     // its codebook).
     val cents: Array[(Int, Array[Double], Double)] =
-      // SAME key format as assignedClusters, so s03 and d10 share the
+      // SAME tag as assignedClusters, so s03 and d10 share the
       // C=16 codebook on a small corpus instead of training it twice
-      codebookCache.getOrElseUpdate(s"${t.dir}:c$C:l$lloydIters", embFp(t))(
+      codebookCache(t, s"c$C:l$lloydIters", "embeddings")(
         buildCodebook(t, corpus, C, lloydIters))
     def bestCent(vecCol: String, normCol: String) =
       bestCentroid(cents, vecCol, normCol)
@@ -311,7 +305,7 @@ object Similarity {
     val corpus = prepped(t)
 
     val cb: Array[Array[Array[Double]]] =
-      pqCache.getOrElseUpdate(s"${t.dir}:pq$M", embFp(t)) {
+      pqCache(t, s"pq$M", "embeddings") {
         val seeds = corpus
           .filter(col("vec_id") % 37 === 0 && col("vec_id") < 37 * 16)
           .select(col("vec"))
@@ -731,7 +725,7 @@ object Similarity {
   def s14(t: Tables): DataFrame = {
     val Shortlist = 50
     val corpus = prepped(t)
-    val (mins, steps) = sqCache.getOrElseUpdate(s"${t.dir}:sq8", embFp(t)) {
+    val (mins, steps) = sqCache(t, "sq8", "embeddings") {
       val d = corpus.select(size(col("vec"))).first.getInt(0)
       val aggs = (0 until d).flatMap(i => Seq(
         min(element_at(col("vec"), i + 1)), max(element_at(col("vec"), i + 1))))
@@ -899,18 +893,17 @@ object Similarity {
     // probe budgets AND across invocations — the brute-force pass is
     // paid once per corpus, while the per-budget candidate caches stay
     // per-query (released below)
-    val truth = truthCache.getOrElseUpdate(
-      s"${t.spark.sparkContext.applicationId}:${t.dir}:truth", embFp(t)) {
-        corpus.crossJoin(broadcast(
-            queries10.select(col("q_id"), col("q_vec"), col("q_norm"))))
-          .select(col("q_id"), col("vec_id"),
-            round(dot("vec", "q_vec") / (col("norm") * col("q_norm")), 4)
-              .as("sim"))
-          .withColumn("rn", row_number().over(wT))
-          .filter(col("rn") <= TopK)
-          .select(col("q_id"), col("vec_id"))
-          .localCheckpoint()
-      }
+    val truth = truthCache(t, "truth", "embeddings") {
+      corpus.crossJoin(broadcast(
+          queries10.select(col("q_id"), col("q_vec"), col("q_norm"))))
+        .select(col("q_id"), col("vec_id"),
+          round(dot("vec", "q_vec") / (col("norm") * col("q_norm")), 4)
+            .as("sim"))
+        .withColumn("rn", row_number().over(wT))
+        .filter(col("rn") <= TopK)
+        .select(col("q_id"), col("vec_id"))
+        .localCheckpoint()
+    }
     val bucketed = corpus.select(col("bucket"), col("vec_id"))
     // ONE candidate pass subsumes every budget (r15, guide §2.4): the
     // probe order is a strict prefix chain, so budget p's candidate set

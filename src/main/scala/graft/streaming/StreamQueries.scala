@@ -150,10 +150,8 @@ object StreamQueries {
 
   private def replayDir(spark: SparkSession, dir: String,
       sentinelTypes: Seq[String]): String = {
-    replayCache.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}:$dir:" +
-        sentinelTypes.mkString(","),
-      graft.Tables.fingerprint(spark, s"$dir/events.parquet")) {
+    replayCache(graft.Tables(spark, dir),
+        s"events:${sentinelTypes.mkString(",")}", "events") {
       if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
             .forall(_ != "true"))
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -262,43 +260,21 @@ object StreamQueries {
   private def stateParts(spark: SparkSession, dir: String,
       table: String): Int =
     graft.Parts.forBytes(spark,
-      graft.Parts.pathBytes(s"$dir/$table.parquet"),
+      graft.Parts.pathBytes(spark, s"$dir/$table.parquet"),
       StateBytesPerPartition, floor = 4)
 
   /** The per-query `n` below is the LOCAL default; `graft.statePartitions`
     * (session conf) overrides it — the scale-adaptive spelling (r15): a
     * production deployment sets it to state rows / target rows-per-store
     * instead of editing call sites, and the paired A/B harness can sweep
-    * it at runtime. */
+    * it at runtime. The scope is the batch operators' one
+    * ([[graft.Parts.withShufflePartitions]]): an isolated child session
+    * cannot host these queries, because several join the stream against
+    * batch-side relations built on the parent session. */
   private def withStatePartitions[A](spark: SparkSession, n: Int)(f: => A): A =
-    withStatePartitionsImpl(spark,
+    graft.Parts.withShufflePartitions(spark,
       spark.conf.getOption("graft.statePartitions")
         .map(_.toInt).getOrElse(n))(f)
-  private def withStatePartitionsImpl[A](spark: SparkSession, n: Int)(f: => A): A =
-    // Serialized on a global lock (round-6 advice): the override mutates
-    // the SESSION's shuffle-partitions conf for the duration of the
-    // streaming run, so two concurrent callers could otherwise clobber
-    // each other's saved previous value on restore (A saves 32 → sets 8;
-    // B saves 8 → A restores 32 → B "restores" 8, leaving the session
-    // wrong). The lock makes save/run/restore atomic; the residual
-    // exposure — an unrelated BATCH query on the same session planned at
-    // n while a streaming run holds the lock — does not arise under the
-    // driver protocol (Verify/Bench/ScalaTest run queries sequentially
-    // on the session), and a structurally isolated child session can't
-    // host these queries because several join the stream against
-    // batch-side relations built on the parent. The lock is SHARED with
-    // the batch loop-partition scoping (graft.Parts, r16): both mutate
-    // the same session conf, so independent monitors would reintroduce
-    // exactly the interleaved-restore hazard this comment describes.
-    graft.Parts.lock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, n.toString)
-      try f finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
 
   /** The normalized event stream over the shuffled multi-file replay:
     * one chunk per micro-batch, out-of-order across batches within the
@@ -736,9 +712,7 @@ object StreamQueries {
     * events replay. */
   private def replayedDocumentsStream(spark: SparkSession,
       dir: String): DataFrame = {
-    val rd = replayCache.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}:$dir:docs",
-      graft.Tables.fingerprint(spark, s"$dir/documents.parquet")) {
+    val rd = replayCache(graft.Tables(spark, dir), "docs", "documents") {
       val raw = spark.read.parquet(s"$dir/documents.parquet")
       val cols = raw.columns.map(col)
       val out = graft.TempDirs.create("graft_replay_documents")
@@ -986,9 +960,7 @@ object StreamQueries {
     * every batch instead of grouping by op. Cached per (app, corpus
     * fingerprint) like the other replays. */
   private[graft] def mergeReplayDir(spark: SparkSession, dir: String): String =
-    replayCache.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}:$dir:merge_changes",
-      graft.Tables.fingerprint(spark, s"$dir/customer.parquet")) {
+    replayCache(graft.Tables(spark, dir), "merge_changes", "customer") {
       val changes = graft.operators.Analytics
         .mergeChangeset(graft.Tables(spark, dir))
       val out = graft.TempDirs.create("graft_replay_changes")
@@ -1525,21 +1497,15 @@ object StreamQueries {
     * increasing mtimes, so `maxFilesPerTrigger=1` streams one chunk per
     * micro-batch in order (the events replayDir discipline; no jitter
     * needed — st16's aggregate is commutative, the multi-batch split
-    * exercises the cross-batch state merge, not lateness). Cache-keyed
-    * on the app id + NMedia: the corpus is a pure function of
-    * range(0, NMedia), independent of the sf dir. */
-  private val mediaReplayCache = new graft.SnapshotCache[String]
-
-  /** Test hook: the replay dir path, so the spec can assert its
-    * one-file-per-chunk structure (≥4 micro-batches is a property of
-    * the SOURCE layout, not of a progress listener). */
-  private[graft] def mediaReplayDirForTest(spark: SparkSession): String =
-    mediaReplayDir(spark)
-
-  private def mediaReplayDir(spark: SparkSession): String =
-    mediaReplayCache.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}:media",
-      s"synth:${graft.multimodal.BinaryPipeline.NMedia}") {
+    * exercises the cross-batch state merge, not lateness). The corpus
+    * is a pure function of range(0, NMedia) and reads no table, so
+    * NMedia is in the tag and there is no input fingerprint. Visible to
+    * the spec, which asserts its one-file-per-chunk structure (≥4
+    * micro-batches is a property of the SOURCE layout, not of a
+    * progress listener). */
+  private[graft] def mediaReplayDir(t: graft.Tables): String =
+    replayCache(t, s"media:${graft.multimodal.BinaryPipeline.NMedia}") {
+      val spark = t.spark
       val out = graft.TempDirs.create("graft_replay_media")
       val base = System.currentTimeMillis() - 3600L * 1000
       val nMedia = graft.multimodal.BinaryPipeline.NMedia
@@ -1580,9 +1546,9 @@ object StreamQueries {
     * batch twin bit-exactly — graded by the codec-free DuckDB oracle
     * ([[graft.multimodal.BinaryPipeline.st16OracleSql]]), which gates
     * the cross-batch merge AND the decode from outside the JVM. */
-  def st16(spark: SparkSession): DataFrame = {
+  def st16(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = mediaReplayDir(spark)
+    val dir = mediaReplayDir(graft.Tables(spark, sfDir))
     // footer-only schema probe (streaming sources need explicit schema)
     val schema = spark.read.parquet(dir).schema
     val decoded = spark.readStream.schema(schema)
@@ -1618,9 +1584,8 @@ object StreamQueries {
     * survivorship, so the p06 oracle holds for every chunking. */
   private[graft] def incomingReplayDir(spark: SparkSession, dir: String,
       nChunks: Int = 4): String =
-    replayCache.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}:$dir:incoming:$nChunks",
-      graft.Tables.fingerprint(spark, s"$dir/documents.parquet")) {
+    replayCache(graft.Tables(spark, dir), s"incoming:$nChunks",
+        "documents") {
       import graft.functions.exprs.canon_fp
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       val split = substring(md5(col("doc_id").cast("string")), 32, 1)
@@ -1921,7 +1886,7 @@ object StreamQueries {
     "st19_stream_upsert_pruned" -> ((s, dir) => st19(s, dir)),
     "st18_stream_upsert" -> ((s, dir) => st18(s, dir)),
     "st17_stream_admission" -> ((s, dir) => st17(s, dir)),
-    "st16_stream_media_ingest" -> ((s, _) => st16(s)),
+    "st16_stream_media_ingest" -> ((s, dir) => st16(s, dir)),
     "st13_stream_leaderboard" -> ((s, dir) => st13(s, dir)),
     "st12_stream_threshold_alert" -> ((s, dir) => st12(s, dir)),
     "st11_stream_mix_sample" -> ((s, dir) => st11(s, dir)),

@@ -880,8 +880,7 @@ object TextOps {
 
   /** Serialized bench-gram bloom filters, cached per corpus snapshot
     * (the codebookCache policy: an index artifact is built once per
-    * corpus, keyed by file fingerprint so a regenerated directory can
-    * never be served stale bits). */
+    * corpus). */
   private val bloomCache = new graft.SnapshotCache[Array[Byte]]
 
   /** t27 — bloom-prefiltered decontamination: t10's benchmark-overlap
@@ -908,8 +907,7 @@ object TextOps {
       .select(col("doc_id"), explode(ngram_hashes(col("toks"), 6)).as("g"))
     val bench = grams.filter(col("doc_id") % 50 === 0)
       .select(col("doc_id").as("bench_id"), col("g"))
-    val bf = bloomCache.getOrElseUpdate(t.dir,
-      t.tableFingerprint("documents")) {
+    val bf = bloomCache(t, "t27", "documents") {
       // driver-side materialization of the INDEX (bloom bytes), not data
       // — the s03 codebook pattern; 4M estimated items ≈ 1 MB of bits,
       // FP rate degrades gracefully past that and only costs shuffle

@@ -24,6 +24,19 @@ class HarnessSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"hand-rolled session builders: $offenders")
   }
 
+  test("a query-name filter with an unknown name throws") {
+    assert(Harness.queryNames("SPARK_GRAFT_BENCH_ONLY", None).isEmpty)
+    assert(Harness.queryNames("SPARK_GRAFT_BENCH_ONLY",
+      Some("w01_etl_partitioned_roundtrip, d12_threshold_curve")) ==
+      Some(Set("w01_etl_partitioned_roundtrip", "d12_threshold_curve")))
+    val e = intercept[RuntimeException] {
+      Harness.queryNames("SPARK_GRAFT_BENCH_ONLY",
+        Some("w01_etl_partitioned_roundtrip,w01_typo"))
+    }
+    assert(e.getMessage.contains("SPARK_GRAFT_BENCH_ONLY"))
+    assert(e.getMessage.contains("w01_typo"))
+  }
+
   test("the shared test session carries GraftSession's configuration") {
     assert(spark.conf.get("spark.sql.extensions") ==
       "graft.functions.GraftExtensions")

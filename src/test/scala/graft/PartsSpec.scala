@@ -40,6 +40,15 @@ class PartsSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.shufflePartitions")
   }
 
+  test("pathBytes sizes a file: URI through its Hadoop FileSystem") {
+    val f = new java.io.File(TestSpark.sfDir, "events.parquet")
+    assert(f.length() > 0)
+    assert(Parts.pathBytes(spark, f.toURI.toString) === f.length())
+    assert(Parts.pathBytes(spark, TestSpark.sfDir) ===
+      new java.io.File(TestSpark.sfDir).listFiles().map(_.length()).sum)
+    assert(Parts.pathBytes(spark, s"${TestSpark.sfDir}/missing.parquet") === 0L)
+  }
+
   test("withShufflePartitions scopes and restores, even on throw") {
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)

@@ -67,6 +67,62 @@ class SnapshotCacheSpec extends AnyFunSuite {
     df2.unpersist(blocking = false)
   }
 
+  test("evicting a (DataFrame, Long) entry frees its localCheckpoint blocks") {
+    // Dataset.unpersist only clears the cache manager, and a tuple is not
+    // a Dataset: the superseded pair graph / edge list shape kept its
+    // checkpointed RDD stored until the context stopped
+    val spark = TestSpark.spark
+    val cache = new SnapshotCache[(org.apache.spark.sql.DataFrame, Long)]
+    def build(n: Int) = {
+      val ck = spark.range(n).toDF("id").localCheckpoint()
+      (ck, ck.count())
+    }
+    def rddId(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }
+    def stored(id: Int): Boolean =
+      spark.sparkContext.getRDDStorageInfo.exists(_.id == id)
+    val (old, _) = cache.getOrElseUpdate("scope", "fp1")(build(100))
+    assert(stored(rddId(old)), "the checkpoint must be stored before eviction")
+    val (fresh, n) = cache.getOrElseUpdate("scope", "fp2")(build(10))
+    assert(n == 10L)
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (stored(rddId(old)) && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(!stored(rddId(old)),
+      "the superseded checkpoint's RDD must leave the block store")
+    assert(stored(rddId(fresh)), "the live artifact must keep its blocks")
+    spark.sparkContext.getPersistentRDDs.get(rddId(fresh))
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  test("rewriting events.parquet supersedes its ETL layout: a new dir, " +
+    "and one live entry for the scope") {
+    val spark = TestSpark.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft_snapshot_spec")
+    val events = dir.resolve("events.parquet")
+    def writeEvents(mtime: Long): Unit = {
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(TestSpark.sfDir, "events.parquet"), events,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(events.toFile.setLastModified(mtime))
+    }
+    try {
+      writeEvents(1000000000000L)
+      val t = Tables(spark, dir.toString)
+      val first = operators.CatalogOps.etlLayout(t)
+      assert(operators.CatalogOps.etlLayout(t) == first)
+      val live = operators.CatalogOps.etlCache.size
+      writeEvents(1000000060000L)
+      val second = operators.CatalogOps.etlLayout(t)
+      assert(second != first, "a rewritten table must get a new layout")
+      assert(operators.CatalogOps.etlCache.size == live,
+        "the superseded layout must not stay live beside the new one")
+      assert(spark.read.parquet(second).count() ==
+        spark.read.parquet(events.toString).count())
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("per-scope locking: a slow build on one scope does not block hits " +
     "on another") {
     val cache = new SnapshotCache[String]

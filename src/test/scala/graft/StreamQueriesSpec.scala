@@ -383,7 +383,7 @@ class StreamQueriesSpec extends AnyFunSuite {
     "and the codec-free synthesis twins, across >=4 micro-batches") {
     import org.apache.spark.sql.functions._
     import graft.multimodal.BinaryPipeline
-    val streamed = StreamQueries.st16(spark)
+    val streamed = StreamQueries.st16(spark, TestSpark.sfDir)
     // batch twin: the same decode map over the same synthetic corpus,
     // aggregated in one batch pass — the streaming cross-batch merge
     // must not change a single integer
@@ -419,7 +419,7 @@ class StreamQueriesSpec extends AnyFunSuite {
     // the source must genuinely deliver multiple micro-batches: the
     // replay dir is one file per chunk and the stream reads
     // maxFilesPerTrigger=1
-    val chunkFiles = new java.io.File(StreamQueries.mediaReplayDirForTest(spark))
+    val chunkFiles = new java.io.File(StreamQueries.mediaReplayDir(TestSpark.tables))
       .listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     assert(chunkFiles.length >= 4,
       s"expected >=4 media replay chunks, got ${chunkFiles.length}")
