@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
 /** Plan audit tool: prints the formatted physical plan for each named
   * query (all queries if none named). Usage:
   *   runMain graft.Explain <sfDir> [queryName ...]
@@ -14,15 +16,19 @@ package graft
   * Executed runs also count TASKS (r16): partition-scoping claims
   * ("the loop now runs 8-way, not 32-way") are invisible in a
   * localCheckpoint-terminated query's final plan — the r15 s16 evidence
-  * gap — but the total task count measures them directly.
+  * gap — but the total task count measures them directly. Streaming
+  * queries also print one `-- batch --` line per micro-batch from the
+  * engine's progress events: the duration breakdown (triggerExecution /
+  * addBatch / getBatch / latestOffset / queryPlanning / walCommit /
+  * commitOffsets) and each state operator's rows and commit time.
   *
   * SPARK_GRAFT_CPUS sizes the session (master local[n] + n shuffle
   * partitions; default the machine's processor count), which is built
   * through [[GraftSession.build]] like every other main.
   * SPARK_GRAFT_EXPLAIN_CONF="k=v;k=v" sets runtime confs after session
   * build — the hook that dumps a BEFORE arm through the engine's own
-  * override knobs (graft.shufflePartitions=32, graft.statePartitions=8)
-  * without checking out old code.
+  * override knob (graft.shufflePartitions=32, which also sizes the
+  * streaming state stores) without checking out old code.
   */
 object Explain {
   /** Sums shuffle write volume across all tasks between reset() calls.
@@ -48,6 +54,27 @@ object Explain {
         s"tasks=${tasks.get}"
   }
 
+  /** Prints each streaming micro-batch's progress as it completes. */
+  private final class BatchPrinter extends StreamingQueryListener {
+    override def onQueryStarted(
+        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryTerminated(
+        e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    override def onQueryProgress(
+        e: StreamingQueryListener.QueryProgressEvent): Unit = {
+      val p = e.progress
+      def ms(k: String) =
+        Option(p.durationMs.get(k)).map(_.toString).getOrElse("-")
+      val phases = Seq("triggerExecution", "addBatch", "getBatch",
+        "latestOffset", "queryPlanning", "walCommit", "commitOffsets")
+      val state = p.stateOperators
+      println(s"-- batch -- ${p.name} batch=${p.batchId} " +
+        s"rows=${p.numInputRows} " + phases.map(k => s"$k=${ms(k)}").mkString(" ") +
+        s" stateRows=${state.map(_.numRowsTotal).mkString(",")}" +
+        s" stateCommitMs=${state.map(_.commitTimeMs).mkString(",")}")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
@@ -61,7 +88,10 @@ object Explain {
       }
     }
     val meter = new ShuffleMeter
-    if (run) spark.sparkContext.addSparkListener(meter)
+    if (run) {
+      spark.sparkContext.addSparkListener(meter)
+      spark.streams.addListener(new BatchPrinter)
+    }
     names.foreach { n =>
       println(s"\n========== $n ==========")
       // reset BEFORE building: many queries execute eagerly at
@@ -69,9 +99,11 @@ object Explain {
       // builds), so a post-construction reset would meter only the final
       // checkpoint re-scan and under-report the query's shuffle volume
       if (run) meter.reset()
+      val t0 = System.nanoTime()
       val df = SparkEntry.queries(n)(spark, sfDir)
       if (run) {
         df.queryExecution.toRdd.foreach(_ => ())
+        val wallS = (System.nanoTime() - t0) / 1e9
         println(df.queryExecution.executedPlan.toString)
         // the listener bus is async and has no public drain; poll until
         // the counter is stable (all task-end events for a finished job
@@ -86,7 +118,8 @@ object Explain {
         }
         // "construction+final" labels the window: for eagerly-materialized
         // queries the meter covers the build phase too, by design
-        println(s"-- metrics -- ${meter.report} (construction+final run)")
+        println(f"-- metrics -- ${meter.report} wall_s=$wallS%.2f " +
+          "(construction+final run)")
       } else df.explain("formatted")
     }
     spark.stop()

@@ -18,7 +18,7 @@ private[graft] object Harness {
     spark
   }
 
-  /** The scale-factor dir Bench, ExpPairedConf and StreamDiag run against:
+  /** The scale-factor dir Bench and ExpPairedConf run against:
     * SPARK_GRAFT_SF_DIR, default the graded bench SF. */
   def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

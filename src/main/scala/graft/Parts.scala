@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   * checkpointed RDDs freeze whatever count materialized, and
   * `parallelismFirst` refuses to shrink below the session parallelism.
   *
-  * The fix is the streaming round's `statePartitions` discipline applied
+  * The fix is the streaming state-store sizing discipline applied
   * to batch internals: the operator derives the partition count from the
   * relation it is about to iterate/aggregate — rows / rows-per-partition,
   * clamped to [1, session] — so small inputs get few partitions locally
@@ -30,15 +30,15 @@ import org.apache.spark.sql.SparkSession
   *
   * `graft.shufflePartitions` (session conf) overrides the derivation
   * everywhere — the runtime sweep hook for the paired A/B harness and
-  * the production escape hatch, exactly like `graft.statePartitions`.
+  * the production escape hatch; the streaming state stores are sized
+  * through [[forBytes]], so it overrides them too.
   */
 object Parts {
 
-  /** One lock for every scoped mutation of the session's
-    * shuffle-partitions conf (batch loop scoping and streaming state
-    * scoping both go through [[withShufflePartitions]]): scoped
-    * set/restore of a SESSION conf is only atomic if every writer
-    * serializes on the SAME monitor. */
+  /** One lock for every scoped mutation of a session conf (batch loop
+    * scoping, streaming state scoping and st06's state-store provider all
+    * go through [[withConf]]): scoped set/restore of a SESSION conf is
+    * only atomic if every writer serializes on the SAME monitor. */
   private val lock = new Object
 
   private val OverrideKey = "graft.shufflePartitions"
@@ -94,10 +94,16 @@ object Parts {
     * sequentially); operators that DO run internal legs concurrently
     * (d16) take one scope around all legs. */
   def withShufflePartitions[A](spark: SparkSession, n: Int)(f: => A): A =
+    withConf(spark, "spark.sql.shuffle.partitions", n.toString)(f)
+
+  /** Run `f` with the session conf `key` scoped to `value`, restoring the
+    * previous value (or unsetting it) after; same lock and contract as
+    * [[withShufflePartitions]]. */
+  private[graft] def withConf[A](spark: SparkSession, key: String,
+      value: String)(f: => A): A =
     lock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
       val prev = spark.conf.getOption(key)
-      spark.conf.set(key, n.toString)
+      spark.conf.set(key, value)
       try f finally {
         prev match {
           case Some(v) => spark.conf.set(key, v)

@@ -9,12 +9,14 @@ import org.apache.spark.sql.execution.LogicalRDD
   * name an artifact ([[apply]]); this class alone decides what it is
   * keyed on and what happens to it when superseded.
   *
-  *  - Key. An artifact's scope is the application id, the data dir and a
-  *    tag naming the artifact and its structural parameters; its
-  *    fingerprint is the content fingerprint of every input table it is
-  *    built from ([[Tables.tableFingerprint]]). The application id is in
-  *    the scope because checkpointed blocks and in-memory catalog tables
-  *    die with their SparkContext.
+  *  - Key. An artifact's scope is the data dir and a tag naming the
+  *    artifact and its structural parameters; its fingerprint is the
+  *    application id and the content fingerprint of every input table it
+  *    is built from ([[Tables.tableFingerprint]]). The application id is
+  *    in the fingerprint because checkpointed blocks and in-memory
+  *    catalog tables die with their SparkContext: the next application's
+  *    lookup supersedes the dead one's artifact instead of leaving it
+  *    live beside its own.
   *  - Supersede. A scope holds at most one live artifact. A lookup with a
   *    new fingerprint builds the new artifact and only then evicts the
   *    old one, so a failing build leaves the old artifact live. Builds
@@ -24,10 +26,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    later GC: every Dataset in it, inside tuples too, is unpersisted,
   *    and a checkpointed Dataset's RDD is unpersisted as well, because
   *    `Dataset.unpersist` only clears the cache manager and leaves
-  *    `localCheckpoint` blocks in place. Release does not block and never
-  *    fails the rebuild. A straggler still holding the evicted artifact
-  *    was reading data that has since been rewritten, so failing it fast
-  *    is intended.
+  *    `localCheckpoint` blocks in place. A Dataset of a stopped
+  *    SparkContext has nothing left to free and is not touched. Release
+  *    does not block and never fails the rebuild. A straggler still
+  *    holding the evicted artifact was reading data that has since been
+  *    rewritten, so failing it fast is intended.
   */
 final class SnapshotCache[V] {
 
@@ -41,8 +44,14 @@ final class SnapshotCache[V] {
   /** The artifact `tag` over the tables `inputs` of `t`, built by `build`
     * unless the live one was built from the same table contents. */
   def apply(t: Tables, tag: String, inputs: String*)(build: => V): V =
-    getOrElseUpdate(s"${t.spark.sparkContext.applicationId}:${t.dir}:$tag",
-      inputs.map(t.tableFingerprint).mkString(":"))(build)
+    perApplication(t.spark.sparkContext.applicationId, s"${t.dir}:$tag",
+      inputs.map(t.tableFingerprint))(build)
+
+  /** The entry for `scope` built in application `appId` from inputs with
+    * the content fingerprints `fps`. */
+  private[graft] def perApplication(appId: String, scope: String,
+      fps: Seq[String])(build: => V): V =
+    getOrElseUpdate(scope, (appId +: fps).mkString(":"))(build)
 
   private[graft] def getOrElseUpdate(scope: String, fingerprint: String)(
       build: => V): V = {
@@ -60,7 +69,7 @@ final class SnapshotCache[V] {
   }
 
   private def release(old: Any): Unit = old match {
-    case ds: Dataset[_] =>
+    case ds: Dataset[_] if !ds.sparkSession.sparkContext.isStopped =>
       try {
         ds.unpersist(blocking = false)
         ds.queryExecution.logical match {

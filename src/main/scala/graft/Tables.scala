@@ -110,15 +110,16 @@ object Tables {
     cachedSchema(spark, path)(spark.read.parquet(path).schema)
 
   /** Schema inference is a Spark job (a parallel footer merge) that would
-    * otherwise run on every query. The schema is cached per (application,
-    * path, inference confs) and invalidated by the path's [[fingerprint]],
-    * so a rewritten table is inferred afresh. */
+    * otherwise run on every query. The schema is cached per (path,
+    * inference confs) and invalidated by the application id and the
+    * path's [[fingerprint]], so a rewritten table is inferred afresh and a
+    * new application supersedes the previous one's entry. */
   private def cachedSchema(spark: SparkSession, path: String)(
       infer: => StructType): StructType = {
-    val scope = (Seq(spark.sparkContext.applicationId, path) ++
-      InferenceConfs.map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}"))
-      .mkString(":")
-    schemas.getOrElseUpdate(scope, fingerprint(spark, path))(infer)
+    val scope = (path +: InferenceConfs.map(k =>
+      s"$k=${spark.conf.getOption(k).getOrElse("")}")).mkString(":")
+    schemas.perApplication(spark.sparkContext.applicationId, scope,
+      Seq(fingerprint(spark, path)))(infer)
   }
 
   /** Normalizes the events `ts` column to a microsecond TimestampType

@@ -24,6 +24,36 @@ class HarnessSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"hand-rolled session builders: $offenders")
   }
 
+  test("under src/main only drain waits on or triggers a stream, and only " +
+    "writeChunks sets replay mtimes") {
+    // each token -> the one def allowed to use it
+    val owners = Map("awaitTermination" -> "drain",
+      "Trigger.AvailableNow" -> "drain", "setLastModified" -> "writeChunks")
+    val root = Paths.get(sys.props("user.dir"), "src", "main")
+    val walk = Files.walk(root)
+    val hits =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val lines = Files.readAllLines(p).asScala.toVector
+          for {
+            (line, i) <- lines.zipWithIndex
+            tok <- owners.keys if line.contains(tok)
+          } yield {
+            val enclosing = lines.take(i + 1).reverseIterator
+              .flatMap("""\bdef (\w+)""".r.findFirstMatchIn(_))
+              .map(_.group(1)).nextOption()
+            (tok, s"${root.relativize(p)}:${i + 1}", enclosing)
+          }
+        }.toList
+      finally walk.close()
+    owners.foreach { case (tok, fn) =>
+      val at = hits.filter(_._1 == tok)
+      assert(at.size == 1 && at.head._3.contains(fn) &&
+        at.head._2.startsWith("scala/graft/streaming/StreamQueries.scala:"),
+        s"$tok must appear once, in StreamQueries.$fn: $at")
+    }
+  }
+
   test("a query-name filter with an unknown name throws") {
     assert(Harness.queryNames("SPARK_GRAFT_BENCH_ONLY", None).isEmpty)
     assert(Harness.queryNames("SPARK_GRAFT_BENCH_ONLY",

@@ -35,8 +35,12 @@ class PartsSpec extends AnyFunSuite {
     try {
       assert(Parts.forRows(spark, 1L, 150000L) === 3)
       assert(Parts.forBytes(spark, 0L, 1L, floor = 4) === 3)
+      // the streaming state-store sizing input (source bytes past the
+      // session cap, floor 4): the one override wins over cap and floor
+      assert(Parts.forBytes(spark, 100L << 30, 256L << 20, floor = 4) === 3)
       spark.conf.set("graft.shufflePartitions", "auto")
       assert(Parts.forRows(spark, 1L, 150000L) === 1)
+      assert(Parts.forBytes(spark, 2L << 20, 256L << 20, floor = 4) === 4)
     } finally spark.conf.unset("graft.shufflePartitions")
   }
 

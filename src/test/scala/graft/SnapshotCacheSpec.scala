@@ -25,6 +25,15 @@ class SnapshotCacheSpec extends AnyFunSuite {
     assert(builds == 3)
   }
 
+  test("a new application's lookup supersedes the previous one's entry") {
+    val cache = new SnapshotCache[String]
+    assert(cache.perApplication("app-1", "dir:tag", Seq("fp"))("a") == "a")
+    assert(cache.perApplication("app-1", "dir:tag", Seq("fp"))("x") == "a")
+    assert(cache.perApplication("app-2", "dir:tag", Seq("fp"))("b") == "b")
+    assert(cache.size == 1,
+      "a stopped application's artifact must not stay live beside the next one's")
+  }
+
   test("scopes are independent") {
     val cache = new SnapshotCache[Int]
     assert(cache.getOrElseUpdate("s1", "fp")(1) == 1)

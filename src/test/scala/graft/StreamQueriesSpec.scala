@@ -15,6 +15,22 @@ class StreamQueriesSpec extends AnyFunSuite {
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
 
+  test("drain stops a query that outlives its bound and throws") {
+    val dir = graft.TempDirs.create("graft_drain_timeout")
+    spark.range(3).write.mode("overwrite").parquet(dir)
+    val slow = spark.readStream.schema(spark.read.parquet(dir).schema)
+      .parquet(dir).writeStream
+      .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+        Thread.sleep(120000L)
+      }
+    val e = intercept[IllegalStateException] {
+      StreamQueries.drain("slow sink", slow, timeoutMs = 2000L)
+    }
+    assert(e.getMessage.contains("slow sink did not terminate within 2s"))
+    assert(spark.streams.active.isEmpty,
+      s"a timed-out drain left queries running: ${spark.streams.active.toSeq}")
+  }
+
   test("st01 streaming window agg equals batch q30 exactly") {
     val streamed = StreamQueries.st01(spark, TestSpark.sfDir)
     val batch = Relational.q30(TestSpark.tables)
