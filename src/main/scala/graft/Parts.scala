@@ -91,8 +91,7 @@ object Parts {
     * caller may call a scoped helper). The residual exposure — an
     * unrelated concurrent batch query planned at n — does not arise
     * under the driver protocol (Verify/Bench/ScalaTest run queries
-    * sequentially); operators that DO run internal legs concurrently
-    * (d16) take one scope around all legs. */
+    * sequentially), and no operator submits jobs from driver threads. */
   def withShufflePartitions[A](spark: SparkSession, n: Int)(f: => A): A =
     withConf(spark, "spark.sql.shuffle.partitions", n.toString)(f)
 

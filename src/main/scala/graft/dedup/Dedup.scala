@@ -238,61 +238,18 @@ object Dedup {
     * argmax vs naive min-id) — answering the question an engineer
     * actually asks before picking τ: "how many clusters, how many docs
     * deduplicated, and how often does the survivor CHOICE change, at
-    * each operating point?". Scale shape: all four legs ride the ONE
+    * each operating point?". Scale shape: every τ rides the ONE
     * once-per-snapshot [[candidatePairs]] checkpoint (which carries the
     * verify counts precisely so re-thresholding is a filter, not a
-    * re-verify); each propagation runs over the monotonically SHRINKING
-    * τ-subgraph (O(near-dup mass at τ), never the corpus); the corpus
-    * quality scan runs ONCE against the union of all four labelings
-    * (labels are checkpointed scans, so the union re-executes nothing —
-    * the g03 lesson); thresholds with no surviving pairs are absent
-    * rows, matching SQL GROUP BY semantics. Full DuckDB oracle: the
-    * exact all-pairs relation filtered per τ, four unrolled min-label
-    * CTEs off ONE materialized pair computation, d15's window-rank
-    * survivorship, rolled up per τ. */
-  def d16(t: Tables): DataFrame = {
-    // materialized BEFORE the legs spawn (localCheckpoint is eager), so
-    // the four threads share one artifact instead of racing to build it
-    val (pairs, nPairs) = candidatePairsWithCount(t)
-    // The four propagations are independent chains of SMALL jobs whose
-    // rounds are driver-synchronized barriers — run serially, each
-    // leg's per-round scheduling latency is dead time on 31 idle cores.
-    // Submitting the legs from concurrent driver threads (the standard
-    // multi-job Spark pattern; a production sweep submits its operating
-    // points the same way) overlaps one leg's barrier with another
-    // leg's work: wall ≈ max(legs), not sum. Output is unchanged — the
-    // legs never share mutable state (each owns its labels chain and
-    // per-round Observations; the shared `pairs` checkpoint is
-    // read-only).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // one propagation-partition scope around ALL four legs (each leg's
-    // τ-subgraph is ≤ the full pair graph, so the full-graph derivation
-    // bounds them; per-leg scopes would serialize on Parts' lock and
-    // undo the concurrent-legs overlap)
-    val labeled = withPropagationParts(t, nPairs) {
-      val legs = D16Thresholds.map { tau =>
-        Future {
-          val at = pairs.filter(col("n_shared") * 10 >= col("n_union") * tau)
-          val (labels, _) = minLabelPropagation(at)
-          labels.select(lit(tau).as("threshold_x10"), col("id"), col("comp"))
-        }
-      }
-      Await.result(Future.sequence(legs), Duration.Inf)
-        .reduce(_ unionByName _)
-    }
-    val quality = t.documentsWide.select(col("doc_id").as("id"),
-      graft.functions.exprs.quality_scan(col("text"))
-        .getField("n_tokens").cast("bigint").as("ntk"))
-    labeled.join(quality.hint("SHUFFLE_HASH"), Seq("id"))
-      .groupBy(col("threshold_x10"), col("comp"))
-      .agg(count(lit(1)).as("n_members"),
-        max(struct(col("ntk"), (-col("id")).as("negid"), col("id")))
-          .as("best"),
-        min(col("id")).as("naive_id"),
-        min(struct(col("id"), col("ntk"))).getField("ntk")
-          .as("naive_ntk"))
+    * re-verify); [[clusterLabels]] labels all four τ-subgraphs in ONE
+    * propagation (O(near-dup mass), never the corpus), and the corpus
+    * quality scan runs ONCE against that labeling; thresholds with no
+    * surviving pairs are absent rows, matching SQL GROUP BY semantics.
+    * Full DuckDB oracle: the exact all-pairs relation filtered per τ,
+    * four unrolled min-label CTEs off ONE materialized pair computation,
+    * d15's window-rank survivorship, rolled up per τ. */
+  def d16(t: Tables): DataFrame =
+    clusterSurvivors(t, D16Thresholds)
       .groupBy(col("threshold_x10"))
       .agg(count(lit(1)).as("n_clusters"),
         sum(col("n_members")).as("n_docs"),
@@ -316,7 +273,6 @@ object Dedup {
           .as("h_9_16"),
         sum(when(col("n_members") >= 17, 1L).otherwise(0L)).as("h_17p"))
       .orderBy("threshold_x10")
-  }
 
   // d17's edit-distance threshold and title width (tokens). K=2 keeps
   // the PassJoin segment count at K+1=3 and the probe fan-out ≤ 75
@@ -515,22 +471,13 @@ object Dedup {
     candidatePairsWithCount(t)._1
 
   /** Per-round work in [[minLabelPropagation]] is the graph loops' cost
-    * class (narrow long pairs, hash join + partial min), so the same
+    * class (narrow node pairs, hash join + partial min), so the same
     * ~150K rows/partition amortization point applies (GraphOps
     * .RowsPerLoopPartition rationale; r16 paired sweep receipts). The
     * near-dup pair graph is O(near-dup mass) — hundreds of rows at
     * sf0.1, so the propagation runs single-partition locally while a
     * web-scale dup graph keeps the session width via the clamp cap. */
   private val RowsPerPropagationPartition = 150000L
-
-  /** Scope for the cluster consumers' propagation loops: shuffle
-    * partitions derived from the pair-graph row count (×2 for the
-    * undirected edge doubling). d16 takes ONE scope around all four
-    * concurrent legs — Parts' lock serializes scopes, and per-leg
-    * scoping would serialize the legs themselves. */
-  private def withPropagationParts[A](t: Tables, pairRows: Long)(f: => A): A =
-    graft.Parts.withShufflePartitions(t.spark,
-      graft.Parts.forRows(t.spark, pairRows * 2, RowsPerPropagationPartition))(f)
 
   /** Min-label propagation over an undirected pair list: each round,
     * every node takes the minimum component id among itself and its
@@ -548,8 +495,8 @@ object Dedup {
   private[graft] def minLabelPropagation(pairs: DataFrame,
                                          maxRounds: Int = 20): (DataFrame, Int) = {
     // materialize the edge list once — every propagation round joins it
-    // (projecting to the two endpoint columns first: callers may hand the
-    // wider verified relation that carries the n_shared/n_union counts)
+    // (projecting to the two endpoint columns first: a caller may hand
+    // a wider relation)
     val p2 = pairs.select(col("doc_a"), col("doc_b"))
     val edges = p2
       .union(p2.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
@@ -585,9 +532,58 @@ object Dedup {
     (labels, rounds)
   }
 
+  /** The threshold at which [[verifiedPairs]] verifies: the whole pair
+    * graph, the one d06 and d15 cluster. */
+  private val VerifiedTau = Seq(3L)
+
+  /** The near-dup cluster family's one labeling path: the connected
+    * components of the verified pair graph at each Jaccard threshold
+    * τ ∈ `taus` (tenths), as (threshold_x10, id, comp) with comp the
+    * component's min doc_id. A node is the struct (τ, doc_id), so no
+    * edge crosses thresholds and ONE [[minLabelPropagation]] run labels
+    * every τ: `min`, `least` and the equi-joins order a struct node
+    * lexicographically, and the run takes the most rounds any τ needs.
+    * It executes inside one shuffle-partition scope derived from the
+    * τ-tagged edge volume (×2 for the undirected edge doubling). */
+  private[graft] def clusterLabels(t: Tables, taus: Seq[Long]): DataFrame = {
+    val (pairs, nPairs) = candidatePairsWithCount(t)
+    def node(c: String) = struct(col("threshold_x10"), col(c).as("doc_id"))
+    val tagged = pairs
+      .select(col("*"), explode(typedLit(taus)).as("threshold_x10"))
+      .filter(col("n_shared") * 10 >= col("n_union") * col("threshold_x10"))
+      .select(node("doc_a").as("doc_a"), node("doc_b").as("doc_b"))
+    val parts = graft.Parts.forRows(t.spark, nPairs * taus.size * 2,
+      RowsPerPropagationPartition)
+    val (labels, _) = graft.Parts.withShufflePartitions(t.spark, parts)(
+      minLabelPropagation(tagged))
+    labels.select(col("id.threshold_x10").as("threshold_x10"),
+      col("id.doc_id").as("id"), col("comp.doc_id").as("comp"))
+  }
+
+  /** Both survivorship policies per near-dup cluster, keyed by
+    * (threshold_x10, comp): `n_members`, the quality survivor `best`
+    * (most tokens, ties to the smallest id), the naive min-id survivor
+    * `naive_id` and its token count `naive_ntk`. Quality joins in by
+    * doc_id — labels are O(near-dup mass), so the join is never
+    * corpus-sized. d15 is this relation at the verify threshold, d16
+    * rolls it up per τ. */
+  private def clusterSurvivors(t: Tables, taus: Seq[Long]): DataFrame = {
+    val quality = t.documentsWide.select(col("doc_id").as("id"),
+      graft.functions.exprs.quality_scan(col("text"))
+        .getField("n_tokens").cast("bigint").as("ntk"))
+    clusterLabels(t, taus).join(quality.hint("SHUFFLE_HASH"), Seq("id"))
+      .groupBy(col("threshold_x10"), col("comp"))
+      .agg(count(lit(1)).as("n_members"),
+        max(struct(col("ntk"), (-col("id")).as("negid"), col("id")))
+          .as("best"),
+        min(col("id")).as("naive_id"),
+        min(struct(col("id"), col("ntk"))).getField("ntk")
+          .as("naive_ntk"))
+  }
+
   /** d06 — duplicate clusters: connected components over the EXACT-
     * verified near-dup pair graph ([[verifiedPairs]], J ≥ 0.3), via
-    * [[minLabelPropagation]]. Survivor = min doc_id of the cluster
+    * [[clusterLabels]]. Survivor = min doc_id of the cluster
     * (matches d01/pipeline policy). Full SQL oracle (round-5 verdict
     * task 2): DuckDB recomputes the exact all-pairs edge set (the d04
     * oracle, recall argument verbatim) and clusters it with the g02
@@ -597,18 +593,14 @@ object Dedup {
     * converged min-id labels (Spark loops to convergence and THROWS
     * otherwise; the oracle unrolls 16 rounds, comfortably past any
     * near-dup cluster diameter at the graded SFs). */
-  def d06(t: Tables): DataFrame = {
-    val (pairs, nPairs) = candidatePairsWithCount(t)
-    val (labels, _) =
-      withPropagationParts(t, nPairs)(minLabelPropagation(pairs))
-    labels
+  def d06(t: Tables): DataFrame =
+    clusterLabels(t, VerifiedTau)
       .groupBy(col("comp").as("cluster_id"))
       .agg(count(lit(1)).cast("long").as("n_members"),
         sort_array(collect_list(col("id"))).as("members"))
       .select(col("cluster_id"), col("n_members"),
         concat_ws(",", col("members")).as("members"))
       .orderBy("cluster_id")
-  }
 
   /** d07 — winnowing-fingerprint near-dup candidates (the MOSS-style
     * overlap detector, complementing MinHash d02 and SimHash d03 with a
@@ -978,36 +970,21 @@ object Dedup {
     * so quality survivorship routinely changes the answer where
     * exact-dup groups (byte-identical members) rarely do — the
     * exact-vs-near delta between d14's and d15's `changed_survivors`
-    * columns is itself the audit. Cluster labels come from the shared
-    * minLabelPropagation (ONE definition with d06/the pipeline);
-    * quality joins in by doc_id (labels are O(near-dup mass), the join
-    * is never corpus-sized); both policies evaluate in one aggregate
-    * exactly like d14. Full SQL oracle (round-5 verdict task 2): the
-    * d06 unrolled min-label CTE composed with d14-style window ranks
-    * over the same exact (ntk desc, id asc) ordering; DedupFixtureSpec
-    * additionally pins survivor choice on the planted cluster. */
-  def d15(t: Tables): DataFrame = {
-    val (pairs, nPairs) = candidatePairsWithCount(t)
-    val (labels, _) =
-      withPropagationParts(t, nPairs)(minLabelPropagation(pairs))
-    val quality = t.documentsWide.select(col("doc_id").as("id"),
-      graft.functions.exprs.quality_scan(col("text"))
-        .getField("n_tokens").cast("bigint").as("ntk"))
-    labels.join(quality.hint("SHUFFLE_HASH"), Seq("id"))
-      .groupBy(col("comp").as("cluster_id"))
-      .agg(count(lit(1)).as("n_members"),
-        max(struct(col("ntk"), (-col("id")).as("negid"), col("id")))
-          .as("best"),
-        min(col("id")).as("naive_id"),
-        min(struct(col("id"), col("ntk"))).getField("ntk")
-          .as("naive_ntk"))
-      .select(col("cluster_id"), col("n_members"),
+    * columns is itself the audit. Labels and both policies come from
+    * [[clusterSurvivors]] at the verify threshold (the aggregate d16
+    * rolls up per τ), one aggregate exactly like d14. Full SQL oracle
+    * (round-5 verdict task 2): the d06 unrolled min-label CTE composed
+    * with d14-style window ranks over the same exact (ntk desc, id asc)
+    * ordering; DedupFixtureSpec additionally pins survivor choice on the
+    * planted cluster. */
+  def d15(t: Tables): DataFrame =
+    clusterSurvivors(t, VerifiedTau)
+      .select(col("comp").as("cluster_id"), col("n_members"),
         col("best.id").as("survivor_id"), col("naive_id"),
         when(col("best.id") =!= col("naive_id"), 1L).otherwise(0L)
           .as("changed"),
         col("best.ntk").as("survivor_ntk"), col("naive_ntk"))
       .orderBy("cluster_id")
-  }
 
   val queries: Map[String, Tables => DataFrame] = Map(
     "d15_neardup_survivor" -> d15,

@@ -538,47 +538,48 @@ object Analytics {
     * (min-satisfying-threshold over a generated range), proving the
     * procedural and declarative spellings converge. */
   def q93(t: Tables): DataFrame = {
-    t.spark.conf.set("spark.sql.scripting.enabled", "true")
     t.registerViews()
     // The script's ~6 bisection probes each run a job over the cached
     // ≤51-row histogram (qty ∈ [0,50] — bounded by DOMAIN, so this is
     // scale-independent: the histogram is 51 rows at 100 TB too). At the
     // session width every probe paid session-many near-empty tasks per
     // cached partition scan; one partition is the data-derived count
-    // (Parts.forRows over 51 rows) at every scale. The corpus-scale
-    // statements are unharmed: the histogram build and the final SELECT
-    // aggregate map-side first, so only O(groups × map tasks) partial
-    // rows ever cross their exchanges. Scope covers the whole script —
-    // scripting executes eagerly inside sql().
-    graft.Parts.withShufflePartitions(t.spark,
+    // (Parts.forRows over 51 rows) at every scale. The scope covers the
+    // script only — it executes eagerly inside sql() and returns the
+    // bisected threshold — so the corpus-scale final aggregate below
+    // plans at the session width.
+    val threshold = graft.Parts.withShufflePartitions(t.spark,
       graft.Parts.forRows(t.spark, 51L, 150000L)) {
-    t.spark.sql(
-      """BEGIN
-        |  DECLARE vtotal BIGINT DEFAULT 0;
-        |  DECLARE vlo BIGINT DEFAULT 0;
-        |  DECLARE vhi BIGINT DEFAULT 50;
-        |  DECLARE vmid BIGINT DEFAULT 0;
-        |  CREATE OR REPLACE TEMPORARY VIEW graft_q93_hist AS
-        |    SELECT CAST(l_quantity AS BIGINT) AS qty, count(*) AS cnt
-        |    FROM lineitem GROUP BY 1;
-        |  CACHE TABLE graft_q93_hist;
-        |  SET vtotal = (SELECT sum(cnt) FROM graft_q93_hist);
-        |  WHILE vlo < vhi DO
-        |    SET vmid = (vlo + vhi) DIV 2;
-        |    IF (SELECT coalesce(sum(cnt), 0) FROM graft_q93_hist
-        |        WHERE qty > vmid) * 10 < vtotal THEN
-        |      SET vhi = vmid;
-        |    ELSE
-        |      SET vlo = vmid + 1;
-        |    END IF;
-        |  END WHILE;
-        |  SELECT l_returnflag AS grp, vlo AS threshold,
-        |    count(*) AS n_above,
-        |    CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-        |  FROM lineitem WHERE CAST(l_quantity AS BIGINT) > vlo
-        |  GROUP BY l_returnflag ORDER BY grp;
-        |END""".stripMargin)
+      t.spark.sql(
+        """BEGIN
+          |  DECLARE vtotal BIGINT DEFAULT 0;
+          |  DECLARE vlo BIGINT DEFAULT 0;
+          |  DECLARE vhi BIGINT DEFAULT 50;
+          |  DECLARE vmid BIGINT DEFAULT 0;
+          |  CREATE OR REPLACE TEMPORARY VIEW graft_q93_hist AS
+          |    SELECT CAST(l_quantity AS BIGINT) AS qty, count(*) AS cnt
+          |    FROM lineitem GROUP BY 1;
+          |  CACHE TABLE graft_q93_hist;
+          |  SET vtotal = (SELECT sum(cnt) FROM graft_q93_hist);
+          |  WHILE vlo < vhi DO
+          |    SET vmid = (vlo + vhi) DIV 2;
+          |    IF (SELECT coalesce(sum(cnt), 0) FROM graft_q93_hist
+          |        WHERE qty > vmid) * 10 < vtotal THEN
+          |      SET vhi = vmid;
+          |    ELSE
+          |      SET vlo = vmid + 1;
+          |    END IF;
+          |  END WHILE;
+          |  SELECT vlo;
+          |END""".stripMargin).head().getLong(0)
     }
+    t.spark.sql(
+      """SELECT l_returnflag AS grp, :threshold AS threshold,
+        |  count(*) AS n_above,
+        |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
+        |FROM lineitem WHERE CAST(l_quantity AS BIGINT) > :threshold
+        |GROUP BY l_returnflag ORDER BY grp""".stripMargin,
+      Map("threshold" -> threshold))
   }
 
   /** q94 — the custom Catalyst optimizer rule

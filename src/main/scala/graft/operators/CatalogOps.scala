@@ -33,18 +33,20 @@ object CatalogOps {
 
   private[graft] def bucketedTables(t: Tables): (String, String) =
     tableCache(t, "q81", "orders", "lineitem") {
-      // fresh names per build: the warehouse dir outlives the session's
-      // in-memory catalog, so a name reused by a later application would
-      // collide with the earlier one's table files
+      // fresh names per build: a catalog may outlive the application, so
+      // a name reused by a later one would collide with this one's table.
+      // The files live in a temp dir, not the warehouse dir, so they go
+      // at JVM exit like every other per-application artifact.
       val suffix = java.util.UUID.randomUUID().toString.replace("-", "")
       val ordersTable = s"graft_cat_orders_$suffix"
       val lineitemTable = s"graft_cat_lineitem_$suffix"
+      val root = graft.TempDirs.create("graft_q81_tables")
       t.orders.write.mode(SaveMode.Overwrite)
-        .option("compression", "snappy")
+        .option("compression", "snappy").option("path", s"$root/orders")
         .bucketBy(NBuckets, "o_orderkey").sortBy("o_orderkey")
         .saveAsTable(ordersTable)
       t.lineitem.write.mode(SaveMode.Overwrite)
-        .option("compression", "snappy")
+        .option("compression", "snappy").option("path", s"$root/lineitem")
         .bucketBy(NBuckets, "l_orderkey").sortBy("l_orderkey")
         .saveAsTable(lineitemTable)
       // the Hive workflow's ANALYZE TABLE step: persist row/size stats

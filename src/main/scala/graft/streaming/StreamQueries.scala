@@ -151,12 +151,19 @@ object StreamQueries {
     * schema cache (Tables.schemaOf). FileStreamSource requires a
     * directory base path: when the table is a single file (the testdata
     * layout), stream the parent dir filtered to that file; a
-    * directory-shaped table streams directly. */
-  private def tableStream(spark: SparkSession, dir: String,
+    * directory-shaped table streams directly. The shape is read through
+    * the Hadoop `FileSystem` of the path's scheme (local, `file:`, HDFS,
+    * S3, ...). */
+  private[graft] def tableStream(spark: SparkSession, dir: String,
       table: String): DataFrame = {
     val path = s"$dir/$table.parquet"
     val reader = spark.readStream.schema(graft.Tables.schemaOf(spark, path))
-    if (new java.io.File(path).isDirectory) reader.parquet(path)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val isDir =
+      try p.getFileSystem(spark.sessionState.newHadoopConf())
+        .getFileStatus(p).isDirectory
+      catch { case _: java.io.FileNotFoundException => false }
+    if (isDir) reader.parquet(path)
     else reader.option("pathGlobFilter", s"$table.parquet").parquet(dir)
   }
 
@@ -968,9 +975,11 @@ object StreamQueries {
     // real cluster the apply cost IS the bytes written (local[32]
     // micro-batches are orchestration-dominated, so wall-clock
     // understates the pruning win — the bytes column doesn't)
+    val applyBytes = graft.Parts.pathBytes(spark, snapRoot) -
+      graft.Parts.pathBytes(spark, s"$snapRoot/v0")
     System.err.println(f"[st18] seed ${(t1 - t0) / 1e9}%.2fs, " +
       f"apply ${(t2 - t1) / 1e9}%.2fs, " +
-      s"applyBytes=${dirBytes(snapRoot) - dirBytes(s"$snapRoot/v0")}")
+      s"applyBytes=$applyBytes")
     graft.operators.Analytics.mergeRollup(
       spark.read.parquet(s"$snapRoot/v${latestVersion(snapRoot)}"))
   }
@@ -1104,16 +1113,6 @@ object StreamQueries {
       (0 until UpsertBuckets).map(b => b -> s"files/v0/_bkt=$b").toMap)
   }
 
-  /** Recursive on-disk size — the engine-visible write cost of a
-    * snapshot chain (the st18/st19 apply-phase receipt). */
-  private[graft] def dirBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-      else f.length()
-    walk(new java.io.File(path))
-  }
-
   /** Latest manifest version under the pruned layout. */
   private[graft] def latestManifest(snapRoot: String): Long =
     Option(new java.io.File(snapRoot).listFiles()).getOrElse(Array.empty)
@@ -1150,9 +1149,11 @@ object StreamQueries {
     val t1 = System.nanoTime()
     upsertSessionPruned(spark, cdir, snapRoot)
     val t2 = System.nanoTime()
+    val applyBytes = graft.Parts.pathBytes(spark, s"$snapRoot/files") -
+      graft.Parts.pathBytes(spark, s"$snapRoot/files/v0")
     System.err.println(f"[st19] seed ${(t1 - t0) / 1e9}%.2fs, " +
       f"apply ${(t2 - t1) / 1e9}%.2fs, " +
-      s"applyBytes=${dirBytes(s"$snapRoot/files") - dirBytes(s"$snapRoot/files/v0")}")
+      s"applyBytes=$applyBytes")
     graft.operators.Analytics.mergeRollup(
       readPrunedSnapshot(spark, snapRoot, latestManifest(snapRoot)))
   }

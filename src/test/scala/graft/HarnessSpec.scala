@@ -54,6 +54,38 @@ class HarnessSpec extends AnyFunSuite {
     }
   }
 
+  test("under src/main no operator submits jobs from driver threads, and " +
+    "only clusterLabels runs minLabelPropagation") {
+    val root = Paths.get(sys.props("user.dir"), "src", "main")
+    val walk = Files.walk(root)
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => root.relativize(p).toString ->
+          Files.readAllLines(p).asScala.toVector).toList
+      finally walk.close()
+    val concurrent = files.collect {
+      case (f, lines) if lines.exists(_.contains("scala.concurrent")) => f
+    }
+    assert(concurrent.isEmpty, s"scala.concurrent under src/main: $concurrent")
+    val calls = for {
+      (f, lines) <- files
+      (line, i) <- lines.zipWithIndex
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("//") &&
+        !code.startsWith("/**") &&
+        """\bminLabelPropagation\(""".r.findFirstIn(code).nonEmpty &&
+        !code.contains("def minLabelPropagation(")
+    } yield {
+      // the enclosing object member (two-space indent), not a local def
+      val enclosing = lines.take(i + 1).reverseIterator
+        .flatMap("""^  \S.*\bdef (\w+)""".r.findFirstMatchIn(_))
+        .map(_.group(1)).nextOption()
+      (s"$f:${i + 1}", enclosing)
+    }
+    assert(calls.size == 1 && calls.head._2.contains("clusterLabels"),
+      s"minLabelPropagation must have one caller, Dedup.clusterLabels: $calls")
+  }
+
   test("a query-name filter with an unknown name throws") {
     assert(Harness.queryNames("SPARK_GRAFT_BENCH_ONLY", None).isEmpty)
     assert(Harness.queryNames("SPARK_GRAFT_BENCH_ONLY",

@@ -63,8 +63,8 @@ class PartsSpec extends AnyFunSuite {
       Parts.withShufflePartitions(spark, 2)(throw new RuntimeException("x"))
     }
     assert(spark.conf.get(key) === before)
-    // reentrant: a scoped caller may call a scoped helper (d16's outer
-    // scope around minLabelPropagation-calling legs)
+    // reentrant: a scoped caller may call a scoped helper (st06's
+    // state-store provider scope around withStateParts)
     val nested = Parts.withShufflePartitions(spark, 3) {
       Parts.withShufflePartitions(spark, 2)(spark.conf.get(key)) ->
         spark.conf.get(key)

@@ -125,20 +125,19 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("d16 scans the document corpus ONCE: the quality projection " +
-    "joins the union of the four checkpointed labelings, not per leg") {
-    // the four tau-legs are checkpointed RDD scans by the time the
+    "joins the one checkpointed labeling of all four thresholds") {
+    // the tau-tagged labels are a checkpointed RDD scan by the time the
     // terminal plan runs; the expensive term is the quality_scan over
-    // documents, which must appear against ONE parquet scan — a per-leg
-    // quality join would plan four
+    // documents, which must appear against ONE parquet scan
     val plan = dedup.Dedup.d16(TestSpark.tables)
       .queryExecution.executedPlan.toString
     val docScans = "documents\\.parquet".r.findAllIn(plan).length
     assert(docScans == 1,
       s"d16 must scan documents exactly once (got $docScans):\n$plan")
-    // and the four legs arrive as checkpointed scans (no re-derived
+    // and the labels arrive as a checkpointed scan (no re-derived
     // LSH/gram chain in the terminal plan)
-    assert("Scan ExistingRDD".r.findAllIn(plan).length >= 4,
-      s"d16's legs must be checkpointed label scans:\n$plan")
+    assert("Scan ExistingRDD".r.findAllIn(plan).length >= 1,
+      s"d16's labels must be a checkpointed label scan:\n$plan")
   }
 
   test("d17 plans ONE segment-key equi-join feeding bare-id candidates, " +
@@ -498,6 +497,37 @@ class PlanAuditSpec extends AnyFunSuite {
     for (k <- Seq("distinct_count", "min", "max"))
       assert(stats.get(k).exists(_ != "NULL"),
         s"ANALYZE should persist column $k, got $stats")
+  }
+
+  test("catalog tables keep their files outside the warehouse dir") {
+    val t = TestSpark.tables
+    val (ordersTable, lineitemTable) = operators.CatalogOps.bucketedTables(t)
+    val warehouse = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
+      .stripSuffix("/") + "/"
+    for (name <- Seq(ordersTable, lineitemTable)) {
+      val meta = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(name))
+      val loc = meta.location.getPath
+      assert(!loc.startsWith(warehouse),
+        s"$name lives under the warehouse dir $warehouse: $loc")
+      assert(loc.startsWith(sys.props("java.io.tmpdir")),
+        s"$name should live in a temp dir removed at exit: $loc")
+    }
+  }
+
+  test("q93 bisects at one shuffle partition and aggregates at the " +
+    "session width") {
+    val out = operators.Analytics.q93(TestSpark.tables)
+    val plan = out.queryExecution.executedPlan.toString
+    assert("hashpartitioning\\(l_returnflag#\\d+, 4\\)".r
+      .findFirstIn(plan).nonEmpty,
+      s"q93's final aggregate must plan at the session width:\n$plan")
+    val hist = spark.table("graft_q93_hist").queryExecution.executedPlan
+      .toString
+    assert("hashpartitioning\\(.*, 1\\)".r.findFirstIn(hist).nonEmpty,
+      s"q93's bisection histogram must build at one partition:\n$hist")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
   }
 
   test("co-bucketed catalog tables sort-merge join with zero Exchange") {

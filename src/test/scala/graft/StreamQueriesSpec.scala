@@ -31,6 +31,21 @@ class StreamQueriesSpec extends AnyFunSuite {
       s"a timed-out drain left queries running: ${spark.streams.active.toSeq}")
   }
 
+  test("a directory-shaped table given as a file: URI streams its part " +
+    "files") {
+    val dir = new java.io.File(graft.TempDirs.create("graft_dir_table"))
+    val docs = spark.read.parquet(s"${TestSpark.sfDir}/documents.parquet")
+    docs.repartition(2).write
+      .parquet(new java.io.File(dir, "documents.parquet").toString)
+    val uri = dir.toURI.toString.stripSuffix("/")
+    assert(uri.startsWith("file:"))
+    StreamQueries.drain("dir-shaped table",
+      StreamQueries.tableStream(spark, uri, "documents").writeStream
+        .format("memory").queryName("graft_dir_table_sink"))
+    val streamed = canon(spark.table("graft_dir_table_sink"))
+    assert(streamed.nonEmpty && streamed == canon(docs))
+  }
+
   test("st01 streaming window agg equals batch q30 exactly") {
     val streamed = StreamQueries.st01(spark, TestSpark.sfDir)
     val batch = Relational.q30(TestSpark.tables)
