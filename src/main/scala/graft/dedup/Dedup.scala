@@ -543,21 +543,23 @@ object Dedup {
     * edge crosses thresholds and ONE [[minLabelPropagation]] run labels
     * every τ: `min`, `least` and the equi-joins order a struct node
     * lexicographically, and the run takes the most rounds any τ needs.
-    * It executes inside one shuffle-partition scope derived from the
-    * τ-tagged edge volume (×2 for the undirected edge doubling). */
+    * It executes in one scoped session ([[graft.Parts.scoped]]) sized
+    * from the τ-tagged edge volume (×2 for the undirected edge
+    * doubling). */
   private[graft] def clusterLabels(t: Tables, taus: Seq[Long]): DataFrame = {
-    val (pairs, nPairs) = candidatePairsWithCount(t)
+    val (_, nPairs) = candidatePairsWithCount(t)
     def node(c: String) = struct(col("threshold_x10"), col(c).as("doc_id"))
-    val tagged = pairs
-      .select(col("*"), explode(typedLit(taus)).as("threshold_x10"))
-      .filter(col("n_shared") * 10 >= col("n_union") * col("threshold_x10"))
-      .select(node("doc_a").as("doc_a"), node("doc_b").as("doc_b"))
-    val parts = graft.Parts.forRows(t.spark, nPairs * taus.size * 2,
-      RowsPerPropagationPartition)
-    val (labels, _) = graft.Parts.withShufflePartitions(t.spark, parts)(
-      minLabelPropagation(tagged))
-    labels.select(col("id.threshold_x10").as("threshold_x10"),
-      col("id.doc_id").as("id"), col("comp.doc_id").as("comp"))
+    val labels = graft.Parts.scoped(t, graft.Parts.forRows(t.spark,
+        nPairs * taus.size * 2, RowsPerPropagationPartition)) { c =>
+      val tagged = graft.Parts.home(c.spark, candidatePairs(t))
+        .select(col("*"), explode(typedLit(taus)).as("threshold_x10"))
+        .filter(col("n_shared") * 10 >= col("n_union") * col("threshold_x10"))
+        .select(node("doc_a").as("doc_a"), node("doc_b").as("doc_b"))
+      minLabelPropagation(tagged)._1
+    }
+    graft.Parts.home(t.spark, labels)
+      .select(col("id.threshold_x10").as("threshold_x10"),
+        col("id.doc_id").as("id"), col("comp.doc_id").as("comp"))
   }
 
   /** Both survivorship policies per near-dup cluster, keyed by
@@ -872,7 +874,7 @@ object Dedup {
     // persisted: both the per-source totals and the pair matrix consume
     // the distinct gram relation — without it the gram explode +
     // distinct shuffle runs twice (self-review catch; halves the query)
-    val grams = t.documentsWide
+    val cached = t.documentsWide
       .withColumn("toks", expr(graft.functions.exprs.wsTokensSql))
       .select(col("source"), explode(ngram_hashes(col("toks"), 5)).as("g"))
       .distinct()
@@ -884,9 +886,10 @@ object Dedup {
     // regressed — the per-gram collect_set + HOF pair expansion
     // amortizes a task at ~30K rows, a heavier cost class than the
     // graph loops' plain min/sum rounds)
-    val nGrams = grams.count()
-    val result = graft.Parts.withShufflePartitions(t.spark,
-      graft.Parts.forRows(t.spark, nGrams, 30000L)) {
+    val nGrams = cached.count()
+    val result = graft.Parts.scoped(t,
+        graft.Parts.forRows(t.spark, nGrams, 30000L)) { c =>
+      val grams = graft.Parts.home(c.spark, cached)
       val perSrc = grams.groupBy("source").agg(count(lit(1)).as("n_grams"))
       val pairs = grams.groupBy("g")
         .agg(sort_array(collect_set(col("source"))).as("srcs"))
@@ -910,7 +913,7 @@ object Dedup {
         .orderBy("src_a", "src_b")
       graft.CacheHygiene.materializeAndRelease(out, Seq(grams))
     }
-    result
+    graft.Parts.home(t.spark, result)
   }
 
   /** d14 — quality-aware dedup survivorship: WHICH copy survives a

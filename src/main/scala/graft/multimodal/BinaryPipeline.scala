@@ -1507,34 +1507,9 @@ object BinaryPipeline {
   // recomputes the frame-walk arithmetic from these same rules):
   //   image id: w = id%40+8, h = id%30+8, pixel bytes from splitmix64
   //   audio id: ns = id%1024+256 samples at 8 kHz, s16 from splitmix64
-  // Corpus size: 2000 is the GRADED corpus every frozen bench row and
-  // spec expectation assumes; the env knob exists for decade audits
-  // (GRAFT_NMEDIA=20000 scales the synthetic corpus AND every
-  // generated oracle consistently — m02/m06/st16's SQL twins are pure
-  // functions of this value), never for driver runs.
-  /** The GRADED corpus size every frozen bench row, spec expectation and
-    * driver oracle assumes. Bench refuses NMedia != GradedNMedia unless
-    * GRAFT_NMEDIA_AUDIT=1 (ADVICE r10: the knob scales corpus AND
-    * oracles together, so nothing else would flag a stray env var). */
-  private[graft] val GradedNMedia = 2000
-  private[graft] val NMedia: Int =
-    sys.env.get("GRAFT_NMEDIA").map(_.toInt).getOrElse(GradedNMedia)
-
-  /** Entry-point guard (ADVICE r10): refuse a non-graded corpus size in
-    * Bench/Verify unless the run is a DECLARED decade audit
-    * (GRAFT_NMEDIA_AUDIT=1), and log the effective size prominently so
-    * the workload is self-labeling — a stray GRAFT_NMEDIA would
-    * otherwise rescale the graded corpus and every generated oracle
-    * consistently and pass every compare at the wrong size. */
-  private[graft] def assertGradedCorpusOrAudit(entry: String): Unit = {
-    if (NMedia != GradedNMedia &&
-        !sys.env.get("GRAFT_NMEDIA_AUDIT").contains("1"))
-      sys.error(s"GRAFT_NMEDIA=$NMedia != graded corpus size $GradedNMedia; " +
-        "frozen bench rows and driver oracles assume the graded size — set " +
-        "GRAFT_NMEDIA_AUDIT=1 for a deliberate decade audit")
-    println(s"[$entry] effective media corpus NMedia=$NMedia" +
-      (if (NMedia != GradedNMedia) " (NON-GRADED — audit run)" else ""))
-  }
+  /** The synthetic media corpus size: ids 0 until NMedia. The m02/m06/
+    * st16 SQL twins and tools/media_oracle.py are pure functions of it. */
+  private[graft] val NMedia = 2000
   private[graft] def imgW(id: Long): Int = (id % 40 + 8).toInt
   private[graft] def imgH(id: Long): Int = (id % 30 + 8).toInt
   private[graft] def wavN(id: Long): Int = (id % 1024 + 256).toInt

@@ -539,18 +539,16 @@ object Analytics {
     * procedural and declarative spellings converge. */
   def q93(t: Tables): DataFrame = {
     t.registerViews()
-    // The script's ~6 bisection probes each run a job over the cached
-    // ≤51-row histogram (qty ∈ [0,50] — bounded by DOMAIN, so this is
-    // scale-independent: the histogram is 51 rows at 100 TB too). At the
-    // session width every probe paid session-many near-empty tasks per
-    // cached partition scan; one partition is the data-derived count
-    // (Parts.forRows over 51 rows) at every scale. The scope covers the
-    // script only — it executes eagerly inside sql() and returns the
-    // bisected threshold — so the corpus-scale final aggregate below
-    // plans at the session width.
-    val threshold = graft.Parts.withShufflePartitions(t.spark,
-      graft.Parts.forRows(t.spark, 51L, 150000L)) {
-      t.spark.sql(
+    // The script's ~6 bisection probes each scan the cached ≤51-row
+    // histogram (qty ∈ [0,50], bounded by domain at every scale), so it
+    // runs at one partition in its own session: the script executes
+    // eagerly inside sql() and returns the threshold, and the corpus-scale
+    // final aggregate below plans at the session width
+    // (plans/q93_sql_scripting_scope.txt). Each run caches the histogram
+    // afresh, so the scope uncaches it.
+    val threshold = graft.Parts.scoped(t,
+        graft.Parts.forRows(t.spark, 51L, 150000L)) { c =>
+      try c.spark.sql(
         """BEGIN
           |  DECLARE vtotal BIGINT DEFAULT 0;
           |  DECLARE vlo BIGINT DEFAULT 0;
@@ -572,6 +570,7 @@ object Analytics {
           |  END WHILE;
           |  SELECT vlo;
           |END""".stripMargin).head().getLong(0)
+      finally c.spark.sql("UNCACHE TABLE IF EXISTS graft_q93_hist")
     }
     t.spark.sql(
       """SELECT l_returnflag AS grp, :threshold AS threshold,

@@ -78,36 +78,36 @@ object GraphOps {
     }
   }
 
+  /** The edge artifact homed on `t`'s session: built on whichever
+    * session first asked for it, it would otherwise carry that session
+    * into a scoped loop's plans. */
   private def undirectedTradeEdges(t: Tables): DataFrame =
-    undirectedTradeEdgesWithCount(t)._1
+    graft.Parts.home(t.spark, undirectedTradeEdgesWithCount(t)._1)
 
   /** Rows that amortize one task's scheduling overhead at the per-round
     * join+aggregate's per-row cost (narrow long pairs, hash join probe +
-    * partial min/sum). Calibrated by the r16 paired sweep over the
-    * 1.17M-row sf0.1 edge relation: 32→8 partitions read 0.40–0.61
-    * medians on the loop operators while 8→4 and 8→2 regressed them
-    * (plans/r16/exp_sp32v8_inv.log, exp_sp8v4.log, exp_sp8v2.log), so
-    * ~150K rows/partition is where per-task overhead stops dominating.
-    * At the cap the derivation hands back the session width unchanged —
-    * a cluster deployment keeps its own parallelism. */
+    * partial min/sum); ~150K rows/partition is where the r16 paired sweep
+    * over the sf0.1 edge relation stopped gaining (OPTIMIZATION_r16.md
+    * §C). */
   private val RowsPerLoopPartition = 150000L
 
-  /** The iteration loops execute inside this scope (materializeAndRelease
-    * runs the plan via localCheckpoint), so every per-round shuffle —
-    * the edge repartition, the rank/label/frontier exchanges, the
-    * per-round aggregates — lands at the edge-volume-derived count
-    * instead of the session's static width (guide §2.2: partitions
-    * follow bytes, not cores). */
-  private def withLoopParts[A](t: Tables)(f: => A): A = {
+  /** Builds a loop operator's plan and executes it (materializeAndRelease
+    * checkpoints it) in a session scoped to the edge-volume-derived width,
+    * so every per-round shuffle — the edge repartition, the rank, label
+    * and frontier exchanges, the per-round aggregates — runs at that
+    * width instead of the session's. */
+  private def inLoopScope(t: Tables)(
+      plan: Tables => (DataFrame, Seq[DataFrame])): DataFrame = {
     val (_, edgeRows) = undirectedTradeEdgesWithCount(t)
-    graft.Parts.withShufflePartitions(t.spark,
-      graft.Parts.forRows(t.spark, edgeRows, RowsPerLoopPartition))(f)
+    val out = graft.Parts.scoped(t,
+        graft.Parts.forRows(t.spark, edgeRows, RowsPerLoopPartition)) { c =>
+      val (p, caches) = plan(c)
+      graft.CacheHygiene.materializeAndRelease(p, caches)
+    }
+    graft.Parts.home(t.spark, out)
   }
 
-  def g01(t: Tables): DataFrame = withLoopParts(t) {
-    val (plan, caches) = g01Plan(t)
-    graft.CacheHygiene.materializeAndRelease(plan, caches)
-  }
+  def g01(t: Tables): DataFrame = inLoopScope(t)(g01Plan)
 
   /** The g01 plan + its internal caches — split out so PlanAuditSpec
     * audits the plan that executes under the checkpoint, and the public
@@ -159,10 +159,7 @@ object GraphOps {
     * pure int64 min — no rounding surface at all. Same Pregel layout as
     * g01: edges partitioned+persisted once, each round shuffles only the
     * O(nodes) label vector. */
-  def g02(t: Tables): DataFrame = withLoopParts(t) {
-    val (plan, caches) = g02Plan(t)
-    graft.CacheHygiene.materializeAndRelease(plan, caches)
-  }
+  def g02(t: Tables): DataFrame = inLoopScope(t)(g02Plan)
 
   private[graft] def g02Plan(t: Tables): (DataFrame, Seq[DataFrame]) = {
     val und = undirectedTradeEdges(t)
@@ -323,10 +320,7 @@ object GraphOps {
     * persisted once, never re-scanned. Output is the bounded community
     * histogram (size + member-id checksum), never asserted on raw
     * per-node rows. */
-  def g04(t: Tables): DataFrame = withLoopParts(t) {
-    val (plan, caches) = g04Plan(t)
-    graft.CacheHygiene.materializeAndRelease(plan, caches)
-  }
+  def g04(t: Tables): DataFrame = inLoopScope(t)(g04Plan)
 
   private[graft] def g04Plan(t: Tables): (DataFrame, Seq[DataFrame]) = {
     val und = undirectedTradeEdges(t)
@@ -401,10 +395,7 @@ object GraphOps {
     * persisted once, each round shuffles only the O(reached) frontier.
     * Output is the bounded per-distance histogram (count + id checksum).
     * Oracle: the identical unrolled min-plus in DuckDB. */
-  def g05(t: Tables): DataFrame = withLoopParts(t) {
-    val (plan, caches) = g05Plan(t)
-    graft.CacheHygiene.materializeAndRelease(plan, caches)
-  }
+  def g05(t: Tables): DataFrame = inLoopScope(t)(g05Plan)
 
   private[graft] def g05Plan(t: Tables): (DataFrame, Seq[DataFrame]) = {
     val und = undirectedTradeEdges(t)
@@ -504,10 +495,7 @@ object GraphOps {
     * one cached O(nodes) relation and plan depth stays constant per
     * round. Per-round cost: one O(edges) semi-join pass + an O(nodes)
     * degree aggregate. */
-  def g07(t: Tables): DataFrame = withLoopParts(t) {
-    val (plan, caches) = g07Plan(t)
-    graft.CacheHygiene.materializeAndRelease(plan, caches)
-  }
+  def g07(t: Tables): DataFrame = inLoopScope(t)(g07Plan)
 
   private[graft] def g07Plan(t: Tables): (DataFrame, Seq[DataFrame]) = {
     val edges = undirectedTradeEdges(t)

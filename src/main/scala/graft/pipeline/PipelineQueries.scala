@@ -273,8 +273,10 @@ object PipelineQueries {
     // session's static width is pure per-task overhead (r16 paired
     // sweep: 32→8 read 0.684 on this query, 8→4 another 0.821)
     val nDocs = docs.count()
-    graft.Parts.withShufflePartitions(t.spark,
-      graft.Parts.forRows(t.spark, nDocs, 150000L)) { p05Tail(docs) }
+    graft.Parts.home(t.spark, graft.Parts.scoped(t,
+        graft.Parts.forRows(t.spark, nDocs, 150000L)) { c =>
+      p05Tail(graft.Parts.home(c.spark, docs))
+    })
   }
 
   private def p05Tail(docs: DataFrame): DataFrame = {

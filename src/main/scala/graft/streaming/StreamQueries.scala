@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
@@ -43,15 +43,38 @@ object StreamQueries {
     * query loudly instead of hanging the grading run. */
   private val DrainTimeoutMs = 10 * 60 * 1000L
 
-  /** The one way a graded streaming query runs: start `writer` under
-    * AvailableNow, which processes every available input in
-    * rate-limited micro-batches and then stops, and wait for it. A query
-    * that has not terminated within `timeoutMs` is stopped and reported
-    * as an error; a query that failed rethrows its failure. Returns the
-    * terminated query (st09 reads its progress). */
-  private[graft] def drain(what: String, writer: DataStreamWriter[_],
-      timeoutMs: Long = DrainTimeoutMs): StreamingQuery = {
-    val q = writer.trigger(Trigger.AvailableNow()).start()
+  /** Held only across [[drain]]'s `start()`, while the stream's confs
+    * are set on the caller's session. */
+  private val startLock = new Object
+
+  /** The one way a graded streaming query runs: start `stream` into the
+    * sink `sink` configures, under AvailableNow, which processes every
+    * available input in rate-limited micro-batches and then stops, and
+    * wait for it. A query that has not terminated within `timeoutMs` is
+    * stopped and reported as an error; a query that failed rethrows its
+    * failure. Returns the terminated query (st09 reads its progress).
+    *
+    * `confs` are the stream's own confs (its state width, its state-store
+    * provider). Spark clones the caller's session when the query starts
+    * and the stream runs on that clone, so they are set on the caller's
+    * session only across `start()` and restored right after, also when
+    * `start()` throws. The query itself starts on the caller's session,
+    * whose listeners see its progress. */
+  private[graft] def drain(what: String, stream: DataFrame,
+      confs: Map[String, String] = Map.empty,
+      timeoutMs: Long = DrainTimeoutMs)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val spark = stream.sparkSession
+    val writer = sink(stream.writeStream).trigger(Trigger.AvailableNow())
+    val q = startLock.synchronized {
+      val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try writer.start()
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
     if (!q.awaitTermination(timeoutMs)) {
       q.stop()
       throw new IllegalStateException(
@@ -65,10 +88,10 @@ object StreamQueries {
     * st03's types, st05's nations): the memory sink materializes every
     * result row ON THE DRIVER, single-threaded, each batch. */
   private def runMemory(spark: SparkSession, df: DataFrame, prefix: String,
-      mode: String = "complete"): DataFrame = {
+      confs: Map[String, String], mode: String = "complete"): DataFrame = {
     val name = s"${prefix}_${sinkId.incrementAndGet()}"
-    drain(name, df.writeStream.queryName(name).outputMode(mode)
-      .format("memory"))
+    drain(name, df, confs)(
+      _.queryName(name).outputMode(mode).format("memory"))
     spark.table(name)
   }
 
@@ -85,9 +108,9 @@ object StreamQueries {
     * the emit-everything-at-end-of-stream semantics the finite-history
     * exactness gate needs. */
   private def runCompleteDistributed(spark: SparkSession, agg: DataFrame,
-      prefix: String): DataFrame = {
+      prefix: String, confs: Map[String, String]): DataFrame = {
     val out = graft.TempDirs.create(s"graft_$prefix")
-    drain(prefix, agg.writeStream
+    drain(prefix, agg, confs)(_
       .outputMode("complete")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // static overwrite: each batch replaces the whole dir (see
@@ -103,9 +126,9 @@ object StreamQueries {
     * rows, sessions, alerts, candidate pairs), never through the
     * driver. */
   private def runAppendDistributed(spark: SparkSession, df: DataFrame,
-      prefix: String): DataFrame = {
+      prefix: String, confs: Map[String, String]): DataFrame = {
     val out = graft.TempDirs.create(s"graft_$prefix")
-    drain(prefix, df.writeStream
+    drain(prefix, df, confs)(_
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode("append").parquet(out)
@@ -126,25 +149,19 @@ object StreamQueries {
     * from the same checkpoint must re-execute that batch under the same
     * id and land byte-identically in the idempotent sink. */
   private def durableSession(what: String, stream: DataFrame,
-      checkpoint: Option[String], crashMarker: Option[java.io.File])(
-      sink: (DataFrame, Long) => Unit): Unit = {
-    val w = stream.writeStream.outputMode("append")
-    drain(what, checkpoint.fold(w)(c => w.option("checkpointLocation", c))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(batch, batchId)
-        if (batchId == CrashBatch && crashMarker.exists(_.createNewFile()))
-          throw new IllegalStateException(
-            s"$what: injected crash between sink write and batch commit")
-      })
-  }
-
-  /** The events `ts` column is read as a raw nano LONG under this conf on
-    * the TIMESTAMP(NANOS) generation; GraftSession.build sets it, this
-    * covers a caller-supplied session that lacks it. */
-  private def nanosAsLong(spark: SparkSession): Unit =
-    if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-          .forall(_ != "true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      checkpoint: Option[String], crashMarker: Option[java.io.File],
+      confs: Map[String, String] = Map.empty)(
+      sink: (DataFrame, Long) => Unit): Unit =
+    drain(what, stream, confs) { w =>
+      checkpoint.fold(w)(c => w.option("checkpointLocation", c))
+        .outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          sink(batch, batchId)
+          if (batchId == CrashBatch && crashMarker.exists(_.createNewFile()))
+            throw new IllegalStateException(
+              s"$what: injected crash between sink write and batch commit")
+        }
+    }
 
   /** Streaming read of one table of `dir`. Streaming sources require an
     * explicit schema: it comes from the batch facade's per-application
@@ -171,10 +188,8 @@ object StreamQueries {
     * the batch facade (Tables.normalizeTs): a raw nano LONG is rebuilt as
     * a microsecond timestamp, a native TIMESTAMP_NTZ is cast to the
     * session-TZ timestamp. */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    nanosAsLong(spark)
+  private def eventsStream(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.normalizeTs(tableStream(spark, dir, "events"))
-  }
 
   /** The one replay-dir writer: each chunk becomes ONE parquet file
     * `chunk_NN.parquet` in `out`, with modification times 60 s apart in
@@ -199,10 +214,11 @@ object StreamQueries {
     out
   }
 
-  /** The one replay-dir reader: the schema from the chunk footers, one
-    * chunk file per micro-batch. */
+  /** The one replay-dir reader: the schema from the batch facade's
+    * per-application schema cache (Tables.schemaOf), one chunk file per
+    * micro-batch. */
   private def replayStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(spark.read.parquet(dir).schema)
+    spark.readStream.schema(graft.Tables.schemaOf(spark, dir))
       .option("maxFilesPerTrigger", "1").parquet(dir)
 
   /** Multi-micro-batch OUT-OF-ORDER replay (round-5 verdict task 1) —
@@ -244,10 +260,11 @@ object StreamQueries {
 
   private def replayDir(spark: SparkSession, dir: String,
       sentinelTypes: Seq[String]): String = {
-    replayCache(graft.Tables(spark, dir),
-        s"events:${sentinelTypes.mkString(",")}", "events") {
-      nanosAsLong(spark)
-      val raw = spark.read.parquet(s"$dir/events.parquet")
+    val t = graft.Tables(spark, dir)
+    replayCache(t, s"events:${sentinelTypes.mkString(",")}", "events") {
+      // the raw `ts` (nano LONG or native timestamp): the replay keeps the
+      // source's own unit, and replayedEventsStream normalizes it
+      val raw = t.table("events")
       val cols = raw.columns.map(col)
       // ordering position + jitter in the SOURCE ts unit (raw nanos for
       // the TIMESTAMP(NANOS) generation, micros for native timestamps)
@@ -297,35 +314,25 @@ object StreamQueries {
     }
   }
 
-  /** Scale-adaptive state-store partition count, scoped around `f`
-    * (which must START AND DRAIN its streaming query inside). Every
-    * stateful operator instantiates one state store PER shuffle
-    * partition PER micro-batch, and each store's commit writes+fsyncs a
-    * delta file: at 32 partitions the st04 profile showed ~70–180 s of
-    * aggregate state-commit time per batch against ~10 K state rows —
-    * pure per-instance overhead, 0.3 MB of actual state. Stores are
-    * sized to the SOURCE volume feeding the stateful query — a monotone
-    * proxy for state volume (state rows are bounded by source rows)
-    * knowable BEFORE any job runs: ceil(source bytes / 256 MB), floored
-    * at 4 (the commit-pipelining minimum below which the r15 paired
-    * sweep, plans/r15/exp_sp4.log and exp_sp4b.log, measured no win at
-    * any probe SF) and capped at the session width. At every probe SF
-    * the derivation lands on 4 (events.parquet: 2 MB sf0.1 / 12 MB sf1
-    * / 116 MB sf10); a deployment whose per-snapshot source volume grows
-    * past ~1 GB scales stores toward its own session width.
-    * `graft.shufflePartitions` overrides it ([[graft.Parts.forBytes]]).
-    * The scope is the batch operators' one
-    * ([[graft.Parts.withShufflePartitions]]): the conf is read at query
-    * START, so the surrounding batch plans still run at the session
-    * width, and an isolated child session cannot host these queries,
-    * because several join the stream against batch-side relations built
-    * on the parent session. */
+  /** A stream's state width as a [[drain]] conf: every stateful operator
+    * instantiates one state store per shuffle partition per micro-batch,
+    * and each store's commit writes and fsyncs a delta file, so stores are
+    * sized to the SOURCE volume feeding the query (state rows are bounded
+    * by source rows, and the volume is known before any job runs):
+    * ceil(source bytes / 256 MB), floored at 4, capped at the session
+    * width. At every probe SF the derivation lands on 4 (events.parquet:
+    * 2 MB sf0.1 / 12 MB sf1 / 116 MB sf10). Receipts for the floor and
+    * the per-query widths: OPTIMIZATION_r15.md (state partitions) and
+    * OPTIMIZATION_r16.md item 7. */
   private val StateBytesPerPartition = 256L << 20
-  private def withStateParts[A](spark: SparkSession, dir: String,
-      table: String)(f: => A): A =
-    graft.Parts.withShufflePartitions(spark, graft.Parts.forBytes(spark,
+  private def stateWidth(spark: SparkSession, dir: String,
+      table: String): Map[String, String] =
+    width(graft.Parts.forBytes(spark,
       graft.Parts.pathBytes(spark, s"$dir/$table.parquet"),
-      StateBytesPerPartition, floor = 4))(f)
+      StateBytesPerPartition, floor = 4))
+
+  private def width(n: Int): Map[String, String] =
+    Map("spark.sql.shuffle.partitions" -> n.toString)
 
   /** The normalized event stream over the shuffled multi-file replay:
     * one chunk per micro-batch, out-of-order across batches within the
@@ -341,14 +348,10 @@ object StreamQueries {
     * FileStreamSource + streaming state store instead of a batch scan.
     * Oracle: q30's SQL verbatim. */
   def st01(spark: SparkSession, dir: String): DataFrame =
-    // 8 state partitions (r15): st01 ran at the session's 32 — 32 state
-    // stores per micro-batch for O(windows×types) state rows. Paired
-    // same-JVM A/B (plans/r15/exp_statepart.log): 0.676 median ratio.
-    // Same scale rationale as st02/st04 (stores ∝ state volume, not CPUs).
-    withStateParts(spark, dir, "events") {
-      runMemory(spark,
-        EventsStream.windowedCounts(eventsStream(spark, dir)), "st01_windows")
-    }.orderBy("hour_ts", "event_type")
+    // O(windows×types) state rows (state width: OPTIMIZATION_r15.md)
+    runMemory(spark, EventsStream.windowedCounts(eventsStream(spark, dir)),
+      "st01_windows", stateWidth(spark, dir, "events"))
+      .orderBy("hour_ts", "event_type")
 
   /** st02 — native session_window sessionization through the streaming
     * engine, rolled up to q31's per-user summary. session_end = last event
@@ -364,11 +367,9 @@ object StreamQueries {
     * emits the fully-merged session set at end-of-stream. Oracle: q31's
     * SQL verbatim, batch-boundary-independent. */
   def st02(spark: SparkSession, dir: String): DataFrame = {
-    val sessions = withStateParts(spark, dir, "events") {
-      runCompleteDistributed(spark,
-        EventsStream.sessionWindows(replayedEventsStream(spark, dir, Nil)),
-        "st02_sessions")
-    }
+    val sessions = runCompleteDistributed(spark,
+      EventsStream.sessionWindows(replayedEventsStream(spark, dir, Nil)),
+      "st02_sessions", stateWidth(spark, dir, "events"))
     sessions
       .select(col("user_id"), col("n_events"),
         (unix_timestamp(col("session_end")) -
@@ -403,11 +404,9 @@ object StreamQueries {
       .dropDuplicates("user_id", "event_type")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_users"))
-    // 8 state partitions (r15): dedup state is O(users×types), the
-    // aggregation O(types) — paired A/B 0.636 (exp_statepart.log)
-    withStateParts(spark, dir, "events") {
-      runMemory(spark, deduped, "st03_dedup")
-    }.orderBy("event_type")
+    // dedup state O(users×types), aggregation O(types)
+    runMemory(spark, deduped, "st03_dedup", stateWidth(spark, dir, "events"))
+      .orderBy("event_type")
   }
 
   /** st04 — stream-stream interval join through the join state store:
@@ -447,9 +446,8 @@ object StreamQueries {
     // can exist (wm − 1 h exceeds every future row's ts by more than
     // the 10 min join window) — so append-mode output must equal the
     // batch self-join whatever the batch boundaries.
-    withStateParts(spark, dir, "events") {
-      runMemory(spark, joined, "st04_join", mode = "append")
-    }
+    runMemory(spark, joined, "st04_join", stateWidth(spark, dir, "events"),
+        mode = "append")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy("user_id")
@@ -465,7 +463,7 @@ object StreamQueries {
     * result is engine-stable at any scale — no post-sink rounding of a
     * cross-engine double sum (the q81/q83 drift class). */
   def st05(spark: SparkSession, dir: String): DataFrame = {
-    val nation = spark.read.parquet(s"$dir/nation.parquet")
+    val nation = graft.Tables(spark, dir).nation
       .select(col("n_nationkey"), col("n_name"))
     val enriched = eventsStream(spark, dir)
       .select((col("user_id") % 25).as("nk"), col("value"))
@@ -473,11 +471,9 @@ object StreamQueries {
       .groupBy(col("n_name"))
       .agg(count(lit(1)).as("n_events"),
         sum(expr("cast(round(value * 100) as bigint)")).as("sum_value_cents"))
-    // 8 state partitions (r15): aggregation state is O(nations)=25 rows
-    // — paired A/B 0.741 (exp_statepart.log)
-    withStateParts(spark, dir, "events") {
-      runMemory(spark, enriched, "st05_enrich")
-    }.orderBy("n_name")
+    // aggregation state O(nations) = 25 rows
+    runMemory(spark, enriched, "st05_enrich", stateWidth(spark, dir, "events"))
+      .orderBy("n_name")
   }
 
   /** st06 — transformWithState (Spark 4 arbitrary-state v2,
@@ -497,34 +493,31 @@ object StreamQueries {
     * CDC-log + compaction shape). */
   def st06(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.Parts.withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      val ev = eventsStream(spark, dir)
-        .withColumn("value",
-          expr("cast(cast(round(value * 100) as bigint) as double)"))
-        .as[EventsStream.Event]
-      val out = graft.TempDirs.create("graft_st06_updates")
-      // 8 state partitions (r15): transformWithState keeps O(users)
-      // state rows; 32 RocksDB instances per batch was pure per-store
-      // overhead — paired A/B 0.681 (exp_statepart.log)
-      withStateParts(spark, dir, "events") {
-        drain("st06", EventsStream.runningStats(ev)
-          .toDF("user_id", "n_events", "cents")
-          .writeStream
-          .outputMode("update")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(out)
-          })
-      }
-      // update mode emits ≤1 row per (user, batch), so max_by picks the
-      // single row of each user's last touching batch — their final state
-      spark.read.parquet(out)
-        .groupBy("user_id")
-        .agg(expr("max_by(n_events, batch_id)").as("n_events"),
-          expr("max_by(cents, batch_id)").cast("long").as("sum_value_cents"))
-        .orderBy("user_id")
+    val ev = eventsStream(spark, dir)
+      .withColumn("value",
+        expr("cast(cast(round(value * 100) as bigint) as double)"))
+      .as[EventsStream.Event]
+    val out = graft.TempDirs.create("graft_st06_updates")
+    // transformWithState keeps O(users) state rows in RocksDB, one
+    // instance per state partition per batch (OPTIMIZATION_r15.md)
+    drain("st06", EventsStream.runningStats(ev)
+        .toDF("user_id", "n_events", "cents"),
+      stateWidth(spark, dir, "events") +
+        ("spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+      _.outputMode("update")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          batch.withColumn("batch_id", lit(batchId))
+            .write.mode("append").parquet(out)
+        }
     }
+    // update mode emits ≤1 row per (user, batch), so max_by picks the
+    // single row of each user's last touching batch — their final state
+    spark.read.parquet(out)
+      .groupBy("user_id")
+      .agg(expr("max_by(n_events, batch_id)").as("n_events"),
+        expr("max_by(cents, batch_id)").cast("long").as("sum_value_cents"))
+      .orderBy("user_id")
   }
 
   /** st07 — LEFT-OUTER stream-stream interval join, driver-graded: clicks
@@ -566,9 +559,8 @@ object StreamQueries {
         col("p_ts") >= col("c_ts") &&
         col("p_ts") <= col("c_ts") + expr("INTERVAL 10 MINUTES"),
       "left_outer")
-    withStateParts(spark, dir, "events") {
-      runAppendDistributed(spark, joined, "st07_rows")
-    }
+    runAppendDistributed(spark, joined, "st07_rows",
+        stateWidth(spark, dir, "events"))
       .filter(col("user_id") >= 0) // drop the sentinel pair
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_rows"), count(col("p_ts")).as("n_matched"))
@@ -604,11 +596,9 @@ object StreamQueries {
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .as[EventsStream.Event]
-    withStateParts(spark, dir, "events") {
-      runAppendDistributed(spark,
+    runAppendDistributed(spark,
         EventsStream.sessionizeStateful(ev, ReplayJitterSec * 1000).toDF(),
-        "st08_sessions")
-    }
+        "st08_sessions", stateWidth(spark, dir, "events"))
       .filter(col("user_id") >= 0) // drop the sentinel's own session
       .select(col("user_id"), col("n_events"),
         (unix_timestamp(col("session_end")) -
@@ -642,7 +632,7 @@ object StreamQueries {
           .as("sum_value_cents"),
         coalesce(sum(when(col("value") < 0, 1L).otherwise(0L)), lit(0L))
           .as("n_negative"))
-    val q = drain("st09", observed.writeStream.format("noop"))
+    val q = drain("st09", observed)(_.format("noop"))
     // recentProgress retains the last spark.sql.streaming
     // .numRecentProgressUpdates batches (default 100) — ample for the
     // single-file replay here; a long-lived production query accumulates
@@ -681,11 +671,10 @@ object StreamQueries {
       .dropDuplicates("source", "fp")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_unique"))
-    // scoped partitions (r15): dedup+agg state is O(fps)+O(sources);
-    // paired A/B 32→8 0.630, 8→4 0.934 (exp_fb8.log, exp_fb4.log)
-    withStateParts(spark, dir, "documents") {
-      runMemory(spark, survivors, "st10_curation")
-    }.orderBy("source")
+    // dedup + aggregation state O(fps) + O(sources)
+    runMemory(spark, survivors, "st10_curation",
+        stateWidth(spark, dir, "documents"))
+      .orderBy("source")
   }
 
   /** One LSH bucket of the STANDING streaming index (st14): the true
@@ -709,8 +698,9 @@ object StreamQueries {
     * events replay. */
   private def replayedDocumentsStream(spark: SparkSession,
       dir: String): DataFrame = {
-    val rd = replayCache(graft.Tables(spark, dir), "docs", "documents") {
-      val raw = spark.read.parquet(s"$dir/documents.parquet")
+    val t = graft.Tables(spark, dir)
+    val rd = replayCache(t, "docs", "documents") {
+      val raw = t.documents
       val cols = raw.columns.map(col)
       writeChunks(graft.TempDirs.create("graft_replay_documents"),
         (0 until ReplayFiles).map(i =>
@@ -791,9 +781,8 @@ object StreamQueries {
           state.update(st)
           out.iterator
       }
-    val all = withStateParts(spark, dir, "documents") {
-      runAppendDistributed(spark, hits.toDF(), "st14_pairs")
-    }
+    val all = runAppendDistributed(spark, hits.toDF(), "st14_pairs",
+      stateWidth(spark, dir, "documents"))
     val hot = all.filter(col("docA") === -1L)
       .select(col("bandId"), col("bandSig")).distinct()
     all.filter(col("docA") >= 0)
@@ -862,36 +851,35 @@ object StreamQueries {
     // idempotent by construction: a re-executed batch OVERWRITES its own
     // directory with the deterministically-recomputed rows
     def run(what: String): Unit =
-      durableSession(s"st15 $what", joined, Some(ckpt), Some(marker)) {
+      durableSession(s"st15 $what", joined, Some(ckpt), Some(marker),
+          stateWidth(spark, dir, "events")) {
         (batch, batchId) =>
           batch.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
       }
-    withStateParts(spark, dir, "events") {
-      // phase-resolved timing (round-8 verdict item 5): the single st15
-      // number hid which leg costs what — the pre-crash run scales with
-      // history (it processes batches 0..crash), the recovery leg must
-      // NOT (one re-executed micro-batch + state-store load + the
-      // remaining chunks). Printing both makes history-independence a
-      // measurement instead of an inference.
-      val t0 = System.nanoTime()
-      val run1Died =
-        try { run("crash run"); false }
-        catch {
-          case e: org.apache.spark.sql.streaming.StreamingQueryException
-            if e.getMessage.contains("injected crash") => true
-        }
-      val t1 = System.nanoTime()
-      if (!run1Died)
-        throw new IllegalStateException(
-          "st15: first run finished without hitting the injected crash — " +
-            "the recovery path was never exercised, refusing to grade")
-      run("recovery run") // must drain cleanly
-      val t2 = System.nanoTime()
-      lastSt15Phases = Some(((t1 - t0) / 1e9, (t2 - t1) / 1e9))
-      System.err.println(
-        f"[st15] pre-crash run ${(t1 - t0) / 1e9}%.2fs, " +
-          f"recovery run ${(t2 - t1) / 1e9}%.2fs")
-    }
+    // phase-resolved timing (round-8 verdict item 5): the single st15
+    // number hid which leg costs what — the pre-crash run scales with
+    // history (it processes batches 0..crash), the recovery leg must
+    // NOT (one re-executed micro-batch + state-store load + the
+    // remaining chunks). Printing both makes history-independence a
+    // measurement instead of an inference.
+    val t0 = System.nanoTime()
+    val run1Died =
+      try { run("crash run"); false }
+      catch {
+        case e: org.apache.spark.sql.streaming.StreamingQueryException
+          if e.getMessage.contains("injected crash") => true
+      }
+    val t1 = System.nanoTime()
+    if (!run1Died)
+      throw new IllegalStateException(
+        "st15: first run finished without hitting the injected crash — " +
+          "the recovery path was never exercised, refusing to grade")
+    run("recovery run") // must drain cleanly
+    val t2 = System.nanoTime()
+    lastSt15Phases = Some(((t1 - t0) / 1e9, (t2 - t1) / 1e9))
+    System.err.println(
+      f"[st15] pre-crash run ${(t1 - t0) / 1e9}%.2fs, " +
+        f"recovery run ${(t2 - t1) / 1e9}%.2fs")
     spark.read.parquet(s"$outDir/batch_*")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
@@ -963,7 +951,7 @@ object StreamQueries {
     val cdir = mergeReplayDir(spark, dir)
     val snapRoot = graft.TempDirs.create("graft_st18_snap")
     val t0 = System.nanoTime()
-    spark.read.parquet(s"$dir/customer.parquet")
+    graft.Tables(spark, dir).customer
       .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       .write.mode("overwrite").parquet(s"$snapRoot/v0")
     val t1 = System.nanoTime()
@@ -1098,7 +1086,7 @@ object StreamQueries {
     * manifest entry resolves. */
   private[graft] def seedPrunedSnapshot(spark: SparkSession, dir: String,
       snapRoot: String): Unit = {
-    val base = spark.read.parquet(s"$dir/customer.parquet")
+    val base = graft.Tables(spark, dir).customer
       .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
       .withColumn("_bkt", pmod(col("c_custkey"), lit(UpsertBuckets)))
     base.repartition(UpsertBuckets, col("_bkt"))
@@ -1198,11 +1186,9 @@ object StreamQueries {
       .filter(col("h32") * lit(10000L) < col("weight_bp") * lit(4294967296L))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_kept"), sum(col("n_tokens")).as("kept_tokens"))
-    // scoped partitions (r15): agg state is O(sources)=20 rows; paired
-    // A/B 32→8 0.682, 8→4 0.927 (exp_fb8.log, exp_fb4.log)
-    withStateParts(spark, dir, "documents") {
-      runMemory(spark, kept, "st11_sample")
-    }.orderBy("source")
+    // aggregation state O(sources) = 20 rows
+    runMemory(spark, kept, "st11_sample", stateWidth(spark, dir, "documents"))
+      .orderBy("source")
   }
 
   /** One buffered event awaiting finality: epoch millis + sub-second
@@ -1329,9 +1315,8 @@ object StreamQueries {
         col("event_type"), col("value"))
       .as[EventsStream.Event]
     val crossings = thresholdCrossings(ev, 100000L)
-    withStateParts(spark, dir, "events") {
-      runAppendDistributed(spark, crossings.toDF(), "st12_alerts")
-    }
+    runAppendDistributed(spark, crossings.toDF(), "st12_alerts",
+        stateWidth(spark, dir, "events"))
       .filter(col("user_id") >= 0) // drop the sentinel user
       .select(col("user_id"), col("n_events_at_cross"),
         col("cents_at_cross"))
@@ -1356,11 +1341,10 @@ object StreamQueries {
           .as("sum_value_cents"))
       .orderBy(col("sum_value_cents").desc, col("user_id"))
       .limit(10)
-    // 8 state partitions (r15): aggregation state is O(users) —
-    // paired A/B 0.690 (exp_statepart.log)
-    withStateParts(spark, dir, "events") {
-      runMemory(spark, totals, "st13_leaderboard")
-    }.orderBy(col("sum_value_cents").desc, col("user_id"))
+    // aggregation state O(users)
+    runMemory(spark, totals, "st13_leaderboard",
+        stateWidth(spark, dir, "events"))
+      .orderBy(col("sum_value_cents").desc, col("user_id"))
   }
 
   /** Once-per-session chunked replay dir for the synthetic media corpus
@@ -1417,11 +1401,10 @@ object StreamQueries {
       .agg(count(lit(1)).as("n_media"),
         sum(col("plen")).as("total_bytes"),
         sum(col("csum")).as("content_sum"))
-    // scoped partitions (r15): the rollup state is 4 rows, the decode is
-    // map-side; paired A/B 32→8 0.551, 8→4 0.952 (exp_fb8/fb4.log)
-    graft.Parts.withShufflePartitions(spark, 4) {
-      runMemory(spark, agg, "st16_media")
-    }.orderBy("modality", "container")
+    // the rollup state is 4 rows and the decode map-side, so 4 state
+    // partitions at any scale (OPTIMIZATION_r15.md)
+    runMemory(spark, agg, "st16_media", width(4))
+      .orderBy("modality", "container")
   }
 
   /** The incoming admission split as a 4-chunk multi-batch stream, split
@@ -1439,11 +1422,11 @@ object StreamQueries {
     * first-arrival-wins admission coincide with p06's min-doc_id
     * survivorship, so the p06 oracle holds for every chunking. */
   private[graft] def incomingReplayDir(spark: SparkSession, dir: String,
-      nChunks: Int = 4): String =
-    replayCache(graft.Tables(spark, dir), s"incoming:$nChunks",
-        "documents") {
+      nChunks: Int = 4): String = {
+    val t = graft.Tables(spark, dir)
+    replayCache(t, s"incoming:$nChunks", "documents") {
       import graft.functions.exprs.canon_fp
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = t.documents
       val split = substring(md5(col("doc_id").cast("string")), 32, 1)
       val incoming = docs
         .filter(col("doc_id") % 50 =!= 0 && split >= "d")
@@ -1460,6 +1443,7 @@ object StreamQueries {
         .write.mode("overwrite").parquet(s"$out.index")
       out
     }
+  }
 
   /** st17 — p06's incremental-admission decision as a MICRO-BATCHED
     * STREAM: the production shape of daily ingest, where each
@@ -1489,16 +1473,13 @@ object StreamQueries {
     * the accumulated stage survivors (O(admitted), not O(corpus)). */
   def st17(spark: SparkSession, dir: String): DataFrame = {
     val rd = incomingReplayDir(spark, dir)
-    val bench = spark.read.parquet(s"$dir/documents.parquet")
+    val bench = graft.Tables(spark, dir).documents
       .filter(col("doc_id") % 50 === 0)
     val out = graft.TempDirs.create("graft_st17_stages")
-    // scoped partitions (r15): the foreachBatch stage plans shuffle
-    // O(batch) rows and streaming plans get no AQE coalescing, so the
-    // session's static 32 meant 32 tasks + 32 files per tiny stage
-    // write; paired A/B 32→8 0.801, 8→4 0.995 (exp_fb8/fb4.log).
-    withStateParts(spark, dir, "documents") {
-      admissionSession(spark, rd, rd + ".index", bench, out)
-    }
+    // the foreachBatch stage plans run in the stream's session, at its
+    // width: they shuffle O(batch) rows and get no AQE coalescing
+    admissionSession(spark, rd, rd + ".index", bench, out,
+      confs = stateWidth(spark, dir, "documents"))
     admissionStagesRollup(spark, out)
   }
 
@@ -1557,7 +1538,8 @@ object StreamQueries {
       tag: String = "",
       checkpoint: Option[String] = None,
       crashMarker: Option[java.io.File] = None,
-      compactThreshold: Int = SeenFpsCompactThreshold): Unit = {
+      compactThreshold: Int = SeenFpsCompactThreshold,
+      confs: Map[String, String] = Map.empty): Unit = {
     require(tag.isEmpty || !tag.last.isDigit,
       s"admission tag '$tag' must not end in a digit: batch_<tag><id> " +
         "names would collide across sessions (ADVICE r13)")
@@ -1582,7 +1564,7 @@ object StreamQueries {
     def stageDir(s: String) = s"$out/$s"
     val incoming = replayStream(spark, incomingDir)
     durableSession("st17 admission session", incoming, checkpoint,
-        crashMarker) { (batch, batchId) =>
+        crashMarker, confs) { (batch, batchId) =>
       val sp = batch.sparkSession
       // qual/novel persisted like p06's stages (r15): each feeds its
       // own stage sink AND the next stage's lineage, so unpersisted

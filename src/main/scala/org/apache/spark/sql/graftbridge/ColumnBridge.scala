@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * bridge lives in `org.apache.spark.sql.classic.ExpressionUtils`, which is
   * private[sql]. This shim (in the sql namespace, like other public Spark
   * extension libraries) re-exports just the two conversions the graft
-  * custom expressions need.
+  * custom expressions need, plus the Dataset and session constructors
+  * below.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -22,4 +23,11 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A session with a copy of `spark`'s conf, temp views and registered
+    * functions that shares its SparkContext and cache manager
+    * (`cloneSession` is private[sql]). */
+  def fork(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 }

@@ -86,6 +86,61 @@ class HarnessSpec extends AnyFunSuite {
       s"minLabelPropagation must have one caller, Dedup.clusterLabels: $calls")
   }
 
+  /** Every line of every source file under src/main, by path relative to
+    * src/main/scala. */
+  private def mainSources: List[(String, Vector[String])] = {
+    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString ->
+        Files.readAllLines(p).asScala.toVector).toList
+    finally walk.close()
+  }
+
+  test("under src/main only graftbridge clones a session, and only the " +
+    "scoped session and drain set a conf at query time") {
+    val files = mainSources
+    val clones = files.collect {
+      case (f, lines) if lines.exists(_.contains("cloneSession")) => f
+    }
+    assert(clones.nonEmpty &&
+      clones.forall(_.startsWith("org/apache/spark/sql/graftbridge/")),
+      s"cloneSession outside graftbridge: $clones")
+    // file -> the defs that may set a session conf ("*": a command-line
+    // main setting the confs its user names before its queries run);
+    // Tables.events keeps the nanosAsLong fallback for a foreign session
+    val owners = Map(
+      "graft/Parts.scala" -> Set("scoped"),
+      "graft/streaming/StreamQueries.scala" -> Set("drain"),
+      "graft/Tables.scala" -> Set("events"),
+      "graft/Explain.scala" -> Set("*"),
+      "graft/ExpPairedConf.scala" -> Set("*"))
+    val setters = for {
+      (f, lines) <- files
+      (line, i) <- lines.zipWithIndex
+      if """\bconf\.(set|unset)\(""".r.findFirstIn(line).nonEmpty
+    } yield {
+      val enclosing = lines.take(i + 1).reverseIterator
+        .flatMap("""\bdef (\w+)""".r.findFirstMatchIn(_))
+        .map(_.group(1)).nextOption().getOrElse("")
+      (s"$f:${i + 1}", f, enclosing, line)
+    }
+    val stray = setters.filterNot { case (_, f, d, _) =>
+      owners.get(f).exists(ds => ds("*") || ds(d))
+    }
+    assert(stray.isEmpty, s"session confs set outside their owners: $stray")
+    val widths = setters.filter(_._4.contains("spark.sql.shuffle.partitions"))
+    assert(widths.map(_._3) == List("scoped"),
+      s"only Parts.scoped may set the shuffle width by name: $widths")
+    val gone = Seq("graft.shufflePartitions", "GRAFT_NMEDIA",
+      "withShufflePartitions", "withStateParts", "Parts.withConf")
+    val left = for {
+      (f, lines) <- files
+      tok <- gone if lines.exists(_.contains(tok))
+    } yield s"$tok in $f"
+    assert(left.isEmpty, s"deleted options or scopes still named: $left")
+  }
+
   test("a query-name filter with an unknown name throws") {
     assert(Harness.queryNames("SPARK_GRAFT_BENCH_ONLY", None).isEmpty)
     assert(Harness.queryNames("SPARK_GRAFT_BENCH_ONLY",
@@ -107,6 +162,7 @@ class HarnessSpec extends AnyFunSuite {
     assert(spark.conf.get(GraftSession.CkptChecksumKey) == "false")
     assert(spark.conf.get(GraftSession.CodegenCacheKey) ==
       GraftSession.CodegenCacheMaxEntries.toString)
+    assert(spark.conf.get(GraftSession.ArtifactIsolationKey) == "false")
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode")
       .equalsIgnoreCase("dynamic"))
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")

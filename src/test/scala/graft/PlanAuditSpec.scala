@@ -518,16 +518,27 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("q93 bisects at one shuffle partition and aggregates at the " +
     "session width") {
-    val out = operators.Analytics.q93(TestSpark.tables)
+    // the cache manager names a cached table's blocks after the table
+    def histCaches = spark.sparkContext.getPersistentRDDs.values
+      .count(r => Option(r.name).exists(_.contains("graft_q93_hist")))
+    val (out, planned) =
+      TestSpark.plannedDuring(operators.Analytics.q93(TestSpark.tables))
     val plan = out.queryExecution.executedPlan.toString
     assert("hashpartitioning\\(l_returnflag#\\d+, 4\\)".r
       .findFirstIn(plan).nonEmpty,
       s"q93's final aggregate must plan at the session width:\n$plan")
-    val hist = spark.table("graft_q93_hist").queryExecution.executedPlan
-      .toString
-    assert("hashpartitioning\\(.*, 1\\)".r.findFirstIn(hist).nonEmpty,
-      s"q93's bisection histogram must build at one partition:\n$hist")
+    // the script runs in its own session: its histogram is built, cached
+    // and probed there, so it is read from the executions q93 started
+    val hist = planned.filter(_.plan.contains("qty"))
+      .map(p => p.widths ++ p.cached)
+    assert(hist.nonEmpty && hist.forall(_.forall(_ == 1)) &&
+      hist.exists(_.nonEmpty),
+      s"q93's bisection histogram must build at one partition: $hist")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    // each run caches its histogram afresh and uncaches it after
+    operators.Analytics.q93(TestSpark.tables)
+    assert(histCaches === 0,
+      "q93 runs must leave no cached histogram in the cache manager")
   }
 
   test("co-bucketed catalog tables sort-merge join with zero Exchange") {

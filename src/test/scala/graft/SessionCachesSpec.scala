@@ -15,32 +15,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class SessionCachesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private val Marker = "graft.test.sentinel"
-
-  /** Spark jobs started while `body` runs. Listener delivery is
-    * asynchronous, so a marked sentinel job runs afterwards: events arrive
-    * in order, and once the sentinel's start is seen every job `body`
-    * started has been counted. */
+  /** Spark jobs started while `body` runs. */
   private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
     val jobs = new AtomicInteger
-    @volatile var sentinelSeen = false
-    val listener = new SparkListener {
+    val out = TestSpark.listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(Marker) != null))
-          sentinelSeen = true
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setLocalProperty(Marker, "1")
-      try spark.range(1).rdd.count() finally sc.setLocalProperty(Marker, null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(sentinelSeen, "listener never saw the sentinel job")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
+        if (!Option(e.properties)
+              .exists(_.getProperty(TestSpark.SentinelMarker) != null))
+          jobs.incrementAndGet()
+    })(body)
+    (out, jobs.get)
   }
 
   private def withTempDir[A](body: Path => A): A = {
@@ -99,6 +83,16 @@ class SessionCachesSpec extends AnyFunSuite {
     }
   }
 
+  test("building st04's replayed stream a second time runs no Spark job") {
+    val build = () => graft.streaming.StreamQueries.replayedEventsStream(
+      spark, TestSpark.sfDir, Nil)
+    val (first, _) = jobsDuring(build())
+    val (again, againJobs) = jobsDuring(build())
+    assert(againJobs == 0,
+      "the replay dir and its schema must both come from the session caches")
+    assert(again.schema == first.schema && again.isStreaming)
+  }
+
   test("fingerprint of a file:// path changes when the file is rewritten") {
     withTempDir { dir =>
       val f = dir.resolve("part-0.parquet")
@@ -127,9 +121,11 @@ class SessionCachesSpec extends AnyFunSuite {
     // default cache of 100 holds, so at that size the second pass
     // recompiles dozens of them across the mix
     val d12 = "d12_threshold_curve"
+    // st01's stream runs in the session Spark clones when it starts, a
+    // new one on every run (as a scoped operator's does)
     val mix = Seq(d12, "t14_pii_scrub", "s01_cosine_topk",
       "p02_observe_metrics", "m01_media_features",
-      "w01_etl_partitioned_roundtrip")
+      "w01_etl_partitioned_roundtrip", "st01_stream_window_agg")
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // (Janino compiles while the query ran, whole-stage codegen stages
     // in its executed plan)

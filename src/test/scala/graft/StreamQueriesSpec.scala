@@ -19,16 +19,40 @@ class StreamQueriesSpec extends AnyFunSuite {
     val dir = graft.TempDirs.create("graft_drain_timeout")
     spark.range(3).write.mode("overwrite").parquet(dir)
     val slow = spark.readStream.schema(spark.read.parquet(dir).schema)
-      .parquet(dir).writeStream
-      .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
-        Thread.sleep(120000L)
-      }
+      .parquet(dir)
     val e = intercept[IllegalStateException] {
-      StreamQueries.drain("slow sink", slow, timeoutMs = 2000L)
+      StreamQueries.drain("slow sink", slow, timeoutMs = 2000L)(
+        _.foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+          Thread.sleep(120000L)
+        })
     }
     assert(e.getMessage.contains("slow sink did not terminate within 2s"))
     assert(spark.streams.active.isEmpty,
       s"a timed-out drain left queries running: ${spark.streams.active.toSeq}")
+  }
+
+  test("drain starts a stream with its confs and restores the caller's") {
+    val key = "spark.sql.shuffle.partitions"
+    val dir = graft.TempDirs.create("graft_drain_confs")
+    spark.range(20).write.mode("overwrite").parquet(dir)
+    val counts = spark.readStream.schema(spark.read.parquet(dir).schema)
+      .parquet(dir).groupBy(org.apache.spark.sql.functions.col("id") % 3)
+      .count()
+    val q = StreamQueries.drain("scoped state", counts, Map(key -> "2"))(
+      _.outputMode("complete").format("memory")
+        .queryName("graft_drain_confs_sink"))
+    assert(q.lastProgress.stateOperators.map(_.numShufflePartitions)
+      .toSeq == Seq(2L), "the stream's state must be 2 partitions wide")
+    assert(spark.conf.get(key) === "4")
+    // a start that throws (complete mode over a stream with no aggregate)
+    // restores the caller's conf too
+    intercept[org.apache.spark.sql.AnalysisException] {
+      StreamQueries.drain("bad start",
+        spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir),
+        Map(key -> "2"))(_.outputMode("complete").format("memory")
+          .queryName("graft_drain_bad_sink"))
+    }
+    assert(spark.conf.get(key) === "4")
   }
 
   test("a directory-shaped table given as a file: URI streams its part " +
@@ -40,8 +64,8 @@ class StreamQueriesSpec extends AnyFunSuite {
     val uri = dir.toURI.toString.stripSuffix("/")
     assert(uri.startsWith("file:"))
     StreamQueries.drain("dir-shaped table",
-      StreamQueries.tableStream(spark, uri, "documents").writeStream
-        .format("memory").queryName("graft_dir_table_sink"))
+      StreamQueries.tableStream(spark, uri, "documents"))(
+      _.format("memory").queryName("graft_dir_table_sink"))
     val streamed = canon(spark.table("graft_dir_table_sink"))
     assert(streamed.nonEmpty && streamed == canon(docs))
   }

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Shared local session for all suites (sbt forks one test JVM), built
   * through the front door like every main; the warehouse dir, UI and time
@@ -14,4 +17,69 @@ object TestSpark {
 
   val sfDir = "/root/testdata/sf0.001"
   def tables: Tables = Tables(spark, sfDir)
+
+  /** One SQL execution as planned when it started: its plan text, the
+    * partition count of each of its own shuffle exchanges (an adaptive
+    * plan's initial exchanges) and of each exchange in the cached plans it
+    * scans. */
+  final case class Planned(plan: String, widths: Seq[Int], cached: Seq[Int])
+
+  private val Width = """partitioning\((.*), (\d+)\)""".r.unanchored
+
+  /** The local property that marks [[listening]]'s sentinel job. */
+  val SentinelMarker = "graft.test.sentinel"
+
+  /** Runs `body` with `listener` on the shared context's listener bus and
+    * returns once the listener has seen every event `body` caused.
+    * Delivery is asynchronous, so a marked sentinel job runs afterwards:
+    * events reach the listeners of a queue in order, so once the sentinel's
+    * start is seen every earlier event has been delivered. */
+  def listening[A](listener: SparkListener)(body: => A): A = {
+    val sc = spark.sparkContext
+    @volatile var sentinelSeen = false
+    val sentinel = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(SentinelMarker) != null))
+          sentinelSeen = true
+    }
+    sc.addSparkListener(listener)
+    sc.addSparkListener(sentinel)
+    try {
+      val out = body
+      sc.setLocalProperty(SentinelMarker, "1")
+      try spark.range(1).rdd.count()
+      finally sc.setLocalProperty(SentinelMarker, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinelSeen, "listener never saw the sentinel job")
+      out
+    } finally {
+      sc.removeSparkListener(sentinel)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The SQL executions started, in any session of the shared context,
+    * while `body` runs. */
+  def plannedDuring[A](body: => A): (A, Seq[Planned]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Planned]
+    def widths(p: SparkPlanInfo, cached: Boolean): Seq[(Boolean, Int)] =
+      (if (p.nodeName == "Exchange") p.simpleString match {
+        case Width(_, n) => Seq(cached -> n.toInt)
+        case _ => Nil
+      } else Nil) ++ p.children.flatMap(
+        widths(_, cached || p.nodeName == "InMemoryTableScan"))
+    val out = listening(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          val (cached, own) = widths(s.sparkPlanInfo, cached = false)
+            .partition(_._1)
+          seen.add(Planned(s.physicalPlanDescription, own.map(_._2),
+            cached.map(_._2)))
+        case _ => ()
+      }
+    })(body)
+    import scala.jdk.CollectionConverters._
+    (out, seen.asScala.toSeq)
+  }
 }

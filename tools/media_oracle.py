@@ -27,16 +27,14 @@ Usage: tools/media_oracle.py [sfDir] [verifyOutDir]   (sfDir unused —
 the media corpus is a pure function of range(0, 2000) — accepted so
 check_all.sh can invoke every gate uniformly.)
 """
-import os
 import sys
 import struct
 import zlib
 
 import duckdb
 
-# the corpus-size knob mirrors BinaryPipeline.NMedia's GRAFT_NMEDIA env
-# (decade audits); default 2000 = the graded corpus
-N_MEDIA = int(os.environ.get("GRAFT_NMEDIA", "2000"))
+# BinaryPipeline.NMedia: the media corpus is ids 0 until 2000
+N_MEDIA = 2000
 WAV_RATE = 8000
 AUDIO_BLOCK = 256
 MASK = (1 << 64) - 1
