@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.LogicalRDD
-
 /** The one cache policy for per-corpus-snapshot artifacts: bucketed
   * catalog tables, ETL layouts, dedup pair graphs, graph edge lists,
   * codebooks, bloom filters and stream replay dirs. Operator modules only
@@ -22,13 +19,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    old one, so a failing build leaves the old artifact live. Builds
   *    are exclusive per scope (two first callers never both build) and
   *    never block lookups on another scope.
-  *  - Release. The evicted artifact is freed at once rather than at some
-  *    later GC: every Dataset in it, inside tuples too, is unpersisted,
-  *    and a checkpointed Dataset's RDD is unpersisted as well, because
-  *    `Dataset.unpersist` only clears the cache manager and leaves
-  *    `localCheckpoint` blocks in place. A Dataset of a stopped
-  *    SparkContext has nothing left to free and is not touched. Release
-  *    does not block and never fails the rebuild. A straggler still
+  *  - Release. The evicted artifact is freed at once, through the
+  *    per-query intermediates' [[Intermediates.free]]: its Datasets,
+  *    inside tuples too, and their checkpoint blocks. Release does not
+  *    block and never fails the rebuild. A straggler still
   *    holding the evicted artifact was reading data that has since been
   *    rewritten, so failing it fast is intended.
   */
@@ -61,24 +55,11 @@ final class SnapshotCache[V] {
         case Some((fp, v)) if fp == fingerprint => v
         case prev =>
           val v = build
-          prev.foreach { case (_, old) => release(old) }
+          prev.foreach { case (_, old) => Intermediates.free(old) }
           slot.entry = Some((fingerprint, v))
           v
       }
     }
-  }
-
-  private def release(old: Any): Unit = old match {
-    case ds: Dataset[_] if !ds.sparkSession.sparkContext.isStopped =>
-      try {
-        ds.unpersist(blocking = false)
-        ds.queryExecution.logical match {
-          case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-          case _ => ()
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }
-    case p: Product => p.productIterator.foreach(release)
-    case _ => ()
   }
 
   /** Visible for tests: the live fingerprint for a scope, if any. */

@@ -493,14 +493,14 @@ object Dedup {
     * planted >cap path graph through exactly that: default cap throws,
     * raised cap converges). */
   private[graft] def minLabelPropagation(pairs: DataFrame,
-                                         maxRounds: Int = 20): (DataFrame, Int) = {
+      maxRounds: Int = 20): (DataFrame, Int) = graft.Intermediates.run { in =>
     // materialize the edge list once — every propagation round joins it
     // (projecting to the two endpoint columns first: a caller may hand
-    // a wider relation)
+    // a wider relation); freed with the scope once the last round is
+    // checkpointed
     val p2 = pairs.select(col("doc_a"), col("doc_b"))
-    val edges = p2
-      .union(p2.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .localCheckpoint()
+    val edges = in.checkpoint(p2
+      .union(p2.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
     val nodes = edges.select(col("doc_a").as("id")).distinct()
     var labels = nodes.select(col("id"), col("id").as("comp")).localCheckpoint()
     var changed = 1L
@@ -520,15 +520,20 @@ object Dedup {
         .select("id", "comp")
         .localCheckpoint() // truncate the iterative lineage; fires the observe
       changed = obs.get("n_changed").asInstanceOf[Long]
+      // the superseded round is dead once its successor is stored: a
+      // long-diameter graph holds two label sets, not one per round
+      graft.Intermediates.free(labels)
       labels = updated
       rounds += 1
     }
     // Never return unconverged (wrong) clusters silently: a component with
     // diameter > rounds would still be split across labels here.
-    if (changed > 0)
+    if (changed > 0) {
+      graft.Intermediates.free(labels)
       throw new IllegalStateException(
         s"min-label propagation did not converge in $rounds rounds " +
           s"($changed labels still changing); raise the round cap")
+    }
     (labels, rounds)
   }
 
@@ -870,15 +875,14 @@ object Dedup {
     * the 64-bit FNV `ngram_hashes` kernel with whole-text fallback;
     * the DuckDB twin uses string grams — identical sets up to ~2⁻⁶⁴
     * collision odds (the t10/t25 equivalence). */
-  def d13(t: Tables): DataFrame = {
-    // persisted: both the per-source totals and the pair matrix consume
+  def d13(t: Tables): DataFrame = graft.Intermediates.run { in =>
+    // kept: both the per-source totals and the pair matrix consume
     // the distinct gram relation — without it the gram explode +
     // distinct shuffle runs twice (self-review catch; halves the query)
-    val cached = t.documentsWide
+    val cached = in.keep(t.documentsWide
       .withColumn("toks", expr(graft.functions.exprs.wsTokensSql))
       .select(col("source"), explode(ngram_hashes(col("toks"), 5)).as("g"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // materialize the cache and take its row count in one pass: the
     // distinct's corpus-scale explode+shuffle runs HERE at the session
     // width; the count then sizes the downstream per-gram aggregation
@@ -887,7 +891,7 @@ object Dedup {
     // amortizes a task at ~30K rows, a heavier cost class than the
     // graph loops' plain min/sum rounds)
     val nGrams = cached.count()
-    val result = graft.Parts.scoped(t,
+    graft.Parts.home(t.spark, graft.Parts.scoped(t,
         graft.Parts.forRows(t.spark, nGrams, 30000L)) { c =>
       val grams = graft.Parts.home(c.spark, cached)
       val perSrc = grams.groupBy("source").agg(count(lit(1)).as("n_grams"))
@@ -901,7 +905,7 @@ object Dedup {
           .as("p"))
         .groupBy(col("p.src_a").as("src_a"), col("p.src_b").as("src_b"))
         .agg(count(lit(1)).as("n_shared"))
-      val out = pairs
+      pairs
         .join(broadcast(perSrc.select(col("source").as("src_a"),
           col("n_grams").as("na"))), "src_a")
         .join(broadcast(perSrc.select(col("source").as("src_b"),
@@ -911,9 +915,8 @@ object Dedup {
         .select(col("src_a"), col("src_b"), col("n_shared"), col("na"),
           col("nb"), col("jaccard_bp"))
         .orderBy("src_a", "src_b")
-      graft.CacheHygiene.materializeAndRelease(out, Seq(grams))
-    }
-    graft.Parts.home(t.spark, result)
+        .localCheckpoint()
+    })
   }
 
   /** d14 — quality-aware dedup survivorship: WHICH copy survives a

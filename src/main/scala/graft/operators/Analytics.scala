@@ -745,18 +745,17 @@ object Analytics {
     *
     * Partial-sketch estimates (size < k) are exact counts by
     * construction — θ = 2⁴⁸ and the "sample" is the whole set. */
-  def q99(t: Tables): DataFrame = {
+  def q99(t: Tables): DataFrame = graft.Intermediates.materialized { in =>
     import graft.functions.exprs.kmv_sketch
     val K = 256
     val Dom = 281474976710656L            // 2^48
     val Num = (K - 1L) * Dom              // (k-1)·2^48 for the estimator
-    val sk = t.events
+    val sk = in.keep(t.events
       .select(col("event_type"),
         expr("cast(conv(substring(md5(cast(user_id as string)), 1, 12)," +
           " 16, 10) as bigint)").as("h"))
       .groupBy("event_type")
-      .agg(kmv_sketch(col("h"), K).as("sk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(kmv_sketch(col("h"), K).as("sk")))
     val perType = sk.select(
       col("event_type").as("grp"),
       size(col("sk")).cast("long").as("sketch_n"),
@@ -779,8 +778,7 @@ object Analytics {
       .select(lit("click_x_purchase").as("grp"),
         col("common").as("sketch_n"),
         expr(s"common * $Dom div theta").as("est_distinct"))
-    graft.CacheHygiene.materializeAndRelease(
-      perType.unionByName(ix).orderBy("grp"), Seq(sk))
+    perType.unionByName(ix).orderBy("grp")
   }
 
   /** q100 — peak concurrency per day (interval-overlap aggregation):

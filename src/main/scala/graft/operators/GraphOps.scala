@@ -1,9 +1,8 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Intermediates, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph computation (SURVEY §2 g01) — the operator class the
   * rest of the inventory lacks: a fixed-point loop where iteration N+1's
@@ -52,12 +51,11 @@ object GraphOps {
     * fingerprints) exactly like the dedup pair graph
     * (Dedup.candidatePairs) and the ANN codebooks: a graph engine
     * derives its edge list from the fact tables once per corpus
-    * snapshot, not once per query invocation. The checkpoint is how the
-    * cost stays honest AFTER the round-6 cache hygiene: per-QUERY
-    * persists (each operator's repartitioned derived relation, g07's
-    * per-round survivor sets) are released when the operator returns;
-    * the shared snapshot artifact is the one thing that legitimately
-    * outlives them. */
+    * snapshot, not once per query invocation. Per-QUERY intermediates
+    * (each operator's repartitioned derived relation, g07's per-round
+    * survivor sets) are freed when the operator returns
+    * (graft.Intermediates); the shared snapshot artifact is the one thing
+    * that legitimately outlives them. */
   private val edgeCache = new graft.SnapshotCache[(DataFrame, Long)]
 
   private def undirectedTradeEdgesWithCount(t: Tables): (DataFrame, Long) = {
@@ -91,36 +89,30 @@ object GraphOps {
     * §C). */
   private val RowsPerLoopPartition = 150000L
 
-  /** Builds a loop operator's plan and executes it (materializeAndRelease
-    * checkpoints it) in a session scoped to the edge-volume-derived width,
-    * so every per-round shuffle — the edge repartition, the rank, label
-    * and frontier exchanges, the per-round aggregates — runs at that
-    * width instead of the session's. */
+  /** Builds a loop operator's plan and materializes it in a session
+    * scoped to the edge-volume-derived width, so every per-round shuffle —
+    * the edge repartition, the rank, label and frontier exchanges, the
+    * per-round aggregates — runs at that width instead of the session's. */
   private def inLoopScope(t: Tables)(
-      plan: Tables => (DataFrame, Seq[DataFrame])): DataFrame = {
+      plan: (Tables, Intermediates.Scope) => DataFrame): DataFrame = {
     val (_, edgeRows) = undirectedTradeEdgesWithCount(t)
-    val out = graft.Parts.scoped(t,
+    graft.Parts.home(t.spark, graft.Parts.scoped(t,
         graft.Parts.forRows(t.spark, edgeRows, RowsPerLoopPartition)) { c =>
-      val (p, caches) = plan(c)
-      graft.CacheHygiene.materializeAndRelease(p, caches)
-    }
-    graft.Parts.home(t.spark, out)
+      Intermediates.materialized(plan(c, _))
+    })
   }
 
   def g01(t: Tables): DataFrame = inLoopScope(t)(g01Plan)
 
-  /** The g01 plan + its internal caches — split out so PlanAuditSpec
-    * audits the plan that executes under the checkpoint, and the public
-    * wrapper can release the caches after eager materialization
-    * (CacheHygiene). */
-  private[graft] def g01Plan(t: Tables): (DataFrame, Seq[DataFrame]) = {
+  /** The g01 plan, split out so PlanAuditSpec audits the plan that
+    * executes under the checkpoint. */
+  private[graft] def g01Plan(t: Tables, in: Intermediates.Scope): DataFrame = {
     val undirected = undirectedTradeEdges(t)
     val deg = undirected.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // partition the (src, dst, outdeg) edge relation by src once; every
     // iteration's join reuses it (Exchange reuse on the cached plan)
-    val edges = undirected.join(deg, "src")
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = in.keep(undirected.join(deg, "src")
+      .repartition(col("src")))
     var ranks = edges.select(col("src").as("node")).distinct()
       .withColumn("r", lit(1000000L))
     for (_ <- 1 to Iters) {
@@ -143,7 +135,7 @@ object GraphOps {
           .as("entity"),
         expr("node div 2").as("entity_key"),
         col("r").as("rank_u"))
-      .orderBy("node") -> Seq(edges)
+      .orderBy("node")
   }
 
   /** g02 — connected components by min-label propagation, the graph twin
@@ -161,7 +153,7 @@ object GraphOps {
     * O(nodes) label vector. */
   def g02(t: Tables): DataFrame = inLoopScope(t)(g02Plan)
 
-  private[graft] def g02Plan(t: Tables): (DataFrame, Seq[DataFrame]) = {
+  private[graft] def g02Plan(t: Tables, in: Intermediates.Scope): DataFrame = {
     val und = undirectedTradeEdges(t)
     // self-loops fold the "keep your own label" term into the one join:
     // label' = min over (neighbors ∪ self) — WITHOUT them the natural
@@ -169,10 +161,9 @@ object GraphOps {
     // references labels_{k-1} TWICE and doubles the unshared logical
     // plan every iteration (2^Iters blowup — measured 58 s vs 2 s at
     // sf0.01 before this restructure)
-    val edges = und
+    val edges = in.keep(und
       .unionByName(und.select(col("src"), col("src").as("dst")).distinct())
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     var labels = edges.select(col("src").as("node")).distinct()
       .withColumn("l", col("node"))
     for (_ <- 1 to Iters) {
@@ -190,7 +181,7 @@ object GraphOps {
           .as("entity"),
         expr("node div 2").as("entity_key"),
         col("l").as("component"))
-      .orderBy("node") -> Seq(edges)
+      .orderBy("node")
   }
 
   /** g03 — triangle counting over the part co-order graph (market-basket
@@ -228,12 +219,7 @@ object GraphOps {
     * published algorithm's (Suri–Vassilvitskii reducer input bound),
     * the boundary is the test host, and the scaling slope is proven on
     * the three SFs that fit. */
-  def g03(t: Tables): DataFrame = {
-    val (plan, caches) = g03Plan(t)
-    graft.CacheHygiene.materializeAndRelease(plan, caches)
-  }
-
-  private[graft] def g03Plan(t: Tables): (DataFrame, Seq[DataFrame]) = {
+  def g03(t: Tables): DataFrame = Intermediates.materialized { in =>
     // No .distinct() on the item pairs: the edge set is distinct'd AFTER
     // pair generation anyway, so a per-(order, part) dedup here is a
     // redundant O(|lineitem|) shuffle — the only thing it could remove
@@ -255,11 +241,10 @@ object GraphOps {
       .select(col("a"), col("b"),
         struct(col("da").as("d"), col("a").as("id")).as("ka"),
         struct(col("db").as("d"), col("b").as("id")).as("kb"))
-    val oriented = keyed.select(
+    val oriented = in.keep(keyed.select(
         when(col("ka") < col("kb"), col("a")).otherwise(col("b")).as("src"),
         when(col("ka") < col("kb"), col("b")).otherwise(col("a")).as("dst"),
-        when(col("ka") < col("kb"), col("kb")).otherwise(col("ka")).as("kdst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        when(col("ka") < col("kb"), col("kb")).otherwise(col("ka")).as("kdst")))
     val wedges = oriented.as("e1")
       .join(oriented.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.kdst") < col("e2.kdst"))
@@ -288,7 +273,7 @@ object GraphOps {
     tri.select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy(col("node").as("part_key"))
       .agg(count(lit(1)).as("n_triangles"))
-      .orderBy("part_key") -> Seq(oriented)
+      .orderBy("part_key")
   }
 
   /** g04 — community detection by synchronous label propagation (LPA,
@@ -322,15 +307,14 @@ object GraphOps {
     * per-node rows. */
   def g04(t: Tables): DataFrame = inLoopScope(t)(g04Plan)
 
-  private[graft] def g04Plan(t: Tables): (DataFrame, Seq[DataFrame]) = {
+  private def g04Plan(t: Tables, in: Intermediates.Scope): DataFrame = {
     val und = undirectedTradeEdges(t)
     // self-loop = "my own label votes once", folded into the single join
     // (the g02 restructure: referencing labels twice per round doubles
     // the unshared plan every iteration)
-    val edges = und
+    val edges = in.keep(und
       .unionByName(und.select(col("src"), col("src").as("dst")).distinct())
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     // Round 1 computed EXACTLY as a plain MIN (round-7 verdict task 6):
     // with identity labels (label(src) = src) every vote over a DISTINCT
     // (src, dst) edge set has count 1, so the (count desc, label asc)
@@ -356,7 +340,7 @@ object GraphOps {
     labels.groupBy(col("l").as("community"))
       .agg(count(lit(1)).as("n_members"),
         sum(col("node")).as("members_sum"))
-      .orderBy("community") -> Seq(edges)
+      .orderBy("community")
   }
 
   /** One synchronous LPA vote round — the single-exchange shape
@@ -397,13 +381,12 @@ object GraphOps {
     * Oracle: the identical unrolled min-plus in DuckDB. */
   def g05(t: Tables): DataFrame = inLoopScope(t)(g05Plan)
 
-  private[graft] def g05Plan(t: Tables): (DataFrame, Seq[DataFrame]) = {
+  private def g05Plan(t: Tables, in: Intermediates.Scope): DataFrame = {
     val und = undirectedTradeEdges(t)
-    val edges = und.withColumn("w", lit(1L))
+    val edges = in.keep(und.withColumn("w", lit(1L))
       .unionByName(und.select(col("src")).distinct()
         .select(col("src"), col("src").as("dst"), lit(0L).as("w")))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     // seeds: suppliers 1..5 (node ids 2..10 even) at distance 0
     var dist = edges.select(col("src").as("node")).distinct()
       .filter(col("node") % 2 === 0 && col("node") <= 10)
@@ -417,7 +400,7 @@ object GraphOps {
     }
     dist.groupBy(col("d").as("hops"))
       .agg(count(lit(1)).as("n_nodes"), sum(col("node")).as("nodes_sum"))
-      .orderBy("hops") -> Seq(edges)
+      .orderBy("hops")
   }
 
   /** g06 — common-neighbor link prediction over the supplier
@@ -437,27 +420,18 @@ object GraphOps {
     * orientation g03 uses (or per-hub sampling); the pair aggregation
     * itself is ONE shuffle on (a, b). Degrees join back broadcast
     * (O(suppliers) rows). Oracle recomputes the projection naively. */
-  def g06(t: Tables): DataFrame = {
-    val (plan, caches) = g06Plan(t)
-    graft.CacheHygiene.materializeAndRelease(plan, caches)
-  }
-
-  /** The g06 plan + its internal caches — split out (the g01/g03/g07
-    * pattern) so the plan that executes under the checkpoint stays
-    * dumpable/auditable. */
-  private[graft] def g06Plan(t: Tables): (DataFrame, Seq[DataFrame]) = {
-    // persisted: sc feeds the degree aggregate AND both legs of the
-    // per-customer wedge self-join — unpersisted, the distinct's final
+  def g06(t: Tables): DataFrame = Intermediates.materialized { in =>
+    // kept: sc feeds the degree aggregate AND both legs of the
+    // per-customer wedge self-join — uncached, the distinct's final
     // aggregate re-runs per consumer after the reused exchange (the
     // g03/d12 re-execution class; unlike t07/s11, the A/B kept this one
     // — three consumers over O(distinct (s,c)) rows clear the
-    // cache-write break-even). Released by the wrapper.
-    val sc = t.lineitem.select(col("l_orderkey"), col("l_suppkey"))
+    // cache-write break-even)
+    val sc = in.keep(t.lineitem.select(col("l_orderkey"), col("l_suppkey"))
       .join(t.orders.select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("l_suppkey").as("s"), col("o_custkey").as("c"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val deg = sc.groupBy("s").agg(count(lit(1)).as("d"))
     val common = sc.as("x").join(sc.as("y"), "c")
       .where(col("x.s") < col("y.s"))
@@ -471,7 +445,7 @@ object GraphOps {
       .select(col("a"), col("b"), col("common"), col("da"), col("db"),
         col("jaccard_bp"))
       .orderBy(col("common").desc, col("a"), col("b"))
-      .limit(20) -> Seq(sc)
+      .limit(20)
   }
 
   private val KcoreK = 30
@@ -497,19 +471,13 @@ object GraphOps {
     * degree aggregate. */
   def g07(t: Tables): DataFrame = inLoopScope(t)(g07Plan)
 
-  private[graft] def g07Plan(t: Tables): (DataFrame, Seq[DataFrame]) = {
-    val edges = undirectedTradeEdges(t)
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var nodes = edges.select(col("src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // every round's survivor set is tracked and released by the wrapper
-    // once the final rollup materializes (round-5 advice: the peel loop
-    // used to leak one CacheManager entry per round per invocation);
-    // in-flight accumulation is bounded at rounds × O(nodes)
-    val caches = scala.collection.mutable.Buffer[DataFrame](edges, nodes)
+  private def g07Plan(t: Tables, in: Intermediates.Scope): DataFrame = {
+    val edges = in.keep(undirectedTradeEdges(t).repartition(col("src")))
+    // every round's survivor set is kept until the final rollup
+    // materializes: in-flight accumulation is rounds × O(nodes)
+    var nodes = in.keep(edges.select(col("src").as("node")).distinct())
     for (_ <- 1 to KcoreRounds) {
-      nodes = edges
+      nodes = in.keep(edges
         .join(nodes.hint("SHUFFLE_HASH"), edges("src") === nodes("node"))
         .drop("node")
         .join(nodes.withColumnRenamed("node", "dst_alive")
@@ -518,16 +486,14 @@ object GraphOps {
         .groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("d"))
         .filter(col("d") >= KcoreK)
-        .select("node")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      caches += nodes
+        .select("node"))
     }
     nodes
       .select(when(col("node") % 2 === 0, "supplier").otherwise("customer")
         .as("entity"), col("node"))
       .groupBy("entity")
       .agg(count(lit(1)).as("n_core_nodes"), sum(col("node")).as("nodes_sum"))
-      .orderBy("entity") -> caches.toSeq
+      .orderBy("entity")
   }
 
   val queries: Map[String, Tables => DataFrame] = Map(

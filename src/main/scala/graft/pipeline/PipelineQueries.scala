@@ -1,9 +1,8 @@
 package graft.pipeline
 
-import graft.Tables
+import graft.{Intermediates, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Driver-graded end-to-end curation query (SURVEY §2 p01): the
   * TrainingDataPipeline stage graph as a CORRECTNESS entry, not just a
@@ -29,40 +28,39 @@ import org.apache.spark.storage.StorageLevel
   * fingerprint shuffle, one banding shuffle + candidate-bounded verify
   * join, the t17 SHUFFLE_HASH LM probe, broadcast bench grams); the six
   * per-source rollups aggregate tiny per-stage survivor sets. Stages are
-  * persisted so each computes once across the six count branches (the
-  * `run()` rationale; the ContextCleaner reclaims blocks when the plan
-  * is released).
+  * kept so each computes once across the six count branches (the `run()`
+  * rationale) and freed once the result is materialized.
   */
 object PipelineQueries {
 
-  def p01(t: Tables): DataFrame = {
+  def p01(t: Tables): DataFrame = Intermediates.materialized { in =>
     import TrainingDataPipeline._
     val input = t.documents
-    val corpus = scrub(input.filter(col("doc_id") % 50 =!= 0))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val corpus = in.keep(scrub(input.filter(col("doc_id") % 50 =!= 0)))
     val bench = input.filter(col("doc_id") % 50 === 0)
-    val q = qualityFilter(corpus).persist(StorageLevel.MEMORY_AND_DISK)
-    val e = exactDedup(q).persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nearDupVerifiedRemoval(e).persist(StorageLevel.MEMORY_AND_DISK)
-    val p = perplexityFilter(n).persist(StorageLevel.MEMORY_AND_DISK)
+    val q = in.keep(qualityFilter(corpus))
+    val e = in.keep(exactDedup(q))
+    val n = in.keep(nearDupVerifiedRemoval(e))
+    val p = in.keep(perplexityFilter(n))
     val d = decontaminate(p, bench)
-    def cnt(df: DataFrame, name: String) =
-      df.groupBy("source").agg(count(lit(1)).as(name))
-    val result = cnt(corpus, "n_input")
-      .join(cnt(q, "n_quality"), Seq("source"), "left")
-      .join(cnt(e, "n_exact"), Seq("source"), "left")
-      .join(cnt(n, "n_neardup"), Seq("source"), "left")
-      .join(cnt(p, "n_lm"), Seq("source"), "left")
-      .join(cnt(d, "n_final"), Seq("source"), "left")
-      .na.fill(0L,
-        Seq("n_quality", "n_exact", "n_neardup", "n_lm", "n_final"))
-    // kept fraction at 4dp via exact integer arithmetic (the t19
-    // pattern): float division rounds differently across engines on
-    // representation ties
-    val result2 = result.withColumn("kept_frac", expr(
+    stageCounts("n_input" -> corpus, "n_quality" -> q, "n_exact" -> e,
+        "n_neardup" -> n, "n_lm" -> p, "n_final" -> d)
+      // kept fraction at 4dp via exact integer arithmetic (the t19
+      // pattern): float division rounds differently across engines on
+      // representation ties
+      .withColumn("kept_frac", expr(
         "((20000 * n_final + n_input) div (2 * n_input)) / cast(10000 as double)"))
       .orderBy("source")
-    graft.CacheHygiene.materializeAndRelease(result2, Seq(corpus, q, e, n, p))
+  }
+
+  /** Per-source row counts of each named stage, one column per stage in
+    * order; a source absent from a later stage counts 0 there. */
+  private def stageCounts(stages: (String, DataFrame)*): DataFrame = {
+    def cnt(name: String, df: DataFrame) =
+      df.groupBy("source").agg(count(lit(1)).as(name))
+    stages.tail.foldLeft(cnt(stages.head._1, stages.head._2)) {
+      case (acc, (name, df)) => acc.join(cnt(name, df), Seq("source"), "left")
+    }.na.fill(0L, stages.tail.map(_._1))
   }
 
   /** p02 — the `observe` data-quality counters as a GRADED query: the
@@ -123,14 +121,13 @@ object PipelineQueries {
     * The per-doc relation is persisted across its two consumers (the
     * weight aggregation and the sample filter), so the corpus scans
     * once. */
-  def p03(t: Tables): DataFrame = {
+  def p03(t: Tables): DataFrame = Intermediates.materialized { in =>
     import org.apache.spark.sql.expressions.Window
-    val docs = t.documents.select(col("doc_id"), col("source"),
+    val docs = in.keep(t.documents.select(col("doc_id"), col("source"),
         graft.functions.exprs.quality_scan(col("text"))
           .getField("n_tokens").cast("bigint").as("n_tokens"),
         expr("cast(conv(substring(md5(cast(doc_id as string)), 1, 8)," +
-          " 16, 10) as bigint)").as("h32"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+          " 16, 10) as bigint)").as("h32")))
     val perSrc = docs.groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("src_tokens"))
     val tot = perSrc.agg(sum(col("src_tokens")).as("tot_tokens"),
@@ -153,10 +150,9 @@ object PipelineQueries {
       .groupBy("source")
       .agg(count(lit(1)).as("n_kept"), sum(col("n_tokens")).as("kept_tokens"),
         countDistinct(col("pack_id")).as("n_packs"))
-    graft.CacheHygiene.materializeAndRelease(
-      weights.join(achieved, Seq("source"), "left")
-        .na.fill(0L, Seq("n_kept", "kept_tokens", "n_packs"))
-        .orderBy("source"), Seq(docs))
+    weights.join(achieved, Seq("source"), "left")
+      .na.fill(0L, Seq("n_kept", "kept_tokens", "n_packs"))
+      .orderBy("source")
   }
 
   /** p04 — the curation ABLATION matrix: p01 composes the gates
@@ -183,50 +179,32 @@ object PipelineQueries {
     * t17 SHUFFLE_HASH LM probe; broadcast bench grams) joined back by
     * doc_id — LEFT joins so a doc missing from a gate relation is a
     * fail, never a dropped row — then one rollup to 20 source rows. */
-  def p04(t: Tables): DataFrame = {
+  def p04(t: Tables): DataFrame = Intermediates.materialized { in =>
     import TrainingDataPipeline._
-    import graft.functions.exprs.{canon_fp, ngram_strs, quality_scan}
     val input = t.documents
-    val corpus = scrub(input.filter(col("doc_id") % 50 =!= 0))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val corpus = in.keep(scrub(input.filter(col("doc_id") % 50 =!= 0)))
     val bench = input.filter(col("doc_id") % 50 === 0)
-    val qs = quality_scan(col("text"))
     val qFlag = corpus.select(col("doc_id"),
-      (qs.getField("n_tokens").between(10, 1000) &&
-        qs.getField("n_punct") * 1.0 / length(col("text")) < 0.2)
-        .as("q_ok"))
-    val dSurvivors = corpus.select(col("doc_id"), canon_fp(col("text")).as("fp"))
-      .groupBy("fp").agg(min("doc_id").as("doc_id"))
-      .select(col("doc_id"), lit(true).as("d_ok"))
-    val ndLosers = graft.dedup.Dedup.verifiedPairs(corpus)
-      .select(col("doc_b").as("doc_id")).distinct()
-      .select(col("doc_id"), lit(false).as("nd_ok"))
-    val lPass = graft.text.TextOps.lmScoredDocs(corpus)
-      .filter(col("sum_logp_q4") >=
-        lit(graft.text.TextOps.LmKeepThresholdQ4) * col("n_bigrams"))
-      .select(col("doc_id"), lit(true).as("l_ok"))
-    // gram STRINGS, not hashes: this join decides the c_ok drop flag,
-    // so the key must be collision-free (round-13 verdict task 5)
-    def grams(df: DataFrame) = df
-      .withColumn("toks", expr(graft.functions.exprs.wsTokensSql))
-      .select(col("doc_id"), explode(ngram_strs(col("toks"), 8)).as("g"))
-    val contaminated = grams(corpus)
-      .join(broadcast(grams(bench).select("g").distinct()), Seq("g"))
-      .select(col("doc_id")).distinct()
-      .select(col("doc_id"), lit(false).as("c_ok"))
+      qualityOk(graft.functions.exprs.quality_scan(col("text")),
+        length(col("text"))).as("q_ok"))
+    val dSurvivors = exactSurvivors(corpus).withColumn("d_ok", lit(true))
+    val ndLosers = nearDupLosers(corpus).withColumn("nd_ok", lit(false))
+    val lPass = lmPass(corpus).withColumn("l_ok", lit(true))
+    val contaminatedIds = contaminated(corpus, benchGrams(bench))
+      .withColumn("c_ok", lit(false))
     val flags = corpus.select(col("doc_id"), col("source"))
       .join(qFlag, Seq("doc_id"), "left")
       .join(dSurvivors, Seq("doc_id"), "left")
       .join(ndLosers, Seq("doc_id"), "left")
       .join(lPass, Seq("doc_id"), "left")
-      .join(contaminated, Seq("doc_id"), "left")
+      .join(contaminatedIds, Seq("doc_id"), "left")
       .select(col("source"),
         coalesce(col("q_ok"), lit(false)).as("q_ok"),
         coalesce(col("d_ok"), lit(false)).as("d_ok"),
         coalesce(col("nd_ok"), lit(true)).as("nd_ok"),
         coalesce(col("l_ok"), lit(false)).as("l_ok"),
         coalesce(col("c_ok"), lit(true)).as("c_ok"))
-    val rollup = flags.groupBy("source")
+    flags.groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(!col("q_ok"), 1L).otherwise(0L)).as("q_fail"),
         sum(when(!col("d_ok"), 1L).otherwise(0L)).as("d_fail"),
@@ -243,7 +221,6 @@ object PipelineQueries {
             when(!col("c_ok"), 1).otherwise(0)) >= 2, 1L)
           .otherwise(0L)).as("fail_multi"))
       .orderBy("source")
-    graft.CacheHygiene.materializeAndRelease(rollup, Seq(corpus))
   }
 
   /** p05 — dedup-aware mixture weights: t24 budgets sources by RAW
@@ -260,13 +237,12 @@ object PipelineQueries {
     * survivor filter is the d14 fp shuffle; both weightings aggregate
     * the same per-source rows and the grand totals ride broadcast
     * scalars (t24's q02 pattern). All arithmetic exact basis points. */
-  def p05(t: Tables): DataFrame = {
+  def p05(t: Tables): DataFrame = Intermediates.run { in =>
     import graft.functions.exprs.{canon_fp, quality_scan}
-    val docs = t.documentsWide.select(col("doc_id"), col("source"),
+    val docs = in.keep(t.documentsWide.select(col("doc_id"), col("source"),
         canon_fp(col("text")).as("fp"),
         quality_scan(col("text")).getField("n_tokens").cast("bigint")
-          .as("ntk"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+          .as("ntk")))
     // materialize the kernel scan (fp/ntk per doc, session-width map
     // stage) and size the rollup tail to its row count: every exchange
     // below moves O(docs) NARROW rows (id, fp, ntk), for which the
@@ -275,7 +251,7 @@ object PipelineQueries {
     val nDocs = docs.count()
     graft.Parts.home(t.spark, graft.Parts.scoped(t,
         graft.Parts.forRows(t.spark, nDocs, 150000L)) { c =>
-      p05Tail(graft.Parts.home(c.spark, docs))
+      p05Tail(graft.Parts.home(c.spark, docs)).localCheckpoint()
     })
   }
 
@@ -293,7 +269,7 @@ object PipelineQueries {
       sum(col("raw_tokens")).as("tot_raw"),
       sum(col("unique_tokens")).as("tot_unique"),
       count(lit(1)).as("n_sources"))
-    val out = joined.crossJoin(broadcast(tot))
+    joined.crossJoin(broadcast(tot))
       .withColumn("weight_raw_bp", least(lit(10000L),
         expr("(tot_raw DIV (2 * n_sources)) * 10000 DIV raw_tokens")))
       .withColumn("weight_unique_bp", least(lit(10000L),
@@ -303,7 +279,6 @@ object PipelineQueries {
         col("weight_raw_bp"), col("weight_unique_bp"),
         (col("weight_unique_bp") - col("weight_raw_bp")).as("shift_bp"))
       .orderBy("source")
-    graft.CacheHygiene.materializeAndRelease(out, Seq(docs))
   }
 
   /** p06 — the incremental-ingest ADMISSION pipeline: p01 is the
@@ -326,7 +301,7 @@ object PipelineQueries {
     * grams broadcast (eval sets are tiny), and the stage functions are
     * the SAME TrainingDataPipeline kernels p01 grades — one live
     * definition of quality/dedup/decontamination semantics. */
-  def p06(t: Tables): DataFrame = {
+  def p06(t: Tables): DataFrame = Intermediates.materialized { in =>
     import TrainingDataPipeline._
     import graft.functions.exprs.canon_fp
     val input = t.documents
@@ -335,18 +310,13 @@ object PipelineQueries {
     val split = substring(md5(col("doc_id").cast("string")), 32, 1)
     val baseFps = corpus.filter(split < "d")
       .select(canon_fp(col("text")).as("fp")).distinct()
-    val incoming = corpus.filter(split >= "d")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val q = qualityFilter(incoming).persist(StorageLevel.MEMORY_AND_DISK)
-    val novel = q.withColumn("fp", canon_fp(col("text")))
-      .join(baseFps, Seq("fp"), "left_anti").drop("fp")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val uniq = exactDedup(novel).persist(StorageLevel.MEMORY_AND_DISK)
-    val admitted = decontaminate(uniq, bench)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val result = admissionRollup(incoming, q, novel, uniq, admitted)
-    graft.CacheHygiene.materializeAndRelease(result,
-      Seq(incoming, q, novel, uniq, admitted))
+    val incoming = in.keep(corpus.filter(split >= "d"))
+    val q = in.keep(qualityFilter(incoming))
+    val novel = in.keep(q.withColumn("fp", canon_fp(col("text")))
+      .join(baseFps, Seq("fp"), "left_anti").drop("fp"))
+    val uniq = in.keep(exactDedup(novel))
+    val admitted = in.keep(decontaminate(uniq, bench))
+    admissionRollup(incoming, q, novel, uniq, admitted)
   }
 
   /** The per-source admission rollup shared by p06 and its streaming twin
@@ -359,20 +329,14 @@ object PipelineQueries {
   private[graft] def admissionRollup(incoming: DataFrame, q: DataFrame,
       novel: DataFrame, uniq: DataFrame, admitted: DataFrame): DataFrame = {
     import graft.functions.exprs.quality_scan
-    def cnt(df: DataFrame, name: String) =
-      df.groupBy("source").agg(count(lit(1)).as(name))
     val admTok = admitted
       .withColumn("ntk",
         quality_scan(col("text")).getField("n_tokens").cast("bigint"))
       .groupBy("source").agg(sum(col("ntk")).as("admitted_tokens"))
-    cnt(incoming, "n_incoming")
-      .join(cnt(q, "n_quality"), Seq("source"), "left")
-      .join(cnt(novel, "n_novel"), Seq("source"), "left")
-      .join(cnt(uniq, "n_unique"), Seq("source"), "left")
-      .join(cnt(admitted, "n_admitted"), Seq("source"), "left")
+    stageCounts("n_incoming" -> incoming, "n_quality" -> q,
+        "n_novel" -> novel, "n_unique" -> uniq, "n_admitted" -> admitted)
       .join(admTok, Seq("source"), "left")
-      .na.fill(0L, Seq("n_quality", "n_novel", "n_unique", "n_admitted",
-        "admitted_tokens"))
+      .na.fill(0L, Seq("admitted_tokens"))
       // exact-integer basis points (the p01 kept_frac pattern): float
       // division rounds differently across engines on representation ties
       .withColumn("admit_frac", expr(

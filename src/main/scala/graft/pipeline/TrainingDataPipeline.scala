@@ -1,12 +1,11 @@
 package graft.pipeline
 
-import graft.Tables
+import graft.{Intermediates, Tables}
 import graft.functions.exprs
 import graft.functions.exprs.minhash_ngrams
 import graft.sources.PartitionedWriter
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** End-to-end training-data curation: the composition every large-scale
   * corpus build runs, wired from the individual SURVEY §2 operators:
@@ -24,6 +23,11 @@ import org.apache.spark.storage.StorageLevel
   * Stage order matters: scrub runs FIRST so fingerprints/signatures are
   * computed over the released (redacted) text — two docs differing only
   * in redacted PII dedup as the duplicates they are.
+  *
+  * Each gate is defined once here, as a predicate ([[qualityOk]]) or as
+  * the doc ids passing or failing it ([[exactSurvivors]],
+  * [[nearDupLosers]], [[lmPass]], [[contaminated]]); the stage filters,
+  * p04's independent gate flags and t02's `quality_ok` derive from them.
   */
 object TrainingDataPipeline {
 
@@ -39,24 +43,27 @@ object TrainingDataPipeline {
   def scrub(docs: DataFrame): DataFrame =
     docs.withColumn("text", graft.text.TextOps.scrubText(col("text")))
 
-  /** Quality gate, matching TextOps.t02's `quality_ok` semantics
-    * (token-count band AND punctuation ratio < 0.2 — a long document
-    * that is mostly punctuation is spam, not prose). */
-  def qualityFilter(docs: DataFrame): DataFrame = {
-    val qs = exprs.quality_scan(col("text"))
-    docs.filter(
-      qs.getField("n_tokens").between(10, 1000) &&
-        qs.getField("n_punct") * 1.0 / length(col("text")) < 0.2)
-  }
+  /** The quality rule over a document's `quality_scan` struct `qs` and
+    * its length in chars: token-count band AND punctuation ratio < 0.2 —
+    * a long document that is mostly punctuation is spam, not prose. */
+  def qualityOk(qs: Column, nChars: Column): Column =
+    qs.getField("n_tokens").between(10, 1000) &&
+      qs.getField("n_punct") * 1.0 / nChars < 0.2
 
-  /** Exact dedup: canonical-text md5, survivor = min doc_id. */
-  def exactDedup(docs: DataFrame): DataFrame = {
-    val fp = graft.functions.exprs.canon_fp(col("text"))
-    val survivors = docs.select(col("doc_id"), fp.as("fp"))
+  /** Quality gate: the documents passing [[qualityOk]]. */
+  def qualityFilter(docs: DataFrame): DataFrame =
+    docs.filter(
+      qualityOk(exprs.quality_scan(col("text")), length(col("text"))))
+
+  /** Exact-dup survivors: per canonical-text md5, the min doc_id. */
+  def exactSurvivors(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), exprs.canon_fp(col("text")).as("fp"))
       .groupBy("fp").agg(min("doc_id").as("doc_id"))
       .select("doc_id")
-    docs.join(survivors, Seq("doc_id"), "left_semi")
-  }
+
+  /** Exact dedup: the [[exactSurvivors]] of `docs`. */
+  def exactDedup(docs: DataFrame): DataFrame =
+    docs.join(exactSurvivors(docs), Seq("doc_id"), "left_semi")
 
   /** Near-dup removal: MinHash banding pairs (est Jaccard ≥ threshold),
     * drop the higher doc_id of each pair. Signatures stream 3-gram bytes
@@ -133,11 +140,14 @@ object TrainingDataPipeline {
     * candidates (one extra hash join over O(candidate) rows); the
     * est-based stage stays available where the signature-only pass is
     * preferred and ±1/K estimate noise is acceptable. */
-  def nearDupVerifiedRemoval(docs: DataFrame): DataFrame = {
-    val losers = graft.dedup.Dedup.verifiedPairs(docs)
+  def nearDupVerifiedRemoval(docs: DataFrame): DataFrame =
+    docs.join(nearDupLosers(docs), Seq("doc_id"), "left_anti")
+
+  /** Verified near-dup losers: the higher doc_id of each exact-verified
+    * pair (`Dedup.verifiedPairs`). */
+  def nearDupLosers(docs: DataFrame): DataFrame =
+    graft.dedup.Dedup.verifiedPairs(docs)
       .select(col("doc_b").as("doc_id")).distinct()
-    docs.join(losers, Seq("doc_id"), "left_anti")
-  }
 
   /** LM-perplexity gate (the t18 operator as a pipeline stage, CCNet-
     * style): trains the MLE bigram model on the surviving corpus itself
@@ -149,15 +159,17 @@ object TrainingDataPipeline {
     * are dropped (the quality gate's 10-token floor removes them
     * earlier anyway). Pass Long.MinValue to disable. */
   def perplexityFilter(docs: DataFrame,
-      thresholdQ4: Long = graft.text.TextOps.LmKeepThresholdQ4): DataFrame = {
+      thresholdQ4: Long = graft.text.TextOps.LmKeepThresholdQ4): DataFrame =
     if (thresholdQ4 == Long.MinValue) docs
-    else {
-      val keep = graft.text.TextOps.lmScoredDocs(docs)
-        .filter(col("sum_logp_q4") >= lit(thresholdQ4) * col("n_bigrams"))
-        .select("doc_id")
-      docs.join(keep, Seq("doc_id"), "left_semi")
-    }
-  }
+    else docs.join(lmPass(docs, thresholdQ4), Seq("doc_id"), "left_semi")
+
+  /** The doc ids clearing the LM-perplexity threshold, with the bigram
+    * model trained on `docs` itself. */
+  def lmPass(docs: DataFrame,
+      thresholdQ4: Long = graft.text.TextOps.LmKeepThresholdQ4): DataFrame =
+    graft.text.TextOps.lmScoredDocs(docs)
+      .filter(col("sum_logp_q4") >= lit(thresholdQ4) * col("n_bigrams"))
+      .select("doc_id")
 
   /** Benchmark decontamination (the t10 operator as a pipeline stage):
     * drop every corpus document sharing more than `maxShared` distinct
@@ -194,15 +206,20 @@ object TrainingDataPipeline {
   }
 
   def decontaminateWithGrams(docs: DataFrame, bGrams: DataFrame,
-                             n: Int = 8, maxShared: Long = 0): DataFrame = {
-    val contaminated = grams(docs, n)
+                             n: Int = 8, maxShared: Long = 0): DataFrame =
+    docs.join(contaminated(docs, bGrams, n, maxShared), Seq("doc_id"),
+      "left_anti")
+
+  /** The doc ids sharing more than `maxShared` distinct word n-grams with
+    * the benchmark gram set `bGrams` ([[benchGrams]]). */
+  def contaminated(docs: DataFrame, bGrams: DataFrame,
+                   n: Int = 8, maxShared: Long = 0): DataFrame =
+    grams(docs, n)
       .join(broadcast(bGrams), Seq("g"))
       .groupBy("doc_id")
       .agg(countDistinct(col("g")).as("n_shared"))
       .filter(col("n_shared") > maxShared)
       .select("doc_id")
-    docs.join(contaminated, Seq("doc_id"), "left_anti")
-  }
 
   /** Full pipeline; writes the curated corpus partitioned by lang and
     * returns per-stage counts. Documents with doc_id % 50 == 0 stand in
@@ -215,7 +232,8 @@ object TrainingDataPipeline {
     * four times) — and the stages that consume their input twice
     * internally (signature path + anti-join) read the materialized stage
     * instead of recomputing it. A production pipeline checkpoints
-    * between stages for the same reason. */
+    * between stages for the same reason. The stages are freed when the
+    * run ends, also when the write fails. */
   def run(t: Tables, outPath: String): Stats = {
     val input = t.documents
     run(input.filter(col("doc_id") % 50 =!= 0),
@@ -228,20 +246,17 @@ object TrainingDataPipeline {
     * one (a planted contaminated doc can be injected). */
   def run(corpus: DataFrame, bench: DataFrame, outPath: String,
           inputCount: Long = -1L,
-          lmThresholdQ4: Long = graft.text.TextOps.LmKeepThresholdQ4): Stats = {
-    val q = qualityFilter(scrub(corpus))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val e = exactDedup(q).persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nearDupRemoval(e).persist(StorageLevel.MEMORY_AND_DISK)
-    val p = perplexityFilter(n, lmThresholdQ4)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val d = decontaminate(p, bench).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+          lmThresholdQ4: Long = graft.text.TextOps.LmKeepThresholdQ4): Stats =
+    Intermediates.run { in =>
+      val q = in.keep(qualityFilter(scrub(corpus)))
+      val e = in.keep(exactDedup(q))
+      val n = in.keep(nearDupRemoval(e))
+      val p = in.keep(perplexityFilter(n, lmThresholdQ4))
+      val d = in.keep(decontaminate(p, bench))
       PartitionedWriter.writePartitioned(d, outPath, Seq("lang"))
-      val in = if (inputCount >= 0) inputCount else corpus.count()
-      Stats(in, q.count(), e.count(), n.count(), p.count(), d.count())
-    } finally Seq(q, e, n, p, d).foreach(_.unpersist(false))
-  }
+      val input = if (inputCount >= 0) inputCount else corpus.count()
+      Stats(input, q.count(), e.count(), n.count(), p.count(), d.count())
+    }
 
   /** The curated corpus with `observe` data-quality counters attached:
     * row count, total chars, and null-text count are accumulated DURING

@@ -802,7 +802,7 @@ object Similarity {
     * with vec_id tie-breaks; λ arithmetic is identical IEEE ops on both
     * the engine and the spec's independent kernel recomputation.
     * Rows-only; SimilarityFixtureSpec pins the full greedy trace. */
-  def s15(t: Tables): DataFrame = {
+  def s15(t: Tables): DataFrame = graft.Intermediates.run { in =>
     val Lambda = 0.7
     val Shortlist = 50
     val corpus = prepped(t)
@@ -811,13 +811,12 @@ object Similarity {
         col("norm").as("q_norm"))
     val wS = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("vec_id"))
-    val shortlist = corpus.crossJoin(broadcast(queries10))
+    val shortlist = in.keep(corpus.crossJoin(broadcast(queries10))
       .select(col("q_id"), col("vec_id"), col("vec"), col("norm"),
         round(dot("vec", "q_vec") / (col("norm") * col("q_norm")), 4)
           .as("sim"))
       .withColumn("srn", row_number().over(wS))
-      .filter(col("srn") <= Shortlist)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("srn") <= Shortlist))
     val pairRows = shortlist.as("a").join(shortlist.as("b"), Seq("q_id"))
       .filter(col("a.vec_id") =!= col("b.vec_id"))
       .select(col("q_id"), col("a.vec_id").as("ca"),
@@ -849,9 +848,7 @@ object Similarity {
       }
     }
     import t.spark.implicits._
-    // both shortlist consumers have collected by now — release the cache
-    // (round-5 advice: per-query caches outlived their operator)
-    shortlist.unpersist(false)
+    // driver-side rows: the result reads nothing the scope frees
     picked.toDF("q_id", "vec_id", "sim", "mmr_rank")
       .orderBy("q_id", "mmr_rank")
   }
@@ -874,7 +871,7 @@ object Similarity {
     * SimilarityFixtureSpec pins the full per-budget expectation, and
     * tools/ann_recall_oracle.py recomputes the curve a THIRD way
     * (pure-Python kernel) as belt-and-braces. */
-  def s16(t: Tables): DataFrame = {
+  def s16(t: Tables): DataFrame = graft.Intermediates.materialized { in =>
     val Budgets = ProbeBudgets
     val corpus = prepped(t)
       .withColumn("bucket", rh_bucket(col("vec"), Planes, Seed))
@@ -892,7 +889,7 @@ object Similarity {
     // codebook pattern): Q×k ids, fingerprint-keyed, reused across the
     // probe budgets AND across invocations — the brute-force pass is
     // paid once per corpus, while the per-budget candidate caches stay
-    // per-query (released below)
+    // per-query (kept in this query's scope)
     val truth = truthCache(t, "truth", "embeddings") {
       corpus.crossJoin(broadcast(
           queries10.select(col("q_id"), col("q_vec"), col("q_norm"))))
@@ -913,13 +910,12 @@ object Similarity {
     // aggregate over the same cached relation. Before: 4 shuffle joins +
     // 4 distincts + 4 truth joins; after: 1 join + 1 groupBy + 1 truth
     // join (plans/r15/s16_probe_curve_{before,after}.txt).
-    val minOrd = bucketed
+    val minOrd = in.keep(bucketed
       .join(probes.filter(col("ord") < Budgets.max).hint("SHUFFLE_HASH"),
         "bucket")
       .groupBy(col("q_id"), col("vec_id"))
       .agg(min(col("ord")).as("min_ord"))
-      .join(truth.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"), "left")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .join(truth.withColumn("hit", lit(1L)), Seq("q_id", "vec_id"), "left"))
     val perBudget = Budgets.map { p =>
       minOrd.filter(col("min_ord") < p)
         .agg(count(lit(1)).as("total_candidates"),
@@ -929,8 +925,7 @@ object Similarity {
           expr(s"(200 * n_hits + $NQueries * $TopK) div " +
             s"(2 * $NQueries * $TopK)").as("recall_pct"))
     }
-    graft.CacheHygiene.materializeAndRelease(
-      perBudget.reduce(_ unionByName _).orderBy("n_probes"), Seq(minOrd))
+    perBudget.reduce(_ unionByName _).orderBy("n_probes")
   }
 
   val queries: Map[String, Tables => DataFrame] = Map(

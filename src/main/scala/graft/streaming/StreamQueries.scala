@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.storage.StorageLevel
 
 /** Driver-graded Structured Streaming queries (SURVEY §2 st01–st18).
   *
@@ -1030,10 +1029,10 @@ object StreamQueries {
       crashMarker: Option[java.io.File] = None): Unit = {
     val changes = replayStream(spark, changesDir)
     durableSession("st19 pruned upsert session", changes, checkpoint,
-        crashMarker) { (batch, batchId) =>
+        crashMarker) { (batch, batchId) => graft.Intermediates.run { in =>
       val sp = batch.sparkSession
       val prev = readManifest(snapRoot, batchId)
-      val b = batch.persist(StorageLevel.MEMORY_AND_DISK)
+      val b = in.keep(batch)
       val touched = b
         .select(pmod(col("k"), lit(UpsertBuckets)).as("_bkt"))
         .distinct()
@@ -1045,7 +1044,6 @@ object StreamQueries {
       // the chunking ever changes; idempotent under retry (manifest
       // rewrite is deterministic from prev).
       if (touched.isEmpty) {
-        b.unpersist()
         writeManifest(snapRoot, batchId + 1, prev)
       } else {
         // ONE read of the touched buckets' current files, ONE merge
@@ -1065,7 +1063,6 @@ object StreamQueries {
           .repartition(UpsertBuckets, col("_bkt"))
           .write.mode("overwrite").partitionBy("_bkt")
           .parquet(s"$snapRoot/$verDir")
-        b.unpersist()
         // a touched bucket whose rows were ALL deleted produces no
         // _bkt= dir; its manifest entry must still resolve, so give it
         // an explicit empty file (rare — a whole key-residue emptied)
@@ -1077,7 +1074,7 @@ object StreamQueries {
         val next = prev ++ touched.map(k => k -> s"$verDir/_bkt=$k")
         writeManifest(snapRoot, batchId + 1, next)
       }
-    }
+    }}
   }
 
   /** Seed the pruned layout: the base table split into its key-hash
@@ -1545,128 +1542,130 @@ object StreamQueries {
         "names would collide across sessions (ADVICE r13)")
     import graft.functions.exprs.canon_fp
     import graft.pipeline.TrainingDataPipeline.{benchGrams, decontaminateWithGrams, exactDedup, qualityFilter}
-    // bench gram set computed ONCE per session (r15): the bench corpus
-    // is static across micro-batches, but decontaminate(uniq, bench)
-    // re-scanned + re-exploded + re-distinct'd it inside every batch.
-    // localCheckpoint materializes the small distinct gram relation so
-    // each batch only pays the broadcast probe. Same relation, so the
-    // admitted set is byte-identical (oracle unchanged).
-    val bGrams = benchGrams(bench).localCheckpoint()
-    // the standing fingerprint index is SESSION-STATIC (one snapshot per
-    // admission session, the d11 rotation pattern), yet every micro-batch
-    // re-read its parquet (footer + scan job per batch) just to rebuild
-    // the same anti-join build side. Checkpoint it once per session (r16;
-    // the bGrams treatment) — each batch then pays only the broadcast
-    // build over the materialized blocks. Same relation, so the admitted
-    // set is byte-identical (oracle unchanged). A/B receipt against the
-    // per-batch re-read: plans/r16/exp_st17_basefps.log, median B/A 0.950.
-    val baseFps = spark.read.parquet(standingIdx).localCheckpoint()
-    def stageDir(s: String) = s"$out/$s"
-    val incoming = replayStream(spark, incomingDir)
-    durableSession("st17 admission session", incoming, checkpoint,
-        crashMarker, confs) { (batch, batchId) =>
-      val sp = batch.sparkSession
-      // qual/novel persisted like p06's stages (r15): each feeds its
-      // own stage sink AND the next stage's lineage, so unpersisted
-      // the quality kernel re-ran 3x per batch (novel sink, uniq
-      // build, qual sink) — O(batch) recompute that at scale is the
-      // dominant per-batch term. Released after the sinks below.
-      val qual = qualityFilter(batch).persist(StorageLevel.MEMORY_AND_DISK)
-      val novel = qual.withColumn("fp", canon_fp(col("text")))
-        .join(baseFps, Seq("fp"), "left_anti").drop("fp")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // cross-batch dedup: probe the fps accumulated by PRIOR batches
-      // (across ALL session tags — day 2 probes day 1's index too).
-      // Exclude THIS batch id: foreachBatch's retry contract re-runs a
-      // failed micro-batch under the same id, and a prior attempt may
-      // have already written its seen_fps snapshot — a retried batch
-      // anti-joining against its own fingerprints would emit empty
-      // uniq/admitted, breaking the sink's idempotency claim.
-      val prior0 = admissionBatchDirs(out, "seen_fps")
-        .filterNot(p => new java.io.File(p).getName == s"batch_$tag$batchId")
-      // Snapshot COMPACTION (long-horizon polish, round-13): the probe
-      // reads the UNION of snapshot dirs, so an unbounded daily ingest
-      // would accumulate one dir per batch forever. When the priors
-      // reach the threshold, coalesce them into one compact_ dir.
-      // Crash-safety rides the probe's own algebra (duplicate fps
-      // across dirs are harmless to a left_anti) plus strict ordering:
-      // (1) the union is written to a dot-prefixed temp dir the
-      // listing filters never see, (2) renamed into place, (3) only
-      // then are the sources deleted — a crash after (2) leaves a
-      // redundant-but-correct union, a crash during (1) leaves an
-      // invisible orphan, and a RETRIED batch that finds the target
-      // already present skips compaction entirely (the next batch's
-      // compaction sweeps any leftover sources). The CURRENT batch's
-      // own snapshot is never compacted — the retry contract needs it
-      // excludable by name.
-      // the dir-count curve, one line per batch: the long-horizon
-      // boundedness receipt reads this directly (round-13 task 4)
-      System.err.println(s"[admission] batch $tag$batchId: " +
-        s"prior seen_fps dirs=${prior0.size}" +
-        (if (prior0.size >= compactThreshold) " -> compacting" else ""))
-      val prior =
-        if (prior0.size < compactThreshold) prior0
-        else {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(); ()
-          }
-          val target =
-            new java.io.File(s"${stageDir("seen_fps")}/compact_$tag$batchId")
-          // an existing target means a retried batch: it was already
-          // in the prior0 listing (compact_ prefix), so just probe the
-          // redundant union and let the next batch's compaction sweep
-          if (target.exists()) prior0
+    // the session-static relations below are kept for the whole session
+    // and freed when it ends, not at some later driver GC
+    graft.Intermediates.run { session =>
+      // bench gram set computed ONCE per session (r15): the bench corpus
+      // is static across micro-batches, but decontaminate(uniq, bench)
+      // re-scanned + re-exploded + re-distinct'd it inside every batch.
+      // Checkpointing materializes the small distinct gram relation so
+      // each batch only pays the broadcast probe. Same relation, so the
+      // admitted set is byte-identical (oracle unchanged).
+      val bGrams = session.checkpoint(benchGrams(bench))
+      // the standing fingerprint index is SESSION-STATIC (one snapshot per
+      // admission session, the d11 rotation pattern), yet every micro-batch
+      // re-read its parquet (footer + scan job per batch) just to rebuild
+      // the same anti-join build side. Checkpoint it once per session (r16;
+      // the bGrams treatment) — each batch then pays only the broadcast
+      // build over the materialized blocks. Same relation, so the admitted
+      // set is byte-identical (oracle unchanged). A/B receipt against the
+      // per-batch re-read: plans/r16/exp_st17_basefps.log, median B/A 0.950.
+      val baseFps = session.checkpoint(spark.read.parquet(standingIdx))
+      def stageDir(s: String) = s"$out/$s"
+      val incoming = replayStream(spark, incomingDir)
+      durableSession("st17 admission session", incoming, checkpoint,
+          crashMarker, confs) { (batch, batchId) => graft.Intermediates.run { in =>
+        val sp = batch.sparkSession
+        // qual/novel kept like p06's stages (r15): each feeds its own
+        // stage sink AND the next stage's lineage, so uncached the
+        // quality kernel re-ran 3x per batch (novel sink, uniq build, qual
+        // sink) — O(batch) recompute that at scale is the dominant
+        // per-batch term. Freed when the batch ends, also when it fails,
+        // so a retried batch does not add to a failed attempt's caches.
+        val qual = in.keep(qualityFilter(batch))
+        val novel = in.keep(qual.withColumn("fp", canon_fp(col("text")))
+          .join(baseFps, Seq("fp"), "left_anti").drop("fp"))
+        // cross-batch dedup: probe the fps accumulated by PRIOR batches
+        // (across ALL session tags — day 2 probes day 1's index too).
+        // Exclude THIS batch id: foreachBatch's retry contract re-runs a
+        // failed micro-batch under the same id, and a prior attempt may
+        // have already written its seen_fps snapshot — a retried batch
+        // anti-joining against its own fingerprints would emit empty
+        // uniq/admitted, breaking the sink's idempotency claim.
+        val prior0 = admissionBatchDirs(out, "seen_fps")
+          .filterNot(p => new java.io.File(p).getName == s"batch_$tag$batchId")
+        // Snapshot COMPACTION (long-horizon polish, round-13): the probe
+        // reads the UNION of snapshot dirs, so an unbounded daily ingest
+        // would accumulate one dir per batch forever. When the priors
+        // reach the threshold, coalesce them into one compact_ dir.
+        // Crash-safety rides the probe's own algebra (duplicate fps
+        // across dirs are harmless to a left_anti) plus strict ordering:
+        // (1) the union is written to a dot-prefixed temp dir the
+        // listing filters never see, (2) renamed into place, (3) only
+        // then are the sources deleted — a crash after (2) leaves a
+        // redundant-but-correct union, a crash during (1) leaves an
+        // invisible orphan, and a RETRIED batch that finds the target
+        // already present skips compaction entirely (the next batch's
+        // compaction sweeps any leftover sources). The CURRENT batch's
+        // own snapshot is never compacted — the retry contract needs it
+        // excludable by name.
+        // the dir-count curve, one line per batch: the long-horizon
+        // boundedness receipt reads this directly (round-13 task 4)
+        System.err.println(s"[admission] batch $tag$batchId: " +
+          s"prior seen_fps dirs=${prior0.size}" +
+          (if (prior0.size >= compactThreshold) " -> compacting" else ""))
+        val prior =
+          if (prior0.size < compactThreshold) prior0
           else {
-            val tmp = new java.io.File(target.getParentFile,
-              s".tmp_${target.getName}")
-            rm(tmp)
-            sp.read.parquet(prior0: _*).distinct()
-              .write.mode("overwrite").parquet(tmp.getPath)
-            java.nio.file.Files.move(tmp.toPath, target.toPath)
-            prior0.foreach(p => rm(new java.io.File(p)))
-            Seq(target.getPath)
+            def rm(f: java.io.File): Unit = {
+              Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+              f.delete(); ()
+            }
+            val target =
+              new java.io.File(s"${stageDir("seen_fps")}/compact_$tag$batchId")
+            // an existing target means a retried batch: it was already
+            // in the prior0 listing (compact_ prefix), so just probe the
+            // redundant union and let the next batch's compaction sweep
+            if (target.exists()) prior0
+            else {
+              val tmp = new java.io.File(target.getParentFile,
+                s".tmp_${target.getName}")
+              rm(tmp)
+              sp.read.parquet(prior0: _*).distinct()
+                .write.mode("overwrite").parquet(tmp.getPath)
+              java.nio.file.Files.move(tmp.toPath, target.toPath)
+              prior0.foreach(p => rm(new java.io.File(p)))
+              Seq(target.getPath)
+            }
           }
-        }
-      val crossNovel =
-        if (prior.isEmpty) novel
-        else novel.withColumn("fp", canon_fp(col("text")))
-          .join(sp.read.parquet(prior: _*), Seq("fp"), "left_anti")
-          .drop("fp")
-      val uniq = exactDedup(crossNovel)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val admitted = decontaminateWithGrams(uniq, bGrams)
-      // ONE combined stage sink per batch (r16): the five per-stage
-      // writes were five separate write JOBS + five file-commit
-      // protocols per micro-batch — pure per-job latency at any batch
-      // size, ~5 output dirs of tiny files per batch (guide §2.6/§6).
-      // The stages ride ONE parquet dir per batch as a `stage` column
-      // (NOT partitionBy: an EMPTY stage — e.g. a re-ingest day whose
-      // uniq/admitted are zero rows — must stay representable, and
-      // partitioned writes drop empty partitions). The union's
-      // branches read the same persisted qual/novel/uniq caches the
-      // per-stage sinks read, so no stage computes twice; `text` is
-      // carried only for admitted rows (the rollup's token mass),
-      // null elsewhere. Idempotency is unchanged: a retried batch
-      // OVERWRITES its own single dir.
-      def staged(df: DataFrame, stage: String, withText: Boolean) =
-        df.select(col("doc_id"), col("source"),
-          (if (withText) col("text") else lit(null).cast("string"))
-            .as("text"),
-          lit(stage).as("stage"))
-      // (A/B receipt against five per-stage writes:
-      // plans/r16/exp_st17_sink.log, median B/A 0.760)
-      staged(batch, "incoming", withText = false)
-        .unionByName(staged(qual, "quality", withText = false))
-        .unionByName(staged(novel, "novel", withText = false))
-        .unionByName(staged(uniq, "uniq", withText = false))
-        .unionByName(staged(admitted, "admitted", withText = true))
-        .write.mode("overwrite")
-        .parquet(s"${stageDir("stages")}/batch_$tag$batchId")
-      uniq.select(canon_fp(col("text")).as("fp")).distinct()
-        .write.mode("overwrite")
-        .parquet(s"${stageDir("seen_fps")}/batch_$tag$batchId")
-      Seq(qual, novel, uniq).foreach(_.unpersist())
+        val crossNovel =
+          if (prior.isEmpty) novel
+          else novel.withColumn("fp", canon_fp(col("text")))
+            .join(sp.read.parquet(prior: _*), Seq("fp"), "left_anti")
+            .drop("fp")
+        val uniq = in.keep(exactDedup(crossNovel))
+        val admitted = decontaminateWithGrams(uniq, bGrams)
+        // ONE combined stage sink per batch (r16): the five per-stage
+        // writes were five separate write JOBS + five file-commit
+        // protocols per micro-batch — pure per-job latency at any batch
+        // size, ~5 output dirs of tiny files per batch (guide §2.6/§6).
+        // The stages ride ONE parquet dir per batch as a `stage` column
+        // (NOT partitionBy: an EMPTY stage — e.g. a re-ingest day whose
+        // uniq/admitted are zero rows — must stay representable, and
+        // partitioned writes drop empty partitions). The union's
+        // branches read the same persisted qual/novel/uniq caches the
+        // per-stage sinks read, so no stage computes twice; `text` is
+        // carried only for admitted rows (the rollup's token mass),
+        // null elsewhere. Idempotency is unchanged: a retried batch
+        // OVERWRITES its own single dir.
+        def staged(df: DataFrame, stage: String, withText: Boolean) =
+          df.select(col("doc_id"), col("source"),
+            (if (withText) col("text") else lit(null).cast("string"))
+              .as("text"),
+            lit(stage).as("stage"))
+        // (A/B receipt against five per-stage writes:
+        // plans/r16/exp_st17_sink.log, median B/A 0.760)
+        staged(batch, "incoming", withText = false)
+          .unionByName(staged(qual, "quality", withText = false))
+          .unionByName(staged(novel, "novel", withText = false))
+          .unionByName(staged(uniq, "uniq", withText = false))
+          .unionByName(staged(admitted, "admitted", withText = true))
+          .write.mode("overwrite")
+          .parquet(s"${stageDir("stages")}/batch_$tag$batchId")
+        uniq.select(canon_fp(col("text")).as("fp")).distinct()
+          .write.mode("overwrite")
+          .parquet(s"${stageDir("seen_fps")}/batch_$tag$batchId")
+      }}
     }
   }
 

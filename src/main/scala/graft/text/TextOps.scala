@@ -63,8 +63,8 @@ object TextOps {
         round(col("n_chars") * 1.0 / col("n_tokens"), 4).as("avg_token_len"),
         round(col("qs.n_punct") * 1.0 / col("n_chars"), 4).as("punct_ratio"),
         round(col("qs.n_stop") * 1.0 / col("n_tokens"), 4).as("stopword_ratio"),
-        (col("n_tokens") >= 10 && col("n_tokens") <= 1000 &&
-          col("qs.n_punct") * 1.0 / col("n_chars") < 0.2).as("quality_ok"))
+        graft.pipeline.TrainingDataPipeline
+          .qualityOk(col("qs"), col("n_chars")).as("quality_ok"))
       .orderBy("doc_id")
 
   /** t03 — marker-word language ID; result is the (labeled lang ×

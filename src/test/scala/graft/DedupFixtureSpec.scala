@@ -294,6 +294,25 @@ class DedupFixtureSpec extends AnyFunSuite {
       "every path node must join the min-id component")
   }
 
+  test("min-label propagation frees each superseded round and its edge " +
+    "list: only the returned labels stay stored") {
+    val spark = t.spark
+    import spark.implicits._
+    val path = (0L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    def storedIds = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = storedIds
+    val (labels, rounds) = Dedup.minLabelPropagation(path)
+    assert(rounds == 13)
+    val kept = TestSpark.rddId(labels)
+    // frees are non-blocking: wait for the block store to settle
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while ((storedIds -- before) != Set(kept) &&
+      System.nanoTime() < deadline) Thread.sleep(20)
+    assert(storedIds -- before == Set(kept),
+      s"the call must leave only its labels stored: ${storedIds -- before}")
+    Intermediates.free(labels)
+  }
+
   // --- d17 fuzzy join: PassJoin blocking vs brute-force levenshtein ---
 
   /** Classic DP Levenshtein — the independent in-JVM twin of both

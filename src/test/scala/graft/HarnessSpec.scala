@@ -141,6 +141,33 @@ class HarnessSpec extends AnyFunSuite {
     assert(left.isEmpty, s"deleted options or scopes still named: $left")
   }
 
+  test("under src/main only Intermediates persists, unpersists or names a " +
+    "storage level, and the deleted cache-release names appear nowhere") {
+    val files = mainSources
+    val owned = for {
+      (f, lines) <- files if f != "graft/Intermediates.scala"
+      (line, i) <- lines.zipWithIndex
+      tok <- Seq(".persist(", "unpersist", "StorageLevel")
+      if line.contains(tok)
+    } yield s"$tok at $f:${i + 1}"
+    assert(owned.isEmpty, s"cache lifetimes outside Intermediates: $owned")
+    val gone = for {
+      (f, lines) <- files
+      (line, i) <- lines.zipWithIndex
+      tok <- Seq("CacheHygiene", "materializeAndRelease")
+      if line.contains(tok)
+    } yield s"$tok at $f:${i + 1}"
+    assert(gone.isEmpty, s"deleted names still used: $gone")
+    val releaseLists = for {
+      (f, lines) <- files
+      (line, i) <- lines.zipWithIndex
+      if """\)\s*:\s*\(DataFrame,\s*Seq\[DataFrame\]\)""".r
+        .findFirstIn(line).nonEmpty
+    } yield s"$f:${i + 1}"
+    assert(releaseLists.isEmpty,
+      s"functions returning (DataFrame, Seq[DataFrame]): $releaseLists")
+  }
+
   test("a query-name filter with an unknown name throws") {
     assert(Harness.queryNames("SPARK_GRAFT_BENCH_ONLY", None).isEmpty)
     assert(Harness.queryNames("SPARK_GRAFT_BENCH_ONLY",

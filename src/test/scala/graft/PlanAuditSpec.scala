@@ -110,17 +110,20 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("g01/g02 build their edge relation once: a single persisted scan " +
     "feeds all 8 iterations") {
-    // audit the internal builder: the public wrapper eagerly checkpoints
-    // and releases the cache (CacheHygiene), so its returned plan is a
-    // checkpoint scan — the plan below is the one that executes under it
-    Seq("g01" -> operators.GraphOps.g01Plan(TestSpark.tables)._1,
-        "g02" -> operators.GraphOps.g02Plan(TestSpark.tables)._1).foreach {
-      case (name, df) =>
-        val plan = df.queryExecution.executedPlan.toString
-        // every iteration must read the InMemoryRelation, not re-derive
-        // the lineitem⨝orders edge list
-        assert(plan.contains("InMemoryTableScan"),
-          s"$name iterations must reuse the persisted edges:\n$plan")
+    // audit the internal builder: the public wrapper materializes it and
+    // frees its intermediates, so its returned plan is a checkpoint scan —
+    // the plan below is the one that executes under it. The scope frees
+    // the persisted edges when the case ends.
+    Intermediates.run { in =>
+      Seq("g01" -> operators.GraphOps.g01Plan(TestSpark.tables, in),
+          "g02" -> operators.GraphOps.g02Plan(TestSpark.tables, in)).foreach {
+        case (name, df) =>
+          val plan = df.queryExecution.executedPlan.toString
+          // every iteration must read the InMemoryRelation, not re-derive
+          // the lineitem⨝orders edge list
+          assert(plan.contains("InMemoryTableScan"),
+            s"$name iterations must reuse the persisted edges:\n$plan")
+      }
     }
   }
 

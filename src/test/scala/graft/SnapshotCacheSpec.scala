@@ -86,19 +86,12 @@ class SnapshotCacheSpec extends AnyFunSuite {
       val ck = spark.range(n).toDF("id").localCheckpoint()
       (ck, ck.count())
     }
-    def rddId(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.logical match {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-      }
-    def stored(id: Int): Boolean =
-      spark.sparkContext.getRDDStorageInfo.exists(_.id == id)
+    import TestSpark.{rddId, released, stored}
     val (old, _) = cache.getOrElseUpdate("scope", "fp1")(build(100))
     assert(stored(rddId(old)), "the checkpoint must be stored before eviction")
     val (fresh, n) = cache.getOrElseUpdate("scope", "fp2")(build(10))
     assert(n == 10L)
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (stored(rddId(old)) && System.nanoTime() < deadline) Thread.sleep(20)
-    assert(!stored(rddId(old)),
+    assert(released(rddId(old)),
       "the superseded checkpoint's RDD must leave the block store")
     assert(stored(rddId(fresh)), "the live artifact must keep its blocks")
     spark.sparkContext.getPersistentRDDs.get(rddId(fresh))

@@ -18,6 +18,33 @@ object TestSpark {
   val sfDir = "/root/testdata/sf0.001"
   def tables: Tables = Tables(spark, sfDir)
 
+  /** Entries in the shared context's cache manager: the persisted plans
+    * of every session, clones included (they share the cache manager). */
+  def cacheEntries: Int = {
+    val cm = spark.sharedState.cacheManager
+    val f = cm.getClass.getDeclaredField("cachedData")
+    f.setAccessible(true)
+    f.get(cm).asInstanceOf[IndexedSeq[_]].size
+  }
+
+  /** Whether the RDD `id` still has blocks in the block store. */
+  def stored(id: Int): Boolean =
+    spark.sparkContext.getRDDStorageInfo.exists(_.id == id)
+
+  /** Waits up to 10 s for the non-blocking removal of RDD `id`'s blocks;
+    * true once they are gone. */
+  def released(id: Int): Boolean = {
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (stored(id) && System.nanoTime() < deadline) Thread.sleep(20)
+    !stored(id)
+  }
+
+  /** The RDD a checkpointed DataFrame scans. */
+  def rddId(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+
   /** One SQL execution as planned when it started: its plan text, the
     * partition count of each of its own shuffle exchanges (an adaptive
     * plan's initial exchanges) and of each exchange in the cached plans it
