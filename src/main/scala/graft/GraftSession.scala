@@ -30,6 +30,14 @@ object GraftSession {
   val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
   val CodegenCacheMaxEntries = 1024
 
+  /** Whole-stage codegen stage ids in generated class names, set off.
+    * Under AQE a plan's stage ids can change between runs of the same
+    * query (d12's two aggregate branches swap ids 5 and 6), and with the
+    * id in the class name the same code then misses the cache above and
+    * compiles again. Runs 2-4 at sf0.1 on 4 cores compiled 4, 0, 0
+    * classes for d12 and 10, 4, 4 for p05 with it on; 0 with it off. */
+  val CodegenIdInClassNameKey = "spark.sql.codegen.useIdInClassName"
+
   /** Per-session artifact isolation, set off. With it on, every session
     * runs its tasks under a classloader of its own, and Spark's cache of
     * generated classes is keyed by classloader, so a session cloned per
@@ -60,6 +68,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config(CkptChecksumKey, "false")
       .config(CodegenCacheKey, CodegenCacheMaxEntries)
+      .config(CodegenIdInClassNameKey, "false")
       .config(ArtifactIsolationKey, "false")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()

@@ -38,6 +38,8 @@ object Dedup {
   private val RowsPerBand = K / Bands
   private val Seed = 42L
   private[graft] val MaxBucket = 64  // hot-bucket guard
+  /** Representative elections per hot bucket in [[resolveHotBuckets]]. */
+  private[graft] val HotRounds = 3
   // The ≥0.5 est-Jaccard policy lives as the INTEGER gate
   // `n_matches * 2 >= K` (d02/st14/the d02 oracle's HAVING) — one live
   // definition; a separate double constant drifted out of sync with the
@@ -714,28 +716,24 @@ object Dedup {
     * pair path; each oversized bucket elects its min-doc_id
     * representative, members passing `simTest` against the rep leave as
     * (rep, member) duplicate pairs — O(bucket) work, never O(bucket²) —
-    * and the remnant re-enters. A bucket still oversized after `rounds`
-    * elections is the documented residual (bucketPairs' internal gate
-    * drops it). Returns (normal-banded rows, hot duplicate pairs with
-    * payloads). */
+    * and the remnant re-enters. A bucket still oversized after
+    * [[HotRounds]] elections is the documented residual (bucketPairs'
+    * internal gate drops it). The cap is [[MaxBucket]], necessarily the
+    * same as bucketPairs' gate. Returns (normal-banded rows, hot
+    * duplicate pairs with payloads).
+    *
+    * `banded` must be checkpointed by the caller (its lineage carries the
+    * signature/assignment kernels, and every round and union branch
+    * re-reads it); each surviving remnant is checkpointed the same way,
+    * so round r's plan never re-executes rounds 0..r-1. */
   private[graft] def resolveHotBuckets(banded: DataFrame,
-      simTest: (Column, Column) => Column, rounds: Int,
-      cap: Int = MaxBucket,
-      alreadyMaterialized: Boolean = false): (DataFrame, DataFrame) = {
-    // The banded input is materialized ONCE (its lineage usually carries
-    // the signature/assignment kernels): every round and every union
-    // branch below re-reads the checkpoint instead of re-deriving the
-    // upstream scan per branch. Each surviving remnant is checkpointed
-    // the same way, so round r's plan never re-executes rounds 0..r-1.
-    // A caller that checkpointed `banded` itself (d10 shares it with its
-    // accounting rollup) passes alreadyMaterialized to skip a second
-    // full copy.
-    var pending = if (alreadyMaterialized) banded else banded.localCheckpoint()
+      simTest: (Column, Column) => Column): (DataFrame, DataFrame) = {
+    var pending = banded
     var normalParts = Vector.empty[DataFrame]
     var hotPairParts = Vector.empty[DataFrame]
     var round = 0
     var exhausted = false
-    while (round < rounds && !exhausted) {
+    while (round < HotRounds && !exhausted) {
       // oversized-bucket keys of the CURRENT remnant; shrinks every
       // round, AQE broadcasts it. Materializing the tiny key set also
       // answers "any hot buckets left?" — the common no-hot-bucket case
@@ -743,7 +741,7 @@ object Dedup {
       val hotKeys = pending
         .groupBy("band_id", "band_sig")
         .agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") > cap)
+        .filter(col("bsz") > MaxBucket)
         .select("band_id", "band_sig")
         .localCheckpoint()
       if (hotKeys.isEmpty) {
@@ -804,15 +802,13 @@ object Dedup {
           .as("band_sig"))
   }
 
-  private[graft] def semanticPairsFrom(banded: DataFrame,
-      materialized: Boolean = false): DataFrame = {
+  private[graft] def semanticPairsFrom(banded: DataFrame): DataFrame = {
     // Exact copies at web scale overflow ANY fixed bucket bound (every
     // copy shares every band key), so hot buckets resolve by iterative
     // rep election instead of being dropped — 0-recall-on-boilerplate
     // found the hard way on the 100x-replicated sf10 audit.
     val (normal, hotPairs) =
-      resolveHotBuckets(banded, semCos(_, _) >= SemTau, rounds = 3,
-        alreadyMaterialized = materialized)
+      resolveHotBuckets(banded, semCos(_, _) >= SemTau)
     bucketPairs(normal)
       .unionByName(hotPairs)
       .select(col("doc_a"), col("doc_b"),
@@ -821,7 +817,7 @@ object Dedup {
   }
 
   private[graft] def semanticPairs(t: Tables): DataFrame =
-    semanticPairsFrom(semanticBanded(t))
+    semanticPairsFrom(semanticBanded(t).localCheckpoint())
 
   /** d10 — SemDeDup-style semantic dedup: cluster the embedding corpus
     * with the TRAINED coarse quantizer (Similarity's Lloyd codebook,
@@ -842,7 +838,7 @@ object Dedup {
     // accounting rollup both read the checkpoint (cent_id recovered from
     // band_sig's upper bits instead of a second assignment pass)
     val banded = semanticBanded(t).localCheckpoint()
-    val dropped = semanticPairsFrom(banded, materialized = true)
+    val dropped = semanticPairsFrom(banded)
       .select(col("doc_b").as("doc_id")).distinct()
       .withColumn("is_dup", lit(true))
     banded

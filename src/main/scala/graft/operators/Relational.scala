@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.streaming.EventsStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,8 +27,6 @@ import org.apache.spark.sql.functions._
   *    flatMapGroupsWithState with the same gap semantics.
   */
 object Relational {
-
-  private val SessionGapSec = 1800
 
   /** q21 — 5-table star join: revenue by region/nation (flagship).
     * TPC-H Q5-flavored; the reference's join capability (scalar-subquery
@@ -153,13 +152,12 @@ object Relational {
         sum(expr("cast(round(value * 100) as bigint)")).as("sum_value_cents"))
       .orderBy("hour_ts", "event_type")
 
-  /** q31 — gap-based sessionization (30-min inactivity gap) via
-    * lag + cumulative-sum windows, then per-user session stats. */
   /** Gap-based sessionization core, shared by q31 and the streaming
-    * equivalence spec: per-(user, session) summary under the same 30-min
-    * gap semantics as streaming.EventsStream.sessionWindows (streaming
-    * session_end = session_last + gap). One shuffle on user_id; both
-    * windows and the aggregation reuse that partitioning. */
+    * equivalence spec: per-(user, session) summary, a new session when
+    * the floor-second difference to the user's previous event is over
+    * EventsStream.SessionGapSec (the gap of the streaming twins too). One
+    * shuffle on user_id; both windows and the aggregation reuse that
+    * partitioning. */
   private[graft] def sessionized(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
@@ -167,7 +165,8 @@ object Relational {
       unix_timestamp(col("ts")) - unix_timestamp(lag(col("ts"), 1).over(byUser))
     val flagged = events.withColumn(
       "new_session",
-      when(gapSec.isNull || gapSec > SessionGapSec, 1L).otherwise(0L))
+      when(gapSec.isNull || gapSec > EventsStream.SessionGapSec, 1L)
+        .otherwise(0L))
     flagged.withColumn(
         "sess_id",
         sum(col("new_session"))
@@ -179,26 +178,11 @@ object Relational {
         sum(expr("cast(round(value * 100) as bigint)")).as("sum_value_cents"))
   }
 
-  def q31(t: Tables): DataFrame = {
-    val sessions = sessionized(t.events)
-      .select(col("user_id"), col("n_events"),
-        (unix_timestamp(col("session_last")) -
-          unix_timestamp(col("session_start"))).as("dur_sec"))
-    // avg session minutes, half-up at 2dp via EXACT integer arithmetic:
-    // round(sum_sec/(60n)·100) = (10·sum_sec + 3n) div (6n). Rounding the
-    // float average diverges across engines when the value's shortest
-    // decimal repr is a tie (e.g. 1.275), which real data does hit.
-    sessions
-      .groupBy(col("user_id"))
-      .agg(
-        count(lit(1)).as("n_sessions"),
-        sum(col("n_events")).as("n_events"),
-        sum(col("dur_sec")).as("sum_sec"))
-      .select(col("user_id"), col("n_sessions"), col("n_events"),
-        (expr("(10 * sum_sec + 3 * n_sessions) div (6 * n_sessions)") / 100.0)
-          .as("avg_session_min"))
-      .orderBy("user_id")
-  }
+  /** q31 — gap-based sessionization (30-min inactivity gap) via lag +
+    * cumulative-sum windows, rolled up per user by
+    * EventsStream.sessionRollup. */
+  def q31(t: Tables): DataFrame =
+    EventsStream.sessionRollup(sessionized(t.events))
 
   /** q32 — JSON column extraction (events.props) + aggregate on the
     * extracted field. get_json_object is codegen'd; at scale prefer
@@ -732,7 +716,7 @@ object Relational {
          |               ORDER BY ts, event_id) IS NULL
          |             OR date_diff('second',
          |                  lag(ts) OVER (PARTITION BY user_id
-         |                    ORDER BY ts, event_id), ts) > $SessionGapSec
+         |                    ORDER BY ts, event_id), ts) > ${EventsStream.SessionGapSec}
          |             THEN 1 ELSE 0 END AS new_session
          |      FROM events))
          |  GROUP BY user_id, sess_id)

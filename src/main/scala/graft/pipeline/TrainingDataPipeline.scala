@@ -37,6 +37,8 @@ object TrainingDataPipeline {
   private val K = 32
   private val Bands = 8
   private val Seed = 42L
+  /** Estimated-Jaccard threshold of [[nearDupRemoval]]. */
+  private val NearDupMinEst = 0.8
 
   /** PII scrub (the t14 operator as a pipeline stage): map-only redaction
     * of emails / IPs / id numbers in place. */
@@ -74,7 +76,7 @@ object TrainingDataPipeline {
     * Oversized buckets are NOT dropped: hot buckets are exactly the
     * correlated-boilerplate case where >MaxBucket near-identical docs
     * exceed the cap in EVERY band, so dropping would retain the hottest
-    * duplicate clusters. They are resolved ITERATIVELY, `hotRounds`
+    * duplicate clusters. They are resolved ITERATIVELY, Dedup.HotRounds
     * representative elections deep:
     *   round — every bucket at or under the cap exits to the normal
     *   O(bucket²) pair path; each oversized bucket elects a
@@ -89,19 +91,16 @@ object TrainingDataPipeline {
     * the bucket shrinks under the cap, by the exact pair path
     * (PipelineSpec plants exactly that fixture).
     *
-    * RESIDUAL BOUND: only a bucket still over the cap after `hotRounds`
-    * elections leaves pairs unchecked — which requires > hotRounds
+    * RESIDUAL BOUND: only a bucket still over the cap after HotRounds
+    * elections leaves pairs unchecked — which requires > HotRounds
     * mutually-dissimilar clusters of docs co-hashing in ONE band while
     * sharing no normal-size bucket in any other band; the miss
     * probability decays with the other Bands-1 bands, and those pairs
-    * are < minEst-similar to every elected rep, i.e. the bucket is
-    * mostly non-dup mass by construction. Raise `hotRounds` (cost is
+    * are < NearDupMinEst-similar to every elected rep, i.e. the bucket
+    * is mostly non-dup mass by construction. Raise HotRounds (cost is
     * one size-count + one broadcast-size join per round on the shrinking
     * hot remnant, never O(bucket²)) for full in-bucket recall. */
-  def nearDupRemoval(docs: DataFrame, minEst: Double = 0.8,
-                     hotRounds: Int = 3): DataFrame = {
-    // the hot-bucket cap is Dedup.MaxBucket (resolveHotBuckets' default)
-    // — ONE definition, necessarily identical to bucketPairs' gate
+  def nearDupRemoval(docs: DataFrame): DataFrame = {
     val sigs = docs
       .withColumn("toks", expr(exprs.wsTokensSql))
       .select(col("doc_id"), minhash_ngrams(col("toks"), 3, K, Seed).as("sig"))
@@ -116,10 +115,10 @@ object TrainingDataPipeline {
     // oversized after the rounds is the documented residual (bucketPairs'
     // internal gate drops it rather than going O(bucket²)).
     val (normal, hotPairs) = graft.dedup.Dedup.resolveHotBuckets(
-      banded, exprs.jaccard_est(_, _) >= minEst, hotRounds)
+      banded.localCheckpoint(), exprs.jaccard_est(_, _) >= NearDupMinEst)
     val pairLosers = graft.dedup.Dedup
       .bucketPairs(normal)
-      .filter(exprs.jaccard_est(col("p_a"), col("p_b")) >= minEst)
+      .filter(exprs.jaccard_est(col("p_a"), col("p_b")) >= NearDupMinEst)
       .select(col("doc_b").as("doc_id"))
     val losers = pairLosers
       .union(hotPairs.select(col("doc_b").as("doc_id"))).distinct()

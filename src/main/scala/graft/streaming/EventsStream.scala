@@ -7,7 +7,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Structured Streaming surface (SURVEY §2 non-query APIs): the streaming
-  * twins of q30 (tumbling window agg) and q31 (gap sessionization).
+  * twins of q30 (tumbling window agg) and q31 (gap sessionization), and
+  * the one home of the events family's event-time decisions: the session
+  * gap and q31's rollup, the click→purchase interval join, and the
+  * reorder-buffer finality rule. StreamQueries only wires sources and
+  * sinks around them.
   *
   * All transforms take an unbounded DataFrame/Dataset (from `readStream` or
   * MemoryStream in tests) and return one — source/sink agnostic, so the
@@ -15,20 +19,28 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * watermark (windowed aggs) or by active keys (sessionization): at 1000
   * executors, state is hash-partitioned by group key in the state store.
   */
-/** Per-user open-session accumulator for [[EventsStream.sessionizeStateful]].
-  * Top-level and public: the state-store encoder's generated code must be
-  * able to call the accessors (Janino rejects nested private classes). */
+/** An open session of [[EventsStream.sessionizeStateful]]: first and last
+  * event time (epoch ms), event count and value sum. Top-level and public:
+  * the state-store encoder's generated code must be able to call the
+  * accessors (Janino rejects nested private classes). */
 case class SessionState(start: Long, last: Long, n: Long, acc: Double)
 
-/** One buffered event awaiting finality in the reorder-buffered
-  * sessionizer (top-level for the encoder-codegen reason above). */
-case class SessEv(tsMs: Long, value: Double)
+/** One event held in a reorder buffer until it is final: epoch millis
+  * plus sub-second nanos give the full-precision event-time order key
+  * ((sec, nanos-in-sec, id); micros on disk, so lossless). */
+case class BufEvent(tsMs: Long, tsNs: Int, eventId: Long, value: Double)
 
 /** Reorder-buffered sessionizer state: the open session (if any), the
-  * group's max event time seen (drives the disorder-horizon finality
-  * rule), and the events still awaiting finality. */
-case class SessBufState(hasOpen: Boolean, start: Long, last: Long,
-    n: Long, acc: Double, maxSeenMs: Long, buf: List[SessEv])
+  * group's max event time seen, and the events not yet final. */
+case class SessBufState(open: Option[SessionState], maxSeenMs: Long,
+    buf: List[BufEvent])
+
+/** Threshold-alert state: running cents and event count over the final
+  * events, whether the alert fired, and the reorder buffer. */
+case class AlertState(cum: Long, n: Long, crossed: Boolean,
+    maxSeenMs: Long, buf: List[BufEvent])
+case class Crossing(user_id: Long, n_events_at_cross: Long,
+    cents_at_cross: Long)
 
 /** Per-user running totals for [[EventsStream.runningStats]] (top-level
   * for the same encoder-codegen reason as [[SessionState]]). */
@@ -70,13 +82,21 @@ object EventsStream {
   case class SessionSummary(
       user_id: Long,
       session_start: Timestamp,
-      session_end: Timestamp,
+      session_last: Timestamp,
       n_events: Long,
       sum_value: Double)
 
-  val SessionGap = "30 minutes"
+  /** The session gap, in whole seconds, of q31 and its streaming twins
+    * st02 and st08: a new session starts when the floor-second difference
+    * between a user's consecutive events is over it, so two events exactly
+    * 1800 s (or 1800.4 s) apart stay in one session, as in q31's
+    * `unix_timestamp` difference and its oracle's `date_diff('second')`. */
   val SessionGapSec = 1800L
-  private val SessionGapMs = 30L * 60 * 1000
+
+  /** The reordering horizon of the events replay: StreamQueries.replayDir
+    * delays each event by less than this, and every reorder buffer below
+    * takes it as its finality horizon. */
+  private[graft] val DisorderHorizonSec = 1800L
 
   /** Tumbling 1-hour windowed counts with a 2-hour watermark (late data
     * beyond that is dropped; state is evicted past the watermark). */
@@ -93,19 +113,47 @@ object EventsStream {
         col("window.start").as("hour_ts"),
         col("event_type"), col("cnt"), col("sum_value_cents"))
 
-  /** Gap sessionization with the native session_window operator —
-    * Spark-first twin of the batch q31. */
+  /** Gap sessionization with the native session_window operator (st02),
+    * the Spark-first twin of q31: one row per (user, session) with its
+    * first and last event time, event count and exact cents. The window
+    * runs over the floor-second event time with a gap of
+    * [[SessionGapSec]], and session_window merges windows that touch, so
+    * two events share a session exactly when their floor-second
+    * difference is at most [[SessionGapSec]]. */
   def sessionWindows(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), SessionGap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
+      .withColumn("ts_sec", date_trunc("second", col("ts")))
+      .withWatermark("ts_sec", "2 hours")
+      .groupBy(session_window(col("ts_sec"), s"$SessionGapSec seconds"),
+        col("user_id"))
+      .agg(min(col("ts")).as("session_start"),
+        max(col("ts")).as("session_last"),
+        count(lit(1)).as("n_events"),
         sum(expr("cast(round(value * 100) as bigint)")).as("sum_value_cents"))
-      .select(
-        col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
+      .select(col("user_id"), col("session_start"), col("session_last"),
         col("n_events"), col("sum_value_cents"))
+
+  /** q31's per-user rollup of per-session rows (`user_id`,
+    * `session_start`, `session_last`, `n_events`), shared by q31, st02
+    * and st08: session count, event count, and the average session length
+    * in minutes, half-up at 2dp via EXACT integer arithmetic:
+    * round(sum_sec/(60n)·100) = (10·sum_sec + 3n) div (6n). Rounding the
+    * float average diverges across engines when the value's shortest
+    * decimal repr is a tie (e.g. 1.275), which real data does hit. */
+  def sessionRollup(sessions: DataFrame): DataFrame =
+    sessions
+      .select(col("user_id"), col("n_events"),
+        (unix_timestamp(col("session_last")) -
+          unix_timestamp(col("session_start"))).as("dur_sec"))
+      .groupBy(col("user_id"))
+      .agg(
+        count(lit(1)).as("n_sessions"),
+        sum(col("n_events")).as("n_events"),
+        sum(col("dur_sec")).as("sum_sec"))
+      .select(col("user_id"), col("n_sessions"), col("n_events"),
+        (expr("(10 * sum_sec + 3 * n_sessions) div (6 * n_sessions)") / 100.0)
+          .as("avg_session_min"))
+      .orderBy("user_id")
 
   /** Sliding 1-hour windows every 15 minutes: each event contributes to 4
     * overlapping windows. Same watermark-bounded state as the tumbling
@@ -119,49 +167,30 @@ object EventsStream {
         col("window.start").as("win_start"),
         col("event_type"), col("cnt"))
 
-  /** Stream-stream interval join: each click pairs with purchases by the
-    * same user within the hour after it. Both sides are watermarked and
-    * the join carries a time-range condition, so each side's state is
-    * evicted once the other's watermark passes the range bound — state is
-    * O(events in the horizon), never unbounded. */
-  def clickToPurchase(clicks: DataFrame, purchases: DataFrame): DataFrame = {
-    val c = clicks
-      .select(col("event_id").as("click_id"), col("user_id").as("c_uid"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "2 hours")
-    val p = purchases
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_uid"),
-        col("ts").as("purchase_ts"), col("value"))
-      .withWatermark("purchase_ts", "2 hours")
-    c.join(p,
-      col("c_uid") === col("p_uid") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("interval 1 hour"))
-      .select(col("click_id"), col("purchase_id"), col("c_uid").as("user_id"),
-        col("click_ts"), col("purchase_ts"), col("value"))
-  }
-
-  /** Left-outer stream-stream interval join: like [[clickToPurchase]] but
-    * clicks WITHOUT a purchase in the hour still emit (null purchase
-    * side) once the purchase watermark passes their join horizon — the
-    * funnel-abandonment query. Same watermark-bounded state as the inner
-    * variant; the null-side emission is exactly the state eviction. */
-  def clickToPurchaseLeftOuter(clicks: DataFrame, purchases: DataFrame): DataFrame = {
-    val c = clicks
-      .select(col("event_id").as("click_id"), col("user_id").as("c_uid"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "2 hours")
-    val p = purchases
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_uid"),
-        col("ts").as("purchase_ts"), col("value"))
-      .withWatermark("purchase_ts", "2 hours")
-    c.join(p,
-      col("c_uid") === col("p_uid") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("interval 1 hour"),
-      "leftOuter")
-      .select(col("click_id"), col("purchase_id"), col("c_uid").as("user_id"),
-        col("click_ts"), col("purchase_ts"), col("value"))
+  /** The click→purchase stream-stream interval join of st04, st07 and
+    * st15 (`joinType` "inner" or "left_outer"): each click pairs with its
+    * user's purchases in the 10 minutes after it; output `(user_id, c_ts,
+    * p_ts)`, with a null `p_ts` for a click left-outer found no match.
+    * Both sides are watermarked 1 h behind, which dominates the replay's
+    * 30-minute reordering horizon, so no row is late-dropped; a side's
+    * state is evicted once the other side's watermark proves no future
+    * match can exist, and for the left-outer join that eviction is what
+    * emits an unmatched click's null row. State is O(events in the
+    * horizon), so append output equals the batch join over finite input
+    * whatever the micro-batch boundaries. */
+  def clickToPurchase(events: DataFrame, joinType: String): DataFrame = {
+    val clicks = events.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts").as("c_ts"))
+      .withWatermark("c_ts", "1 hour")
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
+      .withWatermark("p_ts", "1 hour")
+    clicks.join(purchases,
+      col("user_id") === col("p_user") &&
+        col("p_ts") >= col("c_ts") &&
+        col("p_ts") <= col("c_ts") + expr("INTERVAL 10 MINUTES"),
+      joinType)
+      .select(col("user_id"), col("c_ts"), col("p_ts"))
   }
 
   /** Per-user running totals via transformWithState (Spark 4 state v2;
@@ -218,29 +247,62 @@ object EventsStream {
         .parquet(s"$path/batch_id=$batchId")
     }
 
-  /** Custom-state sessionization via flatMapGroupsWithState: same gap
-    * semantics but with arbitrary per-session state (here: value sums),
-    * emitting a summary when the gap closes a session. This is the
+  /** The one reorder-buffer finality rule of the event-time state
+    * machines ([[sessionizeStateful]], [[thresholdCrossings]]). An event
+    * is FINAL, so no future arrival can precede it, once
+    *  - the watermark has passed it, or
+    *  - the group has seen an event more than [[DisorderHorizonSec]]
+    *    past it, since no arrival is more than the horizon out of order.
+    *    This signal works within a batch: a historical micro-batch spans
+    *    days of event time while the watermark moves only between batches
+    *    (watermark-only buffering held ~25 K rows per batch, ~2.5 s per
+    *    batch of state encode/decode).
+    * The extra 1 s absorbs ms flooring of the stored epoch and keeps the
+    * cut clear of the (sec, nanos) order key's second granularity, so no
+    * second is split across folds. Proof of the horizon rule for the
+    * replay: a future event f obeys jord(f) > B (its chunk starts after
+    * this one ends) ≥ jord(m) ≥ ts(m) for every already-seen m, so
+    * ts(f) = jord(f) − jit(f) > ts(m) − horizon.
+    * Returns the group's max seen event time, the final events in
+    * event-time order and the events still held. */
+  private def reorder(state: GroupState[_], maxSeenMs: Long,
+      held: List[BufEvent], batch: Iterator[Event])
+      : (Long, List[BufEvent], List[BufEvent]) = {
+    val incoming = batch.map(e =>
+      BufEvent(e.ts.getTime, e.ts.getNanos, e.event_id, e.value)).toList
+    // an empty buffer with no max seen partitions nothing, so the
+    // wrapped cut of Long.MinValue is never read
+    val maxSeen = (maxSeenMs :: incoming.map(_.tsMs)).max
+    val cut = math.max(state.getCurrentWatermarkMs(),
+      maxSeen - DisorderHorizonSec * 1000 - 1000)
+    val (ready, hold) = (held ++ incoming).partition(_.tsMs <= cut)
+    (maxSeen, ready.sortBy(e => (e.tsMs / 1000, e.tsNs, e.eventId)), hold)
+  }
+
+  /** Re-invokes the group through its EventTimeTimeout once the watermark
+    * passes the earliest of `at` (held events are above the watermark by
+    * the cut; a session deadline may not be). */
+  private def wakeAt(state: GroupState[_], at: List[Long]): Unit =
+    if (at.nonEmpty)
+      state.setTimeoutTimestamp(
+        math.max(at.min, state.getCurrentWatermarkMs() + 1))
+
+  /** First epoch ms that opens a new session after an event at `lastMs`:
+    * the floor-second difference then exceeds [[SessionGapSec]]. */
+  private def gapEnd(lastMs: Long): Long =
+    (Math.floorDiv(lastMs, 1000L) + SessionGapSec + 1) * 1000
+
+  /** Custom-state sessionization via flatMapGroupsWithState (st08): the
+    * gap semantics of q31 with arbitrary per-session state (here: value
+    * sums), emitting a summary when the gap closes a session. This is the
     * extension point session_window can't express (e.g. model-state per
-    * user, conditional emission).
-    *
-    * Round-6: REORDER-BUFFERED (the st12 pattern) — session boundaries
-    * are an event-time-ORDER property (an out-of-order arrival can both
-    * belong to an already-extended session and rewind its `last`, which
-    * the pre-round-6 fold silently corrupted), so events fold into the
-    * open session only once FINAL: at/below the watermark, or — when the
-    * caller passes the source's documented reordering horizon
-    * (`disorderBoundMs`) — once the group has seen any event a full
-    * horizon past them (the within-batch finality signal a days-long
-    * historical micro-batch needs; proof in StreamQueries
-    * .thresholdCrossings). The rest wait in state; an EventTimeTimeout
-    * re-invokes the group when the watermark reaches the oldest held
-    * event or the open session's gap deadline, whichever is sooner. The
-    * idle-close rule is watermark-sound: once wm ≥ last+gap, every
-    * future arrival AND every held event has ts > wm ≥ last+gap — a gap
-    * break either way, so the close can never be premature. */
-  def sessionizeStateful(events: Dataset[Event],
-      disorderBoundMs: Long = Long.MaxValue): Dataset[SessionSummary] = {
+    * user, conditional emission). Session boundaries are an event-time
+    * order property, so events fold into the open session only once
+    * [[reorder]] calls them final. A session closes when a final event
+    * opens the next one, or when the watermark reaches its [[gapEnd]]:
+    * every later arrival and every held event is then past the gap.
+    * History: SURVEY.md §8e, task 1+5. */
+  def sessionizeStateful(events: Dataset[Event]): Dataset[SessionSummary] = {
     import events.sparkSession.implicits._
     events
       .withWatermark("ts", "2 hours")
@@ -249,56 +311,71 @@ object EventsStream {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (userId: Long, batch: Iterator[Event], state: GroupState[SessBufState]) =>
           val st0 = state.getOption.getOrElse(
-            SessBufState(false, 0L, 0L, 0L, 0.0, Long.MinValue, Nil))
-          val incoming = batch.map(e => SessEv(e.ts.getTime, e.value)).toList
-          val wm = state.getCurrentWatermarkMs()
-          val maxSeen = incoming.foldLeft(st0.maxSeenMs)((m, e) =>
-            math.max(m, e.tsMs))
-          // 1 s slack for ms flooring, as in thresholdCrossings
-          val horizonCut =
-            if (disorderBoundMs == Long.MaxValue || maxSeen == Long.MinValue)
-              Long.MinValue
-            else maxSeen - disorderBoundMs - 1000
-          val cut = math.max(wm, horizonCut)
-          val (ready, hold) = (st0.buf ++ incoming).partition(_.tsMs <= cut)
+            SessBufState(None, Long.MinValue, Nil))
+          val (maxSeen, ready, hold) =
+            reorder(state, st0.maxSeenMs, st0.buf, batch)
+          def summary(s: SessionState) = SessionSummary(userId,
+            new Timestamp(s.start), new Timestamp(s.last), s.n, s.acc)
           var closed = List.empty[SessionSummary]
-          var cur: Option[SessionState] =
-            if (st0.hasOpen)
-              Some(SessionState(st0.start, st0.last, st0.n, st0.acc))
-            else None
-          ready.sortBy(_.tsMs).foreach { e =>
-            cur match {
-              // fold is in event-time order over final events, so
-              // e.tsMs >= s.last always — `last` is monotone
-              case Some(s) if e.tsMs - s.last <= SessionGapMs =>
-                cur = Some(s.copy(last = e.tsMs, n = s.n + 1,
-                  acc = s.acc + e.value))
-              case Some(s) =>
-                closed ::= SessionSummary(userId,
-                  new Timestamp(s.start), new Timestamp(s.last), s.n, s.acc)
-                cur = Some(SessionState(e.tsMs, e.tsMs, 1, e.value))
-              case None =>
-                cur = Some(SessionState(e.tsMs, e.tsMs, 1, e.value))
+          var cur = st0.open
+          ready.foreach { e =>
+            cur = cur match {
+              case Some(s) if e.tsMs < gapEnd(s.last) =>
+                Some(s.copy(last = e.tsMs, n = s.n + 1, acc = s.acc + e.value))
+              case prev =>
+                prev.foreach(closed ::= summary(_))
+                Some(SessionState(e.tsMs, e.tsMs, 1, e.value))
             }
           }
-          cur match {
-            case Some(s) if wm >= s.last + SessionGapMs =>
-              closed ::= SessionSummary(userId,
-                new Timestamp(s.start), new Timestamp(s.last), s.n, s.acc)
-              cur = None
-            case _ => ()
-          }
+          cur.filter(s => state.getCurrentWatermarkMs() >= gapEnd(s.last))
+            .foreach { s => closed ::= summary(s); cur = None }
           if (cur.isEmpty && hold.isEmpty) state.remove()
           else {
-            state.update(SessBufState(cur.isDefined,
-              cur.map(_.start).getOrElse(0L), cur.map(_.last).getOrElse(0L),
-              cur.map(_.n).getOrElse(0L), cur.map(_.acc).getOrElse(0.0),
-              maxSeen, hold))
-            val wake = (hold.map(_.tsMs) ++
-              cur.map(_.last + SessionGapMs).toList).min
-            state.setTimeoutTimestamp(math.max(wake, wm + 1))
+            state.update(SessBufState(cur, maxSeen, hold))
+            wakeAt(state, hold.map(_.tsMs) ++ cur.map(s => gapEnd(s.last)))
           }
           closed.reverseIterator
+      }
+  }
+
+  /** Stateful threshold alerting (st12): ONE row per user at the first
+    * event, in event-time order, at which their running spend in exact
+    * cents reaches `threshold`; it never re-fires. Values can be
+    * negative, so the running sum is not monotone and "first crossing" is
+    * an event-time order property: events fold only once [[reorder]]
+    * calls them final, in full-precision (ts, event_id) order. Cents
+    * round via BigDecimal HALF_UP on the double, bit-identical to SQL
+    * `round(value * 100)` on both engines. History: SURVEY.md §8e,
+    * task 1+5. */
+  def thresholdCrossings(events: Dataset[Event], threshold: Long)
+      : Dataset[Crossing] = {
+    import events.sparkSession.implicits._
+    events
+      .withWatermark("ts", "1 hour")
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[AlertState, Crossing](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (userId: Long, batch: Iterator[Event], state: GroupState[AlertState]) =>
+          val st0 = state.getOption
+            .getOrElse(AlertState(0L, 0L, false, Long.MinValue, Nil))
+          val (maxSeen, ready, hold) =
+            reorder(state, st0.maxSeenMs, st0.buf, batch)
+          var cum = st0.cum
+          var n = st0.n
+          var fired = st0.crossed
+          var out: Option[Crossing] = None
+          ready.foreach { e =>
+            cum += java.math.BigDecimal.valueOf(e.value * 100)
+              .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+            n += 1
+            if (!fired && cum >= threshold) {
+              fired = true
+              out = Some(Crossing(userId, n, cum))
+            }
+          }
+          state.update(AlertState(cum, n, fired, maxSeen, hold))
+          wakeAt(state, hold.map(_.tsMs))
+          out.iterator
       }
   }
 }

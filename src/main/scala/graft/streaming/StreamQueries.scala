@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
@@ -228,8 +228,8 @@ object StreamQueries {
     *  - The events table is re-materialized as [[ReplayFiles]] parquet
     *    chunk files split by JITTERED event time: each event's position
     *    is its true ts plus a deterministic md5(event_id)-derived offset
-    *    in [0, [[ReplayJitterSec]]), so consecutive chunks overlap by up
-    *    to 30 minutes of true event time — late data genuinely crosses
+    *    in [0, EventsStream.DisorderHorizonSec), so consecutive chunks
+    *    overlap by up to 30 minutes of true event time — late data crosses
     *    micro-batch boundaries, bounded by a known reordering horizon
     *    (exactly how a production replay of a partially-ordered log
     *    behaves: disorder is real but bounded, and the consumer sizes
@@ -254,7 +254,6 @@ object StreamQueries {
     * The replay dir is built once per (session, dir, table fingerprint,
     * sentinel set) and cached — bench reruns re-stream the same files. */
   private val ReplayFiles = 4
-  private val ReplayJitterSec = 1800L
   private val replayCache = new graft.SnapshotCache[String]
 
   private def replayDir(spark: SparkSession, dir: String,
@@ -273,7 +272,8 @@ object StreamQueries {
         case _ => (unix_micros(col("ts").cast("timestamp")), 1000000L)
       }
       val jit = (expr("cast(conv(substring(md5(cast(event_id as string))," +
-        " 1, 8), 16, 10) as bigint)") % ReplayJitterSec) * unitPerSec
+        " 1, 8), 16, 10) as bigint)") % EventsStream.DisorderHorizonSec) *
+        unitPerSec
       val jordered = raw.withColumn("_jord", ordCol + jit)
       val mm = jordered.agg(min(col("_jord")).as("lo"),
         max(col("_jord")).as("hi")).head()
@@ -353,37 +353,16 @@ object StreamQueries {
       .orderBy("hour_ts", "event_type")
 
   /** st02 — native session_window sessionization through the streaming
-    * engine, rolled up to q31's per-user summary. session_end = last event
-    * + gap, so dur_sec = end − start − gap reproduces the batch
-    * max(ts) − min(ts); the average uses q31's exact fixed-point
-    * arithmetic (see Relational.q31 — float rounding diverges across
-    * engines on decimal ties). Round-6: graded under the forced
-    * multi-batch OUT-OF-ORDER replay — the ENGINE's own session-state
-    * merging (session_window coalesces overlapping windows in the state
-    * store) now handles cross-batch disorder, the built-in counterpart
-    * of st08's hand-rolled reorder buffer; the 2 h watermark dominates
-    * the 30 min jitter so no row is late-dropped, and complete mode
-    * emits the fully-merged session set at end-of-stream. Oracle: q31's
-    * SQL verbatim, batch-boundary-independent. */
-  def st02(spark: SparkSession, dir: String): DataFrame = {
-    val sessions = runCompleteDistributed(spark,
+    * engine (EventsStream.sessionWindows), rolled up to q31's per-user
+    * summary (EventsStream.sessionRollup), graded under the multi-batch
+    * out-of-order replay: the engine's own session-state merging handles
+    * cross-batch disorder, and complete mode emits the fully merged
+    * session set at end-of-stream. Oracle: q31's SQL verbatim. History:
+    * SURVEY.md §8e, task 1+5. */
+  def st02(spark: SparkSession, dir: String): DataFrame =
+    EventsStream.sessionRollup(runCompleteDistributed(spark,
       EventsStream.sessionWindows(replayedEventsStream(spark, dir, Nil)),
-      "st02_sessions", stateWidth(spark, dir, "events"))
-    sessions
-      .select(col("user_id"), col("n_events"),
-        (unix_timestamp(col("session_end")) -
-          unix_timestamp(col("session_start")) -
-          lit(EventsStream.SessionGapSec)).as("dur_sec"))
-      .groupBy(col("user_id"))
-      .agg(
-        count(lit(1)).as("n_sessions"),
-        sum(col("n_events")).as("n_events"),
-        sum(col("dur_sec")).as("sum_sec"))
-      .select(col("user_id"), col("n_sessions"), col("n_events"),
-        (expr("(10 * sum_sec + 3 * n_sessions) div (6 * n_sessions)") / 100.0)
-          .as("avg_session_min"))
-      .orderBy("user_id")
-  }
+      "st02_sessions", stateWidth(spark, dir, "events")))
 
   /** st03 — streaming exact deduplication through the dedup state store:
     * `dropDuplicates(user_id, event_type)` keeps first-arrival rows
@@ -408,49 +387,23 @@ object StreamQueries {
       .orderBy("event_type")
   }
 
-  /** st04 — stream-stream interval join through the join state store:
-    * click events joined to purchase events of the same user within 10
-    * minutes, both sides watermarked (the condition Spark needs to ever
-    * evict join state). INNER join matches emit eagerly on arrival —
-    * no buffering on the final watermark — so over this finite input
-    * the append-mode result equals the plain batch self-join (see the
-    * in-body caveat on multi-batch late arrivals). The per-user rollup
-    * runs as a batch aggregation over the sink (chaining a streaming agg
-    * after a stream-stream join is legal but the join is what this
-    * query gates). Scale: join state is partitioned by user_id and
-    * bounded by the watermark horizon; the batch twin is q49's
-    * hour-bucket expansion — at 100 TB/day the streaming spelling is
-    * strictly cheaper because state holds only the 10-minute horizon. */
-  def st04(spark: SparkSession, dir: String): DataFrame = {
-    val ev = replayedEventsStream(spark, dir, Nil)
-    val clicks = ev
-      .filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = ev
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = clicks.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("p_ts") >= col("c_ts") &&
-        col("p_ts") <= col("c_ts") + expr("INTERVAL 10 MINUTES"))
-    // MULTI-BATCH EXACTNESS (the round-5 caveat, now closed): the
-    // shuffled replay delivers ≥4 out-of-order micro-batches, so a
-    // click and its purchase routinely land in DIFFERENT batches and
-    // the match is made against buffered join STATE, not within one
-    // batch. Exactness holds because the 1 h watermark dominates the
-    // 30 min reordering horizon: no row is late-dropped, and a side's
-    // state is evicted only once the watermark proves no future match
-    // can exist (wm − 1 h exceeds every future row's ts by more than
-    // the 10 min join window) — so append-mode output must equal the
-    // batch self-join whatever the batch boundaries.
-    runMemory(spark, joined, "st04_join", stateWidth(spark, dir, "events"),
-        mode = "append")
+  /** st04 — stream-stream interval join through the join state store
+    * (EventsStream.clickToPurchase, inner) over the multi-batch
+    * out-of-order replay, so a click and its purchase routinely meet in
+    * join STATE across batches. Inner matches emit eagerly, so the
+    * append-mode result equals the batch self-join. The per-user rollup
+    * runs as a batch aggregation over the sink. Scale: join state is
+    * partitioned by user_id and holds only the 10-minute horizon; the
+    * batch twin is q49's hour-bucket expansion. History: SURVEY.md
+    * §8e, task 1+5. */
+  def st04(spark: SparkSession, dir: String): DataFrame =
+    runMemory(spark,
+        EventsStream.clickToPurchase(replayedEventsStream(spark, dir, Nil),
+          "inner"),
+        "st04_join", stateWidth(spark, dir, "events"), mode = "append")
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy("user_id")
-  }
 
   /** st05 — stream-static enrichment: the unbounded stream joins a
     * static dimension (nation, re-read per micro-batch, broadcast by
@@ -519,98 +472,55 @@ object StreamQueries {
       .orderBy("user_id")
   }
 
-  /** st07 — LEFT-OUTER stream-stream interval join, driver-graded: clicks
-    * with no purchase inside the 10-minute horizon still emit (null
-    * purchase side) — the funnel-abandonment query, st04's other half.
-    * Null-side emission IS join-state eviction, which only happens when
-    * the watermark passes a click's horizon — so over a finite corpus
-    * the trailing clicks would never flush. The replay therefore embeds
-    * a sentinel click+purchase pair 30 days past max(ts) (users −1/−2,
-    * filtered from the result) in its FINAL chunk: after that batch the
-    * watermark jumps past every real click's horizon, and the trailing
-    * no-data micro-batch (the state-cleanup batch AvailableNow exists
-    * to run, unlike the retired Trigger.Once) evicts and emits every
-    * unmatched click. This is the standard end-of-stream flush marker a
-    * bounded replay of unbounded history uses. Since round 6 the source
-    * is the SHUFFLED MULTI-BATCH replay (verdict task 1): null-side
-    * rows now flush from state built across ≥4 out-of-order batches —
-    * a click may sit in state for several batches before either its
-    * cross-batch match arrives or eviction proves none will — and the
-    * batch LEFT JOIN oracle still must hold exactly (watermark ≥ 2× the
-    * jitter horizon, so nothing is late-dropped and eviction is never
-    * premature). Sink: distributed append parquet — the join output is
-    * O(clicks), it grows with the corpus and must not funnel through
-    * the driver. Oracle: the batch LEFT JOIN with identical
-    * predicates. */
-  def st07(spark: SparkSession, dir: String): DataFrame = {
-    // multi-batch shuffled replay with the flush marker INSIDE the last
-    // chunk (see replayDir: a separate sentinel source would be drained
-    // in batch 1 and late-drop the whole corpus)
-    val ev = replayedEventsStream(spark, dir, Seq("click", "purchase"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = clicks.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("p_ts") >= col("c_ts") &&
-        col("p_ts") <= col("c_ts") + expr("INTERVAL 10 MINUTES"),
-      "left_outer")
-    runAppendDistributed(spark, joined, "st07_rows",
-        stateWidth(spark, dir, "events"))
+  /** st07 — LEFT-OUTER stream-stream interval join
+    * (EventsStream.clickToPurchase, left_outer): clicks with no purchase
+    * inside the 10-minute horizon still emit with a null purchase side,
+    * the funnel-abandonment query and st04's other half. Null-side
+    * emission IS join-state eviction, which happens only when the
+    * watermark passes a click's horizon, so the replay embeds a sentinel
+    * click+purchase pair 30 days past max(ts) (users −1/−2, filtered) in
+    * its FINAL chunk, and the trailing no-data micro-batch evicts and
+    * emits every unmatched click. Sink: distributed append parquet (the
+    * output is O(clicks)). Oracle: the batch LEFT JOIN with identical
+    * predicates. History: SURVEY.md §8e, task 1+5. */
+  def st07(spark: SparkSession, dir: String): DataFrame =
+    runAppendDistributed(spark,
+        EventsStream.clickToPurchase(
+          replayedEventsStream(spark, dir, Seq("click", "purchase")),
+          "left_outer"),
+        "st07_rows", stateWidth(spark, dir, "events"))
       .filter(col("user_id") >= 0) // drop the sentinel pair
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_rows"), count(col("p_ts")).as("n_matched"))
       .orderBy("user_id")
-  }
 
-  /** st08 — flatMapGroupsWithState sessionization, driver-graded: the
-    * hand-rolled state-machine spelling of q31/st02 (EventsStream
-    * .sessionizeStateful — per-user open-session state, EventTimeTimeout
-    * closing sessions when the watermark passes last + gap), run through
-    * the full engine and rolled up to q31's per-user summary. With st02
-    * (native session_window) and st06 (transformWithState) this covers
-    * all three custom-state streaming APIs against the SAME batch
-    * semantics. Trailing open sessions only close via timeout, which
-    * only fires when the watermark advances — so the finite replay
-    * carries the end-of-stream sentinel (user −1, filtered) in its
-    * final chunk and the cleanup micro-batch flushes every open
-    * session. Sink: distributed append parquet (sessions are
-    * O(users×sessions) — never through the driver). Round-6 exactness:
-    * the source is the forced multi-batch OUT-OF-ORDER replay and the
-    * sessionizer is REORDER-BUFFERED (EventsStream.sessionizeStateful's
-    * round-6 contract — session boundaries are an event-time-order
-    * property the pre-round-6 per-batch fold silently corrupted under
-    * disorder), with the replay's 30 min horizon as the within-batch
-    * finality signal under the 2 h watermark. Oracle: q31's SQL
-    * verbatim, now proven batch-boundary-independent. */
-  def st08(spark: SparkSession, dir: String): DataFrame = {
+  /** The replayed events as typed rows, with the end-of-stream flush
+    * click (user −1) in the final chunk: the input of st08's and st12's
+    * reorder buffers, whose last held events and open state flush only
+    * once the watermark passes them. */
+  private def flushedEvents(spark: SparkSession,
+      dir: String): Dataset[EventsStream.Event] = {
     import spark.implicits._
-    // round-6: the forced multi-batch out-of-order replay (sentinel in
-    // the final chunk), folded through the REORDER-BUFFERED stateful
-    // sessionizer with the replay's documented disorder horizon
-    val ev = replayedEventsStream(spark, dir, Seq("click"))
+    replayedEventsStream(spark, dir, Seq("click"))
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .as[EventsStream.Event]
-    runAppendDistributed(spark,
-        EventsStream.sessionizeStateful(ev, ReplayJitterSec * 1000).toDF(),
-        "st08_sessions", stateWidth(spark, dir, "events"))
-      .filter(col("user_id") >= 0) // drop the sentinel's own session
-      .select(col("user_id"), col("n_events"),
-        (unix_timestamp(col("session_end")) -
-          unix_timestamp(col("session_start"))).as("dur_sec"))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_sessions"),
-        sum(col("n_events")).as("n_events"),
-        sum(col("dur_sec")).as("sum_sec"))
-      .select(col("user_id"), col("n_sessions"), col("n_events"),
-        (expr("(10 * sum_sec + 3 * n_sessions) div (6 * n_sessions)") / 100.0)
-          .as("avg_session_min"))
-      .orderBy("user_id")
   }
+
+  /** st08 — flatMapGroupsWithState sessionization
+    * (EventsStream.sessionizeStateful), the hand-rolled state-machine
+    * spelling of q31/st02, over the multi-batch out-of-order replay and
+    * rolled up to q31's per-user summary (EventsStream.sessionRollup).
+    * With st02 (native session_window) and st06 (transformWithState) this
+    * covers all three custom-state streaming APIs against the same batch
+    * semantics. Sink: distributed append parquet (sessions are
+    * O(users×sessions)). Oracle: q31's SQL verbatim. History: SURVEY.md
+    * §8e, task 1+5. */
+  def st08(spark: SparkSession, dir: String): DataFrame =
+    EventsStream.sessionRollup(runAppendDistributed(spark,
+        EventsStream.sessionizeStateful(flushedEvents(spark, dir)).toDF(),
+        "st08_sessions", stateWidth(spark, dir, "events"))
+      .filter(col("user_id") >= 0)) // drop the sentinel's own session
 
   /** st09 — streaming data-quality counters: `observe` on the event
     * stream itself, the streaming twin of p02 and of the reference's
@@ -795,58 +705,34 @@ object StreamQueries {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** st15 — driver-graded CHECKPOINT RECOVERY: the exactly-once property
-    * a production pipeline actually banks on, promoted from a unit spec
-    * (StreamingSpec's restart test) to the driver's oracle gate (the
-    * round-6 verdict's item 2). The st04 stream-stream interval join
-    * runs over the SAME forced multi-batch out-of-order replay, with a
-    * durable checkpoint and an idempotent per-batch-id parquet sink —
-    * and the first run is KILLED deliberately: after micro-batch 1's
-    * output is written but BEFORE the engine commits the batch (a crash
-    * in the most adversarial window — output visible, offset/commit log
-    * not yet advanced, join state deltas already persisted for the
-    * uncommitted version). The query is then restarted from the same
-    * checkpoint; Structured Streaming must re-execute the uncommitted
-    * batch against the batch-0 state version, land byte-identically in
-    * the idempotent sink (overwrite by batch id — the standard
-    * exactly-once foreachBatch contract), rebuild its join state, and
-    * drain the remaining chunks.
-    *
-    * The gate is exacting on both failure modes: LOSS (recovery skipping
-    * the uncommitted batch, or join state resuming from the wrong
-    * version) and DUPLICATION (the replayed batch's pairs ALSO emitted
-    * in a later batch) each break equality with the batch self-join
-    * oracle — st04's SQL verbatim. A run where the injected crash did
-    * not actually kill the first query throws rather than grading a
-    * crash-free pass. Scale: recovery cost is O(one micro-batch +
-    * state-store load), independent of history length — exactly why
-    * checkpointed streaming restarts beat batch backfills at 100 TB. */
   /** Phase split ((pre-crash sec, recovery sec)) of the most recent
-    * [[st15]] run in this JVM — surfaced so Bench can carry the split in
-    * the durable dump + summary tail (round-13 verdict task 3): an st15
-    * spike is then attributable to orchestration vs state-replay in one
-    * read of the bench artifact, without scraping stderr. */
+    * [[st15]] run in this JVM, carried by Bench in its durable dump and
+    * summary tail, so an st15 spike is attributable to orchestration vs
+    * state replay without scraping stderr. */
   @volatile private[graft] var lastSt15Phases: Option[(Double, Double)] = None
 
+  /** st15 — oracle-graded CHECKPOINT RECOVERY, the exactly-once property
+    * a production pipeline banks on. st04's interval join
+    * (EventsStream.clickToPurchase, inner) runs over the same multi-batch
+    * out-of-order replay with a durable checkpoint and an idempotent
+    * per-batch-id parquet sink, and the first run is KILLED after
+    * micro-batch 1's output is written but BEFORE the engine commits the
+    * batch (output visible, offset/commit log not yet advanced, join
+    * state deltas persisted for the uncommitted version). The restart
+    * from the same checkpoint must re-execute that batch against the
+    * batch-0 state version, land byte-identically in the sink, and drain
+    * the remaining chunks. LOSS and DUPLICATION each break equality with
+    * the batch self-join oracle (st04's SQL verbatim); a run whose
+    * injected crash did not kill the first query throws rather than
+    * grading a crash-free pass. Recovery cost is O(one micro-batch +
+    * state-store load), independent of history length. History:
+    * SURVEY.md §8f, st15_checkpoint_recovery. */
   def st15(spark: SparkSession, dir: String): DataFrame = {
     val ckpt = graft.TempDirs.create("graft_st15_ckpt")
     val outDir = graft.TempDirs.create("graft_st15_out")
     val marker = new java.io.File(outDir, "crash_injected.marker")
-    def joined = {
-      val ev = replayedEventsStream(spark, dir, Nil)
-      val clicks = ev
-        .filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = ev
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      clicks.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 10 MINUTES"))
-    }
+    def joined = EventsStream.clickToPurchase(
+      replayedEventsStream(spark, dir, Nil), "inner")
     // idempotent by construction: a re-executed batch OVERWRITES its own
     // directory with the deterministically-recomputed rows
     def run(what: String): Unit =
@@ -855,12 +741,9 @@ object StreamQueries {
         (batch, batchId) =>
           batch.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
       }
-    // phase-resolved timing (round-8 verdict item 5): the single st15
-    // number hid which leg costs what — the pre-crash run scales with
-    // history (it processes batches 0..crash), the recovery leg must
-    // NOT (one re-executed micro-batch + state-store load + the
-    // remaining chunks). Printing both makes history-independence a
-    // measurement instead of an inference.
+    // the pre-crash run scales with history (batches 0..crash); the
+    // recovery leg must not (one re-executed batch + state-store load +
+    // the remaining chunks), so both are timed
     val t0 = System.nanoTime()
     val run1Died =
       try { run("crash run"); false }
@@ -1188,137 +1071,24 @@ object StreamQueries {
       .orderBy("source")
   }
 
-  /** One buffered event awaiting finality: epoch millis + sub-second
-    * nanos reconstruct the full-precision event-time order key
-    * ((sec, nanos-in-sec, id) — micros on disk, so lossless). */
-  case class BufEvent(tsMs: Long, tsNs: Int, eventId: Long, cents: Long)
-  case class AlertState(cum: Long, n: Long, crossed: Boolean,
-      maxSeenMs: Long, buf: List[BufEvent])
-  case class Crossing(user_id: Long, n_events_at_cross: Long,
-      cents_at_cross: Long)
-
-  /** st12 — stateful threshold alerting: emit EXACTLY ONE row per user
-    * at the first moment their running spend crosses the threshold —
-    * the fraud/budget-alert state machine (fire once, never re-fire,
-    * however long the stream runs).
-    *
-    * "First crossing" is an EVENT-TIME-order property and values can
-    * be negative (the running sum is not monotone), so out-of-order
-    * arrival across micro-batches — which the round-6 shuffled replay
-    * (verdict task 1) forces for real — would corrupt a naive
-    * arrival-order fold. The state function therefore carries the
-    * WATERMARK-BOUNDED REORDER BUFFER the round-5 doc promised: per
-    * user, events above the current watermark wait in state; events at
-    * or below it are FINAL (the 1 h watermark delay dominates the
-    * replay's 30 min disorder bound, so nothing older can still
-    * arrive) and fold in full-precision (ts, event_id) order into the
-    * running cents. An EventTimeTimeout re-invokes the group once the
-    * watermark passes its oldest buffered event, and the end-of-stream
-    * sentinel (final replay chunk, user −1, filtered) pushes the
-    * watermark past every real event so the last buffers flush in the
-    * cleanup batch. Buffer size is bounded by per-user arrivals inside
-    * one watermark horizon — O(rate × horizon), the standard bound any
-    * production reorder buffer carries. Cents fold via BigDecimal
-    * HALF_UP on the double — bit-identical to SQL `round(value * 100)`
-    * on BOTH engines (the q81/st06 integer-cents discipline), so the
-    * crossing index cannot drift on float representation. Oracle: the
-    * batch running-sum first crossing (min rn with cum ≥ T, cum joined
-    * back at that rn) — now proven independent of batch boundaries. */
-  /** The st12 state machine over an already-watermarked event stream —
-    * exposed so the spec can drive crafted out-of-order micro-batches
-    * through it (a MemoryStream delivers a later-ts event FIRST and the
-    * reorder buffer must still fold in event-time order).
-    *
-    * TWO finality signals bound the buffer, and both are needed:
-    *  - `disorderBoundMs` — the source's documented reordering horizon
-    *    (the replay's jitter bound): an event is final once the group
-    *    has seen any event more than the horizon PAST it, because no
-    *    future arrival can be more than the horizon out of order. This
-    *    signal works WITHIN a batch, which matters enormously for
-    *    historical replay: a micro-batch spans days of event time while
-    *    the watermark only advances BETWEEN batches, so watermark-only
-    *    buffering would hold every batch's full input in state once
-    *    (measured: ~25 K buffered rows/batch → ~2.5 s/batch of state
-    *    encode/decode; with the horizon fold the buffer holds only each
-    *    group's trailing horizon — a handful of rows).
-    *  - the watermark — the engine's cross-group guarantee, which
-    *    flushes the trailing holds when the end-of-stream sentinel
-    *    pushes it past max(ts) (EventTimeTimeout re-invokes groups the
-    *    sentinel batch didn't touch).
-    * Proof of the horizon rule for the replay: a future event f obeys
-    * jord(f) > B (its chunk starts after this one ends) ≥ jord(m) ≥
-    * ts(m) for every already-seen m, so ts(f) = jord(f) − jit(f) >
-    * ts(m) − horizon — an event e with ts(e) ≤ maxSeen − horizon can
-    * never be preceded by a future arrival. */
-  private[graft] def thresholdCrossings(
-      ev: org.apache.spark.sql.Dataset[EventsStream.Event],
-      threshold: Long,
-      disorderBoundMs: Long = ReplayJitterSec * 1000)
-      : org.apache.spark.sql.Dataset[Crossing] = {
-    import ev.sparkSession.implicits._
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[AlertState, Crossing](
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[EventsStream.Event],
-         state: org.apache.spark.sql.streaming.GroupState[AlertState]) =>
-          val st0 = state.getOption
-            .getOrElse(AlertState(0L, 0L, false, Long.MinValue, Nil))
-          val incoming = it.map { e =>
-            BufEvent(e.ts.getTime, e.ts.getNanos, e.event_id,
-              java.math.BigDecimal.valueOf(e.value * 100)
-                .setScale(0, java.math.RoundingMode.HALF_UP).longValue())
-          }.toList
-          // an event is final once (a) the watermark passed it, or (b)
-          // the group has seen an event a full disorder horizon past it
-          val wm = state.getCurrentWatermarkMs()
-          val maxSeen = (st0.maxSeenMs :: incoming.map(_.tsMs)).max
-          // the extra 1 s absorbs ms-flooring of the stored epoch and
-          // keeps the fold boundary clear of the (sec, nanos) order
-          // key's second granularity — no second is ever split across
-          // a fold
-          val cut = math.max(wm,
-            if (maxSeen == Long.MinValue) Long.MinValue
-            else maxSeen - disorderBoundMs - 1000)
-          val (ready, hold) = (st0.buf ++ incoming).partition(_.tsMs <= cut)
-          val ordered = ready.sortBy(e =>
-            (e.tsMs / 1000, e.tsNs, e.eventId))
-          var cum = st0.cum
-          var n = st0.n
-          var fired = st0.crossed
-          var out: Option[Crossing] = None
-          ordered.foreach { e =>
-            cum += e.cents
-            n += 1
-            if (!fired && cum >= threshold) {
-              fired = true
-              out = Some(Crossing(uid, n, cum))
-            }
-          }
-          state.update(AlertState(cum, n, fired, maxSeen, hold))
-          if (hold.nonEmpty)
-            // re-invoke once the watermark passes the oldest held event
-            // (must be > wm; holds are, by the partition above)
-            state.setTimeoutTimestamp(hold.map(_.tsMs).min)
-          out.iterator
-      }
-  }
-
-  def st12(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = replayedEventsStream(spark, dir, Seq("click"))
-      .withWatermark("ts", "1 hour")
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[EventsStream.Event]
-    val crossings = thresholdCrossings(ev, 100000L)
-    runAppendDistributed(spark, crossings.toDF(), "st12_alerts",
-        stateWidth(spark, dir, "events"))
+  /** st12 — stateful threshold alerting (EventsStream.thresholdCrossings):
+    * EXACTLY ONE row per user at the first event-time moment their
+    * running spend crosses the threshold, the fire-once fraud/budget
+    * alert, over the multi-batch out-of-order replay. The end-of-stream
+    * sentinel (user −1, filtered) pushes the watermark past every real
+    * event so the last reorder buffers flush in the cleanup batch.
+    * Oracle: the batch running-sum first crossing (min rn with cum ≥ T,
+    * cum joined back at that rn). History: SURVEY.md §8e,
+    * task 1+5. */
+  def st12(spark: SparkSession, dir: String): DataFrame =
+    runAppendDistributed(spark,
+        EventsStream.thresholdCrossings(flushedEvents(spark, dir), 100000L)
+          .toDF(),
+        "st12_alerts", stateWidth(spark, dir, "events"))
       .filter(col("user_id") >= 0) // drop the sentinel user
       .select(col("user_id"), col("n_events_at_cross"),
         col("cents_at_cross"))
       .orderBy("user_id")
-  }
 
   /** st13 — the continuously-maintained leaderboard (q88's streaming
     * twin): per-user running totals in exact integer cents with the

@@ -168,6 +168,29 @@ class HarnessSpec extends AnyFunSuite {
       s"functions returning (DataFrame, Seq[DataFrame]): $releaseLists")
   }
 
+  test("under src/main every event-time decision is spelled once, in " +
+    "EventsStream") {
+    val files = mainSources
+    def at(tok: String) = for {
+      (f, lines) <- files
+      (line, i) <- lines.zipWithIndex if line.contains(tok)
+    } yield s"$f:${i + 1}"
+    for (tok <- Seq("withWatermark(", "EventTimeTimeout"))
+      assert(at(tok).forall(_.startsWith("graft/streaming/EventsStream.scala:")),
+        s"$tok outside EventsStream: ${at(tok)}")
+    assert(at("INTERVAL 10 MINUTES").size == 1,
+      s"the click→purchase join predicate, spelled once: ${at("INTERVAL 10 MINUTES")}")
+    val gone = Seq("clickToPurchaseLeftOuter", "disorderBoundMs", "SessionGapMs")
+      .flatMap(at)
+    assert(gone.isEmpty, s"deleted event-time names still used: $gone")
+    val relational = files.collectFirst {
+      case ("graft/operators/Relational.scala", lines) => lines
+    }.get
+    assert(!relational.exists(l => l.contains("1800") ||
+      """\bval \w*Gap""".r.findFirstIn(l).nonEmpty),
+      "Relational defines a session gap of its own")
+  }
+
   test("a query-name filter with an unknown name throws") {
     assert(Harness.queryNames("SPARK_GRAFT_BENCH_ONLY", None).isEmpty)
     assert(Harness.queryNames("SPARK_GRAFT_BENCH_ONLY",
@@ -189,6 +212,7 @@ class HarnessSpec extends AnyFunSuite {
     assert(spark.conf.get(GraftSession.CkptChecksumKey) == "false")
     assert(spark.conf.get(GraftSession.CodegenCacheKey) ==
       GraftSession.CodegenCacheMaxEntries.toString)
+    assert(spark.conf.get(GraftSession.CodegenIdInClassNameKey) == "false")
     assert(spark.conf.get(GraftSession.ArtifactIsolationKey) == "false")
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode")
       .equalsIgnoreCase("dynamic"))

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import graft.streaming.EventsStream
 import graft.streaming.EventsStream.Event
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -133,9 +134,8 @@ class StreamingSpec extends AnyFunSuite {
     "core) on the same fixture") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // gaps chosen clearly off the 30-min boundary: AT exactly gap, batch
-    // (gap > 1800s starts a session) and streaming (interval overlap)
-    // legitimately differ
+    // both sides start a session when the floor-second gap is over
+    // 1800 s; the boundary itself is pinned by the whole-seconds spec below
     val fixture = Seq(
       Event(1, ts(0), 7, "click", 1.25),
       Event(2, ts(10), 7, "view", 2.0),    // same session as minute 0
@@ -154,12 +154,10 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
         r.getLong(3), r.getLong(4))).toSet
     // batch twin: the oracle-checked q31 sessionization core on the same
-    // rows; streaming session_end = session_last + gap; sums are exact
-    // integer cents on both sides
+    // rows; sums are exact integer cents on both sides
     val batch = operators.Relational.sessionized(fixture.toDF())
       .collect()
-      .map(r => (r.getLong(0), r.getTimestamp(2),
-        new Timestamp(r.getTimestamp(3).getTime + 30L * 60000),
+      .map(r => (r.getLong(0), r.getTimestamp(2), r.getTimestamp(3),
         r.getLong(4), r.getLong(5))).toSet
     assert(streamed == batch,
       s"streaming sessions $streamed != batch sessions $batch")
@@ -222,52 +220,84 @@ class StreamingSpec extends AnyFunSuite {
     assert(wins.length == 4, s"expected 4 overlapping windows, got ${wins.toSeq}")
   }
 
-  test("stream-stream join pairs clicks with purchases within the hour") {
+  /** (user, click minute, purchase minute or −1) of every row the
+    * click→purchase join emits over `batches`, fed one micro-batch each. */
+  private def joinRows(name: String, joinType: String,
+      batches: Seq[Event]*): Set[(Long, Long, Long)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[Event]
-    val purchases = MemoryStream[Event]
-    clicks.addData(
-      Event(1, ts(0), 1, "click", 0.0),
-      Event(2, ts(0), 2, "click", 0.0))
-    purchases.addData(
-      Event(100, ts(30), 1, "purchase", 9.99),   // within the hour → joins
-      Event(101, ts(90), 2, "purchase", 5.00),   // 90min later → outside
-      Event(102, ts(600), 3, "purchase", 1.00))  // watermark push
-    val q = EventsStream.clickToPurchase(clicks.toDF(), purchases.toDF())
-      .writeStream.format("memory").queryName("c2p")
+    val mem = MemoryStream[Event]
+    val q = EventsStream.clickToPurchase(mem.toDF(), joinType)
+      .writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Append).start()
+    batches.foreach { b => mem.addData(b); q.processAllAvailable() }
     runToCompletion(q)
-    val pairs = spark.table("c2p").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((1L, 100L)))
+    spark.table(name).collect().map(r => (r.getLong(0),
+      minuteOf(r.getTimestamp(1)),
+      if (r.isNullAt(2)) -1L else minuteOf(r.getTimestamp(2)))).toSet
+  }
+
+  test("stream-stream join pairs clicks with purchases within 10 minutes") {
+    val rows = joinRows("c2p", "inner", Seq(
+      Event(1, ts(0), 1, "click", 0.0),
+      Event(2, ts(0), 2, "click", 0.0),
+      Event(100, ts(5), 1, "purchase", 9.99),   // within 10 min → joins
+      Event(101, ts(15), 2, "purchase", 5.00),  // 15 min later → outside
+      Event(102, ts(600), 3, "purchase", 1.00))) // watermark push
+    assert(rows == Set((1L, 0L, 5L)))
   }
 
   test("left-outer stream-stream join emits unmatched clicks with nulls") {
+    val rows = joinRows("c2plo", "left_outer",
+      Seq(Event(1, ts(0), 1, "click", 0.0),
+        Event(2, ts(0), 2, "click", 0.0),         // user 2 never purchases
+        Event(100, ts(5), 1, "purchase", 9.99),
+        Event(102, ts(600), 3, "purchase", 1.00)), // purchase watermark push
+      // push the click watermark too, so click 2's join horizon closes
+      // and its eviction emits the null row
+      Seq(Event(3, ts(700), 9, "click", 0.0),
+        Event(103, ts(700), 9, "purchase", 1.0)))
+    assert(rows.contains((1L, 0L, 5L)), s"matched pair missing from $rows")
+    assert(rows.contains((2L, 0L, -1L)),
+      s"unmatched click must emit a null purchase side: $rows")
+  }
+
+  test("q31, st02 and st08 keep events 1800 s and 1800.42 s apart in one " +
+    "session") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[Event]
-    val purchases = MemoryStream[Event]
-    clicks.addData(
-      Event(1, ts(0), 1, "click", 0.0),
-      Event(2, ts(0), 2, "click", 0.0))   // user 2 never purchases
-    purchases.addData(
-      Event(100, ts(30), 1, "purchase", 9.99),
-      Event(102, ts(600), 3, "purchase", 1.00)) // watermark push
-    val q = EventsStream.clickToPurchaseLeftOuter(clicks.toDF(), purchases.toDF())
-      .writeStream.format("memory").queryName("c2plo")
-      .outputMode(OutputMode.Append).start()
-    q.processAllAvailable()
-    // push BOTH watermarks far enough that click 2's join horizon closes
-    clicks.addData(Event(3, ts(700), 9, "click", 0.0))
-    purchases.addData(Event(103, ts(700), 9, "purchase", 1.0))
-    runToCompletion(q)
-    val rows = spark.table("c2plo").collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-      .toSet
-    assert(rows.contains((1L, 100L)), s"matched pair missing from $rows")
-    assert(rows.contains((2L, -1L)),
-      s"unmatched click must emit a null purchase side: $rows")
+    // q31 and its oracle split a session when the floor-second gap is
+    // over 1800: users 1 (1800.42 s) and 2 (exactly 1800 s) keep one
+    // session, user 3 (1801 s) gets two
+    def at(sec: Long, ms: Int) = new Timestamp((Base * 60 + sec) * 1000 + ms)
+    val fixture = Seq(
+      Event(1, at(0, 147), 1, "click", 1.0),
+      Event(2, at(1800, 569), 1, "click", 1.0),
+      Event(3, at(0, 0), 2, "click", 1.0),
+      Event(4, at(1800, 0), 2, "click", 1.0),
+      Event(5, at(0, 500), 3, "click", 1.0),
+      Event(6, at(1801, 0), 3, "click", 1.0))
+    val want = Map(1L -> 1, 2L -> 1, 3L -> 2)
+    // sessions per user, from the user_id column of per-session rows
+    def perUser(df: DataFrame) = df.collect().map(_.getLong(0))
+      .filter(_ != 99L).groupBy(identity).map { case (u, s) => u -> s.length }
+    assert(perUser(operators.Relational.sessionized(fixture.toDF())) == want,
+      "q31's sessionization core")
+    def streamed(name: String, op: MemoryStream[Event] => DataFrame) = {
+      val mem = MemoryStream[Event]
+      val q = op(mem).writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append).start()
+      mem.addData(fixture: _*)
+      q.processAllAvailable()
+      mem.addData(Event(99, ts(1000), 99, "click", 0.0)) // watermark push
+      runToCompletion(q)
+      perUser(spark.table(name))
+    }
+    assert(streamed("gap_st02", m => EventsStream.sessionWindows(m.toDF()))
+      == want, "st02's session_window")
+    assert(streamed("gap_st08",
+      m => EventsStream.sessionizeStateful(m.toDS()).toDF()) == want,
+      "st08's reorder-buffered sessionizer")
   }
 
   test("transformWithState running totals update per micro-batch") {
@@ -328,7 +358,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect().filter(_.user_id == 9L)
     assert(out.length == 1, s"one session expected: ${out.toSeq}")
     val s = out.head
-    assert(minuteOf(s.session_start) == 0L && minuteOf(s.session_end) == 20L
+    assert(minuteOf(s.session_start) == 0L && minuteOf(s.session_last) == 20L
       && s.n_events == 2 && math.abs(s.sum_value - 4.0) < 1e-9,
       s"event-time session (0,20,n=2) expected: $s")
   }
@@ -346,8 +376,7 @@ class StreamingSpec extends AnyFunSuite {
     // pushes the watermark past everything so held events fold.
     val T = 1000L
     val mem = MemoryStream[Event]
-    val q = graft.streaming.StreamQueries
-      .thresholdCrossings(mem.toDS().withWatermark("ts", "1 hour"), T)
+    val q = EventsStream.thresholdCrossings(mem.toDS(), T)
       .writeStream.format("memory").queryName("cross_ooo")
       .outputMode(OutputMode.Append).start()
     mem.addData(Event(3, ts(20), 1, "click", 10.0))
